@@ -23,6 +23,11 @@ from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import 
     dedup,
     text as text_ops,
 )
+from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
+    sql_double,
+    sql_ident,
+    sql_in,
+)
 
 __all__ = ["curate_corpus", "curation_summary"]
 
@@ -48,17 +53,12 @@ def curate_corpus(
     Returns surviving docs with the annotation columns attached.
     """
     d = dedup.distinct_by_content(docs, text_col, doc_id_col)
-    # Annotation expressions as generated SQL-twin text, parsed by the
-    # JVM in ONE selectExpr (the q26 F.expr pattern, r12 VERDICT #1):
-    # the Column-API build issued ~300 py4j round trips per call (~0.4 s
-    # of driver time, dominated by predict_language). The twins mirror
-    # the Column builders' expression trees exactly — bit-equality is
-    # pinned by tests/test_functions.py::test_curate_corpus_sql_twin.
-    cs = text_ops._sql_ident(text_col)
-    toks = text_ops.tokens_sql(cs)
+    # Annotations from text.py's SQL-text definitions, parsed by the JVM
+    # in ONE selectExpr (a Column-API build issued ~300 py4j round trips).
+    cs = sql_ident(text_col)
     d = d.selectExpr(
         "*",
-        f"size({toks}) AS n_tokens",
+        f"{text_ops.token_count_sql(cs)} AS n_tokens",
         f"{text_ops.bpe_ish_token_count_sql(cs)} AS n_bpe_tokens",
         f"{text_ops.stopword_ratio_sql(cs)} AS stop_ratio",
         f"(length(regexp_replace({cs}, '[^A-Za-z]', '')) / length({cs}))"
@@ -68,10 +68,11 @@ def curate_corpus(
     d = d.filter(
         f"((n_tokens >= {int(min_tokens)}) AND (n_tokens <= "
         f"{int(max_tokens)})) AND (alpha_ratio >= "
-        f"{text_ops._sql_double(min_alpha_ratio)})"
+        f"{sql_double(min_alpha_ratio)})"
     )
     if langs is not None:
-        d = d.filter(f"pred_lang IN ({text_ops._sql_in(langs)})")
+        # an empty allowlist keeps nothing (`IN ()` does not parse)
+        d = d.filter(f"pred_lang IN ({sql_in(langs)})" if langs else "false")
     return d
 
 

@@ -26,6 +26,12 @@ from pyspark.sql import functions as F
 from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (
     skew,
 )
+from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals import (  # noqa: E501
+    _fresh,
+)
+from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
+    sql_ident,
+)
 
 
 # ------------------------------------------------------------------- exact
@@ -50,23 +56,18 @@ def distinct_by_content(
 ) -> DataFrame:
     """Keep the lowest-id representative of each exact-content group.
 
-    Built as one parsed window expression (q26 F.expr pattern): the
-    Column-API window spec + withColumn + drop cost 4 analysis passes
-    and ~40 py4j round trips per call; the SQL text parses JVM-side in
-    one. Identical tree — row_number over (md5(text), doc_id asc),
-    same ``_rn = 1`` keep predicate — pinned bit-equal by
-    tests/test_functions.py::test_curate_corpus_sql_twin."""
-    def q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
+    Built as one parsed window expression: row_number over (md5(text),
+    doc_id asc), kept where it is 1. The staging column gets a fresh
+    name, so a caller column of the same name passes through."""
+    (rn,) = _fresh(docs, "_rn")
     d = docs.selectExpr(
         "*",
-        f"row_number() OVER (PARTITION BY md5({q(text_col)}) "
-        f"ORDER BY {q(doc_id_col)}) AS _rn",
+        f"row_number() OVER (PARTITION BY md5({sql_ident(text_col)}) "
+        f"ORDER BY {sql_ident(doc_id_col)}) AS {sql_ident(rn)}",
     )
     # drop, not select(cols): drop matches names literally, so weird
     # (backticked) input column names survive untouched
-    return d.filter("_rn = 1").drop("_rn")
+    return d.filter(f"{sql_ident(rn)} = 1").drop(rn)
 
 
 # ------------------------------------------------------------------ shingles

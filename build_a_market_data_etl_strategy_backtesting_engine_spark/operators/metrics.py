@@ -16,25 +16,61 @@ from __future__ import annotations
 import math
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
+    sql_double,
+    sql_ident,
+)
 
 RISK_FREE_RATE = 0.02
 PERIODS_PER_YEAR = 252
 
 
-def _sharpe(r: Column, rf_per_period: float, ppy: float) -> Column:
-    ex_mean = F.avg(r - rf_per_period)
-    ex_std = F.stddev_samp(r - rf_per_period)
-    return F.when(ex_std > 0, ex_mean / ex_std * math.sqrt(ppy)).otherwise(F.lit(0.0))
+def _over(group: Sequence[str], ts_col: str, running: bool = False) -> str:
+    """``OVER (PARTITION BY group ORDER BY ts [ROWS ...])`` window text;
+    ``running`` adds the unbounded-preceding-to-current-row frame."""
+    spec = [f"PARTITION BY {', '.join(map(sql_ident, group))}"] if group else []
+    spec.append(f"ORDER BY {sql_ident(ts_col)}")
+    if running:
+        spec.append("ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
+    return f"OVER ({' '.join(spec)})"
 
 
-def _sortino(r: Column, rf_per_period: float, ppy: float) -> Column:
-    ex = r - rf_per_period
-    downside = F.stddev_samp(F.when(ex < 0, ex))
-    return F.when(downside > 0, F.avg(ex) / downside * math.sqrt(ppy)).otherwise(
-        F.lit(0.0)
-    )
+def _runmax_sql(eq: str, group: Sequence[str], ts_col: str) -> str:
+    """Running maximum of the equity curve."""
+    return f"max({eq}) {_over(group, ts_col, True)}"
+
+
+def _drawdown_sql(eq: str, runmax: str) -> str:
+    """Per-bar drawdown = (equity - running_max)/running_max
+    (metrics.py:133-150, risk_monitor.py:95-106)."""
+    return f"({eq} - {runmax}) / {runmax}"
+
+
+def _streak_sql(r: str, group: Sequence[str], ts_col: str):
+    """Gaps-and-islands streak staging, one layer per window dependency:
+    ``_flag`` = sign bucket of the return, ``_grp`` = island id (running
+    count of flag changes), ``_streak`` = row_number within (group,
+    island); plus the two aggregates reading them."""
+    lag = f"lag(_flag, 1) {_over(group, ts_col)}"
+    flag = f"CASE WHEN {r} > 0 THEN 1 WHEN {r} < 0 THEN -1 ELSE 0 END AS _flag"
+    grp = (f"sum(CASE WHEN ({lag} IS NULL) OR (_flag != {lag}) THEN 1 "
+           f"ELSE 0 END) {_over(group, ts_col, True)} AS _grp")
+    streak = f"row_number() {_over([*group, '_grp'], ts_col)} AS _streak"
+    aggs = [
+        "coalesce(max(CASE WHEN _flag = 1 THEN _streak END), 0)"
+        " AS max_consecutive_wins",
+        "coalesce(max(CASE WHEN _flag = -1 THEN _streak END), 0)"
+        " AS max_consecutive_losses",
+    ]
+    return flag, grp, streak, aggs
+
+
+def _agg(df: DataFrame, group: Sequence[str], aggs: list[str]) -> DataFrame:
+    exprs = [F.expr(a) for a in aggs]
+    return df.groupBy(*group).agg(*exprs) if group else df.agg(*exprs)
 
 
 def compute_metrics(
@@ -55,149 +91,78 @@ def compute_metrics(
     total_return, cagr, volatility, sharpe_ratio, sortino_ratio, max_drawdown,
     calmar_ratio, win_rate, profit_factor, num_trades, exposure, avg_win,
     avg_loss, n_periods [, max_consecutive_wins, max_consecutive_losses].
+
+    Every expression is SQL text, parsed JVM-side: the staging columns
+    arrive in one ``selectExpr`` per window-dependency layer (each call
+    re-analyzes the whole upstream lineage, guide §7.3) and the aggregates
+    in one ``agg``, so a build costs about a hundred py4j round trips
+    instead of the ~1,450 of a Column-API composition.
     """
     group = [symbol_col] if symbol_col else []
     cols = set(results.columns)
-    df = results
-    has_returns = returns_col in cols
     has_equity = equity_col in cols
     has_position = position_col in cols
+    df = results
+    r, eq, pos = map(sql_ident, (returns_col, equity_col, position_col))
 
-    # Expression-set memo (r13, guide §4/§5 — the py4j boundary exists on
-    # the driver): building this suite issues ~1,450 py4j round trips
-    # (~0.4 s measured), and Columns are immutable unresolved trees, so
-    # the SAME expression objects can be reused for every later call with
-    # the same parameters in this application — no data, no plan, no
-    # result is cached; only the unbound expression trees, exactly like
-    # the load_tables plan memo (r12). Keyed on applicationId so a new
-    # JVM/app never sees stale py4j refs.
-    try:
-        app = results.sparkSession.sparkContext.applicationId
-    except Exception:
-        app = None
-    key = (app, returns_col, equity_col, position_col, symbol_col, ts_col,
-           float(risk_free_rate), int(periods_per_year),
-           bool(include_streaks), has_returns, has_equity, has_position)
-    memo = _EXPR_MEMO.get(key) if app is not None else None
-    if memo is None:
-        memo = _build_metric_exprs(
-            returns_col, equity_col, position_col, group, ts_col,
-            risk_free_rate, periods_per_year, include_streaks,
-            has_returns, has_equity, has_position)
-        if app is not None:
-            if len(_EXPR_MEMO) > 256:
-                _EXPR_MEMO.clear()
-            _EXPR_MEMO[key] = memo
-    derived_returns, batch1, batch2, batch3, aggs = memo
-    if derived_returns is not None:
-        df = df.withColumn(returns_col, derived_returns)
-    df = df.withColumns(batch1).withColumns(batch2).withColumns(batch3)
-    return df.groupBy(*group).agg(*aggs) if group else df.agg(*aggs)
-
-
-#: memoized (derived_returns, batch1..3, aggs) expression tuples; see
-#: compute_metrics. Bounded like session._TABLE_MEMO.
-_EXPR_MEMO: dict = {}
-
-
-def _build_metric_exprs(
-    returns_col: str,
-    equity_col: str,
-    position_col: str,
-    group: list,
-    ts_col: str,
-    risk_free_rate: float,
-    periods_per_year: int,
-    include_streaks: bool,
-    has_returns: bool,
-    has_equity: bool,
-    has_position: bool,
-):
-    """Construct the metric suite's staging batches and aggregates —
-    expression code identical to the pre-r13 inline build."""
-    derived_returns = None
-    if not has_returns and has_equity:
-        w = Window.partitionBy(*group).orderBy(ts_col)
-        derived_returns = F.coalesce(
-            F.col(equity_col) / F.lag(equity_col, 1).over(w) - 1,
-            F.lit(0.0))
-
-    w = Window.partitionBy(*group).orderBy(ts_col)
-    w_all = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    # (r12) staging columns are added in THREE withColumns batches (one
-    # Catalyst analysis pass each) instead of seven withColumn calls —
-    # each call re-analyzes the whole upstream lineage (the full backtest
-    # kernel) and construction cost dominated execution at bench scale
-    # (guide §7.3). Batch boundaries follow the window-dependency layers;
-    # every expression and window spec is unchanged, and the aggregation
-    # output is order-insensitive to staging-column placement.
-    batch1: dict[str, Column] = {}
-    batch2: dict[str, Column] = {}
-    batch3: dict[str, Column] = {}
+    if returns_col not in cols and has_equity:
+        df = df.selectExpr(
+            "*", f"coalesce({eq} / lag({eq}, 1) {_over(group, ts_col)} - 1,"
+            f" 0.0D) AS {r}")
 
     # drawdown pre-pass: equity (or synthetic cumprod equity), running max
-    if has_equity:
-        eq = F.col(equity_col)
-    else:
-        eq = F.exp(F.sum(F.log1p(returns_col)).over(w_all))
-    batch1["_eq"] = eq
-    batch2["_runmax"] = F.max("_eq").over(w_all)
-    batch3["_dd"] = (F.col("_eq") - F.col("_runmax")) / F.col("_runmax")
+    eq_src = (eq if has_equity else
+              f"exp(sum(log1p({r})) {_over(group, ts_col, True)})")
+    batch1 = [f"{eq_src} AS _eq"]
+    batch2 = [f"{_runmax_sql('_eq', group, ts_col)} AS _runmax"]
+    batch3 = [f"{_drawdown_sql('_eq', '_runmax')} AS _dd"]
 
     # trade detection (metrics.py:194-206): position.diff() != 0
     if has_position:
-        batch1["_trade_flag"] = (
-            (F.col(position_col)
-             - F.coalesce(F.lag(position_col, 1).over(w), F.lit(0.0)) != 0)
-            .cast("int")
-        )
-        exposure_expr = (
-            F.sum((F.col(position_col) != 0).cast("long")) / F.count(F.lit(1))
-        )
-        num_trades_expr = F.sum("_trade_flag")
+        batch1.append(
+            f"CAST({pos} - coalesce(lag({pos}, 1) {_over(group, ts_col)},"
+            " 0.0D) != 0 AS INT) AS _trade_flag")
+        num_trades = "sum(_trade_flag)"
+        exposure = f"sum(CAST({pos} != 0 AS BIGINT)) / count(1)"
     else:
-        batch1["_trade_flag"] = F.lit(None).cast("int")
-        exposure_expr = F.lit(1.0)
-        num_trades_expr = F.sum((F.col(returns_col) != 0).cast("long"))
+        batch1.append("CAST(NULL AS INT) AS _trade_flag")
+        num_trades = f"sum(CAST({r} != 0 AS BIGINT))"
+        exposure = "1.0D"
 
-    r = F.col(returns_col)
-    rf = risk_free_rate / periods_per_year
-    n = F.count(F.lit(1))
-    total_return = F.exp(F.sum(F.log1p(r))) - 1
-    years = n / F.lit(float(periods_per_year))
-    cagr = F.when(
-        years > 0, F.pow(total_return + 1, F.lit(1.0) / years) - 1
-    ).otherwise(F.lit(0.0))
-    max_dd = F.min("_dd")
-
+    rf = sql_double(risk_free_rate / periods_per_year)
+    ann = sql_double(math.sqrt(periods_per_year))
+    total_return = f"(exp(sum(log1p({r}))) - 1)"
+    years = f"(count(1) / {sql_double(periods_per_year)})"
+    cagr = (f"CASE WHEN {years} > 0 THEN power({total_return} + 1, "
+            f"1.0D / {years}) - 1 ELSE 0.0D END")
+    ex = f"({r} - {rf})"
+    downside = f"stddev_samp(CASE WHEN {ex} < 0 THEN {ex} END)"
+    nonzero = f"sum(CAST({r} != 0 AS BIGINT))"
+    gains = f"sum(CASE WHEN {r} > 0 THEN {r} END)"
+    losses = f"abs(sum(CASE WHEN {r} < 0 THEN {r} END))"
     aggs = [
-        n.alias("n_periods"),
-        total_return.alias("total_return"),
-        cagr.alias("cagr"),
-        (F.stddev_samp(r) * math.sqrt(periods_per_year)).alias("volatility"),
-        _sharpe(r, rf, periods_per_year).alias("sharpe_ratio"),
-        _sortino(r, rf, periods_per_year).alias("sortino_ratio"),
-        max_dd.alias("max_drawdown"),
-        F.when(F.abs(max_dd) > 0, cagr / F.abs(max_dd)).otherwise(F.lit(0.0))
-        .alias("calmar_ratio"),
+        "count(1) AS n_periods",
+        f"{total_return} AS total_return",
+        f"{cagr} AS cagr",
+        f"stddev_samp({r}) * {ann} AS volatility",
+        f"CASE WHEN stddev_samp({ex}) > 0 THEN avg({ex}) / stddev_samp({ex})"
+        f" * {ann} ELSE 0.0D END AS sharpe_ratio",
+        f"CASE WHEN {downside} > 0 THEN avg({ex}) / {downside} * {ann}"
+        " ELSE 0.0D END AS sortino_ratio",
+        "min(_dd) AS max_drawdown",
+        f"CASE WHEN abs(min(_dd)) > 0 THEN ({cagr}) / abs(min(_dd))"
+        " ELSE 0.0D END AS calmar_ratio",
         # win_rate: wins / non-zero periods (metrics.py:166-178)
-        F.when(
-            F.sum((r != 0).cast("long")) > 0,
-            F.sum((r > 0).cast("long")) / F.sum((r != 0).cast("long")),
-        ).otherwise(F.lit(0.0)).alias("win_rate"),
+        f"CASE WHEN {nonzero} > 0 THEN sum(CAST({r} > 0 AS BIGINT)) / "
+        f"{nonzero} ELSE 0.0D END AS win_rate",
         # profit_factor: gross profit / |gross loss| (metrics.py:180-192)
-        F.when(
-            F.abs(F.sum(F.when(r < 0, r))) > 0,
-            F.sum(F.when(r > 0, r)) / F.abs(F.sum(F.when(r < 0, r))),
-        ).otherwise(
-            F.when(F.sum(F.when(r > 0, r)) > 0, F.lit(float("inf")))
-            .otherwise(F.lit(0.0))
-        ).alias("profit_factor"),
-        num_trades_expr.alias("num_trades"),
-        exposure_expr.alias("exposure"),
-        F.coalesce(F.avg(F.when(r > 0, r)), F.lit(0.0)).alias("avg_win"),
-        F.coalesce(F.avg(F.when(r < 0, r)), F.lit(0.0)).alias("avg_loss"),
+        f"CASE WHEN {losses} > 0 THEN {gains} / {losses} ELSE CASE WHEN "
+        f"{gains} > 0 THEN CAST('Infinity' AS DOUBLE) ELSE 0.0D END END"
+        " AS profit_factor",
+        f"{num_trades} AS num_trades",
+        f"{exposure} AS exposure",
+        f"coalesce(avg(CASE WHEN {r} > 0 THEN {r} END), 0.0D) AS avg_win",
+        f"coalesce(avg(CASE WHEN {r} < 0 THEN {r} END), 0.0D) AS avg_loss",
     ]
     if include_streaks:
         # Fold the gaps-and-islands streak computation into the SAME
@@ -208,24 +173,14 @@ def _build_metric_exprs(
         # satisfies that clustering, so both extra windows ride the ONE
         # existing exchange as additional sorts, and the streak maxes
         # join the main aggregation for free.
-        flag = F.when(r > 0, 1).when(r < 0, -1).otherwise(0)
-        batch1["_flag"] = flag
-        changed = F.when(
-            F.lag("_flag", 1).over(w).isNull()
-            | (F.col("_flag") != F.lag("_flag", 1).over(w)), 1
-        ).otherwise(0)
-        batch2["_grp"] = F.sum(changed).over(w_all)
-        w_island = Window.partitionBy(*group, "_grp").orderBy(ts_col)
-        batch3["_streak"] = F.row_number().over(w_island)
-        aggs += [
-            F.coalesce(
-                F.max(F.when(F.col("_flag") == 1, F.col("_streak"))),
-                F.lit(0)).alias("max_consecutive_wins"),
-            F.coalesce(
-                F.max(F.when(F.col("_flag") == -1, F.col("_streak"))),
-                F.lit(0)).alias("max_consecutive_losses"),
-        ]
-    return derived_returns, batch1, batch2, batch3, aggs
+        flag, grp, streak, streak_aggs = _streak_sql(r, group, ts_col)
+        batch1.append(flag)
+        batch2.append(grp)
+        batch3.append(streak)
+        aggs += streak_aggs
+    df = (df.selectExpr("*", *batch1).selectExpr("*", *batch2)
+          .selectExpr("*", *batch3))
+    return _agg(df, group, aggs)
 
 
 def consecutive_streaks(
@@ -235,35 +190,13 @@ def consecutive_streaks(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Max consecutive win / loss streaks via gaps-and-islands
-    (metrics.py:208-238).
-
-    flag = sign bucket of return; island id = running count of flag changes;
-    streak length = row_number within (group, island); answer = max streak
-    where flag says win (resp. loss).
-    """
+    (metrics.py:208-238) — the same staging as ``compute_metrics``'s
+    streak columns, as a standalone aggregate."""
     group = list(group)
-    w = Window.partitionBy(*group).orderBy(ts_col)
-    w_all = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    r = F.col(returns_col)
-    flag = F.when(r > 0, 1).when(r < 0, -1).otherwise(0)
-    df = results.withColumn("_flag", flag)
-    changed = (
-        F.when(
-            F.lag("_flag", 1).over(w).isNull()
-            | (F.col("_flag") != F.lag("_flag", 1).over(w)),
-            1,
-        ).otherwise(0)
-    )
-    df = df.withColumn("_grp", F.sum(changed).over(w_all))
-    w_island = Window.partitionBy(*group, "_grp").orderBy(ts_col)
-    df = df.withColumn("_streak", F.row_number().over(w_island))
-    aggs = [
-        F.coalesce(F.max(F.when(F.col("_flag") == 1, F.col("_streak"))),
-                   F.lit(0)).alias("max_consecutive_wins"),
-        F.coalesce(F.max(F.when(F.col("_flag") == -1, F.col("_streak"))),
-                   F.lit(0)).alias("max_consecutive_losses"),
-    ]
-    return df.groupBy(*group).agg(*aggs) if group else df.agg(*aggs)
+    flag, grp, streak, aggs = _streak_sql(sql_ident(returns_col), group, ts_col)
+    df = (results.selectExpr("*", flag).selectExpr("*", grp)
+          .selectExpr("*", streak))
+    return _agg(df, group, aggs)
 
 
 def drawdown_series(
@@ -272,18 +205,13 @@ def drawdown_series(
     symbol_col: str | None = "symbol",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Per-bar drawdown = (equity - running_max)/running_max
-    (metrics.py:133-150, risk_monitor.py:95-106)."""
+    """Per-bar ``running_max`` and ``drawdown`` columns, with the same
+    fragments ``compute_metrics`` aggregates into ``max_drawdown``."""
     group = [symbol_col] if symbol_col else []
-    w_all = (
-        Window.partitionBy(*group)
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    runmax = F.max(equity_col).over(w_all)
-    return results.withColumn("running_max", runmax).withColumn(
-        "drawdown", (F.col(equity_col) - runmax) / runmax
-    )
+    eq = sql_ident(equity_col)
+    return results.withColumn(
+        "running_max", F.expr(_runmax_sql(eq, group, ts_col))
+    ).withColumn("drawdown", F.expr(_drawdown_sql(eq, "running_max")))
 
 
 def summary(metrics_row: dict) -> dict:

@@ -16,6 +16,11 @@ from pyspark.sql import functions as F
 from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (
     skew,
 )
+from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
+    sql_ident,
+    sql_in,
+    sql_str,
+)
 
 # small multilingual stopword sets for the n-gram-free language heuristic
 STOPWORDS = {
@@ -26,131 +31,54 @@ STOPWORDS = {
 }
 
 
-def tokens(text: Column | str, pattern: str = " ") -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(c, pattern)
+# The scoring expressions are defined once, as SQL text (``*_sql``
+# generators over a SQL operand), and parsed JVM-side in one call: a
+# Column-API composition of predict_language alone issued hundreds of
+# py4j round trips (~0.4 s of driver time). The name-taking wrappers
+# parse the same text, so curate_corpus (one selectExpr) and the
+# per-column builders share every formula.
 
 
-def token_count(text: Column | str) -> Column:
+def tokens_sql(col_sql: str, pattern: str = " ") -> str:
+    return f"split({col_sql}, {sql_str(pattern)})"
+
+
+def token_count_sql(col_sql: str) -> str:
     """Whitespace token count."""
-    return F.size(tokens(text))
+    return f"size({tokens_sql(col_sql)})"
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
+def bpe_ish_token_count_sql(col_sql: str) -> str:
     """Approximate subword count: punctuation split off as separate tokens,
     then whitespace split — a cheap stand-in for BPE tokenizers when
     budgeting corpus size."""
-    c = F.col(text) if isinstance(text, str) else text
-    spaced = F.regexp_replace(c, r"([.,;:!?()])", r" $1 ")
-    return F.size(F.filter(F.split(F.trim(spaced), r"\s+"),
-                           lambda x: x != F.lit("")))
+    punct = sql_str(r"([.,;:!?()])")
+    ws = sql_str(r"\s+")
+    spaced = f"regexp_replace({col_sql}, {punct}, {sql_str(' $1 ')})"
+    return f"size(filter(split(trim({spaced}), {ws}), x -> x != ''))"
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    toks = tokens(text)
+def stopword_ratio_sql(col_sql: str, lang: str = "en") -> str:
+    toks = tokens_sql(col_sql)
     stop = STOPWORDS.get(lang, STOPWORDS["en"])
-    return F.size(F.filter(toks, lambda x: x.isin(stop))) / F.size(toks)
+    return (f"(size(filter({toks}, x -> x IN ({sql_in(stop)}))) "
+            f"/ size({toks}))")
 
 
 # fixed tie priority: earlier languages win score ties (deterministic)
 LANG_PRIORITY = ["en", "de", "es", "fr"]
 
 
-def lang_score(text: Column | str, lang: str) -> Column:
-    toks = tokens(text)
-    stop = STOPWORDS[lang]
-    return F.size(F.filter(toks, lambda x: x.isin(stop)))
-
-
-def predict_language(text: Column | str) -> Column:
-    """Stopword-vote language ID: the language whose stopword set matches
-    the most tokens wins; score ties resolve by LANG_PRIORITY order; zero
-    matches everywhere -> 'unknown'. Pure expressions, one array pass per
-    language."""
-    scores = {lang: lang_score(text, lang) for lang in LANG_PRIORITY}
-    best = None
-    for lang in LANG_PRIORITY:
-        cond = scores[lang] > 0
-        for other in LANG_PRIORITY:
-            if other != lang:
-                op = (scores[lang] >= scores[other]
-                      if LANG_PRIORITY.index(other) > LANG_PRIORITY.index(lang)
-                      else scores[lang] > scores[other])
-                cond = cond & op
-        best = (F.when(cond, F.lit(lang)) if best is None
-                else best.when(cond, F.lit(lang)))
-    return best.otherwise(F.lit("unknown"))
-
-
-# --------------------------------------------------------------- SQL twins
-#
-# Driver-side plan construction is real work at 100 TB scale too (guide
-# §5: the driver is the scale bottleneck): composing predict_language &
-# friends op-by-op through the Column API issues hundreds of py4j round
-# trips per call (~0.4 s measured for predict_language alone). The
-# generators below emit the SAME expressions as SQL text, parsed by the
-# JVM in ONE selectExpr call — the q26 F.expr pattern (r12). Each twin
-# mirrors its Column builder's tree exactly (left-assoc AND chains, IN
-# lists, two-arg split) so the analyzed expression — and the results —
-# are identical; tests/test_functions.py pins curate_corpus bit-equal.
-
-
-def _sql_str(s: str) -> str:
-    """Single-quoted Spark SQL string literal. Backslashes must be
-    doubled (default escapedStringLiterals=false processes escapes) so
-    the parsed literal is byte-identical to the Python string the Column
-    API would embed unprocessed."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _sql_ident(name: str) -> str:
-    """Backtick-quoted identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_double(v: float) -> str:
-    """A SQL literal that parses as DoubleType with the exact bits of
-    ``v``. A bare ``0.5`` parses as DECIMAL(1,1) in Spark SQL — a
-    different type and comparison semantics than the Column API's
-    ``lit(0.5)`` — so always emit scientific notation (17 significant
-    digits round-trips any double exactly)."""
-    return f"{float(v):.17e}"
-
-
-def _sql_in(vals) -> str:
-    return ", ".join(_sql_str(v) for v in vals)
-
-
-def tokens_sql(col_sql: str, pattern: str = " ") -> str:
-    """SQL twin of :func:`tokens`."""
-    return f"split({col_sql}, {_sql_str(pattern)})"
-
-
-def bpe_ish_token_count_sql(col_sql: str) -> str:
-    """SQL twin of :func:`bpe_ish_token_count`."""
-    punct = _sql_str(r"([.,;:!?()])")
-    ws = _sql_str(r"\s+")
-    spaced = f"regexp_replace({col_sql}, {punct}, {_sql_str(' $1 ')})"
-    return f"size(filter(split(trim({spaced}), {ws}), x -> x != ''))"
-
-
-def stopword_ratio_sql(col_sql: str, lang: str = "en") -> str:
-    """SQL twin of :func:`stopword_ratio`."""
-    toks = tokens_sql(col_sql)
-    stop = STOPWORDS.get(lang, STOPWORDS["en"])
-    return (f"(size(filter({toks}, x -> x IN ({_sql_in(stop)}))) "
-            f"/ size({toks}))")
-
-
 def lang_score_sql(col_sql: str, lang: str) -> str:
-    """SQL twin of :func:`lang_score`."""
     toks = tokens_sql(col_sql)
-    return f"size(filter({toks}, x -> x IN ({_sql_in(STOPWORDS[lang])})))"
+    return f"size(filter({toks}, x -> x IN ({sql_in(STOPWORDS[lang])})))"
 
 
 def predict_language_sql(col_sql: str) -> str:
-    """SQL twin of :func:`predict_language` — same CASE branch order,
-    same left-assoc AND nesting, same >=/> tie rules."""
+    """Stopword-vote language ID: the language whose stopword set matches
+    the most tokens wins; score ties resolve by LANG_PRIORITY order (>=
+    against later languages, > against earlier); zero matches everywhere
+    -> 'unknown'. Pure expressions, one array pass per language."""
     scores = {lang: lang_score_sql(col_sql, lang) for lang in LANG_PRIORITY}
     branches = []
     for lang in LANG_PRIORITY:
@@ -160,8 +88,32 @@ def predict_language_sql(col_sql: str) -> str:
                 op = (">=" if LANG_PRIORITY.index(other)
                       > LANG_PRIORITY.index(lang) else ">")
                 cond = f"({cond} AND ({scores[lang]} {op} {scores[other]}))"
-        branches.append(f"WHEN {cond} THEN {_sql_str(lang)}")
+        branches.append(f"WHEN {cond} THEN {sql_str(lang)}")
     return "CASE " + " ".join(branches) + " ELSE 'unknown' END"
+
+
+def tokens(text: str, pattern: str = " ") -> Column:
+    return F.expr(tokens_sql(sql_ident(text), pattern))
+
+
+def token_count(text: str) -> Column:
+    return F.expr(token_count_sql(sql_ident(text)))
+
+
+def bpe_ish_token_count(text: str) -> Column:
+    return F.expr(bpe_ish_token_count_sql(sql_ident(text)))
+
+
+def stopword_ratio(text: str, lang: str = "en") -> Column:
+    return F.expr(stopword_ratio_sql(sql_ident(text), lang))
+
+
+def lang_score(text: str, lang: str) -> Column:
+    return F.expr(lang_score_sql(sql_ident(text), lang))
+
+
+def predict_language(text: str) -> Column:
+    return F.expr(predict_language_sql(sql_ident(text)))
 
 
 def quality_features(
@@ -279,7 +231,7 @@ def redact_pii(
     return out.withColumn("redacted", redacted)
 
 
-def fingerprint(text: Column | str) -> Column:
+def fingerprint(text: str) -> Column:
     """Order-insensitive document fingerprint: md5 of the sorted token
     multiset — catches shuffled-word duplicates exact hashing misses."""
     return F.md5(F.array_join(F.array_sort(tokens(text)), " "))

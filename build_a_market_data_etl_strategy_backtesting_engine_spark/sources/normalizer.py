@@ -45,8 +45,9 @@ def _alias(root: Column, names: list[str]) -> Column:
 
 def unify_timestamp(raw: Column) -> Column:
     """unix s / unix ms / ISO string -> timestamp (normalizer.py:28-38);
-    missing -> current_timestamp()."""
-    d = raw.cast("double")
+    missing -> current_timestamp(). ``try_cast``: under ANSI mode a plain
+    cast of an ISO string to double raises instead of yielding null."""
+    d = raw.try_cast("double")
     as_num = F.when(d > 1e12, F.timestamp_millis(d.cast("long"))).otherwise(
         F.timestamp_seconds(d)
     )

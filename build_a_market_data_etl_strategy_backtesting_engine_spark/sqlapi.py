@@ -1,11 +1,14 @@
 """SQL surface: the engine's scalar library registered as Spark SQL
-functions, plus view helpers — the whole engine queryable as SQL
-(SURVEY §7.0 design goal; also what makes DuckDB-oracle checking natural).
+functions, view helpers, and the literal/identifier quoting every module
+that emits SQL text shares — the whole engine queryable as SQL (SURVEY
+§7.0 design goal; also what makes DuckDB-oracle checking natural).
 
 Spark 4 SQL UDFs (``CREATE TEMPORARY FUNCTION ... RETURN <expr>``) keep
 these as catalyst expressions — no Python round-trip, fully codegen'd,
 identical formulas to the Column builders in ``functions/`` (generated from
-the same ``*_sql`` sources).
+the same ``*_sql`` sources). The metric suite (``operators/metrics.py``)
+and the text-scoring expressions (``operators/text.py``) are defined only
+as SQL text built with the quoting helpers below.
 """
 
 from __future__ import annotations
@@ -16,6 +19,33 @@ from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import 
     derivatives as deriv,
     mathx,
 )
+
+
+def sql_str(s: str) -> str:
+    """Single-quoted Spark SQL string literal. Backslashes must be
+    doubled (default escapedStringLiterals=false processes escapes) so
+    the parsed literal is byte-identical to the Python string."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_double(v: float) -> str:
+    """A SQL literal that parses as DoubleType with the exact bits of
+    ``v``. A bare ``0.5`` parses as DECIMAL(1,1) in Spark SQL — a
+    different type and comparison semantics than the Column API's
+    ``lit(0.5)`` — so always emit scientific notation (17 significant
+    digits round-trips any double exactly)."""
+    return f"{float(v):.17e}"
+
+
+def sql_in(vals) -> str:
+    """Comma-separated string literals for an ``IN (...)`` list."""
+    return ", ".join(sql_str(v) for v in vals)
+
 
 _ARGS5 = "s DOUBLE, k DOUBLE, t DOUBLE, sigma DOUBLE, r DOUBLE"
 

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.bars import (
-    to_interval,
+    ticks_to_ohlcv,
 )
 
 
@@ -30,30 +30,15 @@ def streaming_ohlcv(
     price_col: str = "price",
     volume_col: str = "volume",
 ) -> DataFrame:
-    """Watermarked streaming OHLCV aggregation (same kernel as batch).
+    """Watermarked streaming OHLCV aggregation: the batch kernel
+    ``ticks_to_ohlcv`` over the watermarked stream.
 
     Append-mode compatible: bars finalize when the watermark passes the
     window end. State per (symbol, window) is O(1) — the aggregation
     buffer holds 4 price extremes + volume sum + count.
     """
-    wm = ticks.withWatermark(ts_col, watermark)
-    key = F.col(ts_col)
-    return (
-        wm.groupBy(
-            F.col(symbol_col).alias("symbol"),
-            F.window(ts_col, to_interval(freq)).alias("w"),
-        )
-        .agg(
-            F.min_by(price_col, key).alias("open"),
-            F.max(price_col).alias("high"),
-            F.min(price_col).alias("low"),
-            F.max_by(price_col, key).alias("close"),
-            F.sum(volume_col).alias("volume"),
-            F.count(F.lit(1)).alias("n_ticks"),
-        )
-        .select("symbol", F.col("w.start").alias("ts"),
-                "open", "high", "low", "close", "volume", "n_ticks")
-    )
+    return ticks_to_ohlcv(ticks.withWatermark(ts_col, watermark), freq,
+                          ts_col, symbol_col, price_col, volume_col)
 
 
 def streaming_loss_alerts(

@@ -140,6 +140,18 @@ def test_normalizer_basic(spark):
     assert r.ts.year == 2023  # unix seconds path
 
 
+def test_normalizer_iso_timestamp(spark):
+    """ISO-8601 strings take the to_timestamp path; the numeric probe
+    must not raise under ANSI mode."""
+    df = spark.createDataFrame([Row(
+        value='{"timestamp": "2026-10-17T00:23:42.856Z", "symbol": "AAPL",'
+              ' "price": 150.5}')])
+    rows = normalize_trades(df).select(
+        F.unix_micros("ts").alias("us"), "symbol").collect()
+    assert len(rows) == 1 and rows[0].symbol == "AAPL"
+    assert rows[0].us == 1792196622856000
+
+
 def test_normalizer_nested_aliases_ms(spark):
     rows = _normalize_one(
         spark, '{"data": {"t": 1700000000123, "s": "MSFT", "p": "370.1", "v": 5}}'
@@ -300,13 +312,14 @@ def test_bs_sql_twin_expr_bit_equal(spark):
 
 def test_curate_corpus_sql_twin_bit_equal(spark):
     """curate_corpus + distinct_by_content build their expressions from
-    generated SQL-twin text (r13: one JVM parse instead of ~300 py4j
-    round trips per call — the q26 pattern applied to the corpus
-    pipeline). Only sound if the parsed trees compute the same values as
-    the Column builders they replaced — pinned here bit-exact on a
-    corpus that exercises every branch: all four languages + unknown,
-    quotes/backslashes in text (literal-escaping hazards), punctuation
-    splitting, the token/alpha filters, and a backticked column name."""
+    generated SQL text (one JVM parse instead of ~300 py4j round trips
+    per call — the q26 pattern applied to the corpus pipeline). Only
+    sound if the parsed trees compute the same values as the Column-API
+    builders they replaced (kept below as the reference) — pinned
+    bit-exact on a corpus that exercises every branch: all four
+    languages + unknown, quotes/backslashes in text (literal-escaping
+    hazards), punctuation splitting, the token/alpha filters, an empty
+    language allowlist, and a backticked column name."""
     import struct
 
     from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (
@@ -330,21 +343,60 @@ def test_curate_corpus_sql_twin_bit_equal(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id int, text string")
 
-    # Column-API reference build (the pre-r13 implementation, verbatim)
+    # Independent Column-API reference build: the pre-r13 implementation
+    # and the Column-API text formulas it called, verbatim.
+    STOPWORDS, LANG_PRIORITY = text_ops.STOPWORDS, text_ops.LANG_PRIORITY
+
+    def tokens(text, pattern=" "):
+        c = F.col(text) if isinstance(text, str) else text
+        return F.split(c, pattern)
+
+    def bpe_ish_token_count(text):
+        c = F.col(text) if isinstance(text, str) else text
+        spaced = F.regexp_replace(c, r"([.,;:!?()])", r" $1 ")
+        return F.size(F.filter(F.split(F.trim(spaced), r"\s+"),
+                               lambda x: x != F.lit("")))
+
+    def stopword_ratio(text, lang="en"):
+        toks = tokens(text)
+        stop = STOPWORDS.get(lang, STOPWORDS["en"])
+        return F.size(F.filter(toks, lambda x: x.isin(stop))) / F.size(toks)
+
+    def lang_score(text, lang):
+        toks = tokens(text)
+        stop = STOPWORDS[lang]
+        return F.size(F.filter(toks, lambda x: x.isin(stop)))
+
+    def predict_language(text):
+        scores = {lang: lang_score(text, lang) for lang in LANG_PRIORITY}
+        best = None
+        for lang in LANG_PRIORITY:
+            cond = scores[lang] > 0
+            for other in LANG_PRIORITY:
+                if other != lang:
+                    op = (scores[lang] >= scores[other]
+                          if LANG_PRIORITY.index(other)
+                          > LANG_PRIORITY.index(lang)
+                          else scores[lang] > scores[other])
+                    cond = cond & op
+            best = (F.when(cond, F.lit(lang)) if best is None
+                    else best.when(cond, F.lit(lang)))
+        return best.otherwise(F.lit("unknown"))
+
     def old_curate(d, min_tokens, max_tokens, min_alpha_ratio, langs):
         w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
         d = (d.withColumn("_rn", F.row_number().over(w))
              .filter(F.col("_rn") == 1).drop("_rn"))
         c = F.col("text")
-        toks = text_ops.tokens("text")
+        toks = tokens("text")
         d = d.select(
             "*",
             F.size(toks).alias("n_tokens"),
-            text_ops.bpe_ish_token_count("text").alias("n_bpe_tokens"),
-            text_ops.stopword_ratio("text").alias("stop_ratio"),
+            bpe_ish_token_count("text").alias("n_bpe_tokens"),
+            stopword_ratio("text").alias("stop_ratio"),
             (F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
              / F.length(c)).alias("alpha_ratio"),
-            text_ops.predict_language("text").alias("pred_lang"),
+            predict_language("text").alias("pred_lang"),
         )
         d = d.filter((F.col("n_tokens") >= min_tokens)
                      & (F.col("n_tokens") <= max_tokens)
@@ -363,12 +415,17 @@ def test_curate_corpus_sql_twin_bit_equal(spark):
             b = corpus.curate_corpus(
                 docs, min_tokens=min_tok, min_alpha_ratio=min_alpha,
                 langs=langs).orderBy("doc_id").collect()
-            assert len(a) == len(b) and len(a) > 0 or (min_tok == 10)
+            assert len(a) == len(b)
+            assert len(a) > 0 or min_tok == 10
             for ra, rb in zip(a, b):
                 da, db = ra.asDict(), rb.asDict()
                 assert list(da) == list(db)
                 for k in da:
                     assert bits(da[k]) == bits(db[k]), (langs, min_tok, k)
+    # an empty language allowlist keeps nothing
+    assert old_curate(docs, 1, 1_000_000, 0.0, ()).count() == 0
+    assert corpus.curate_corpus(docs, min_tokens=1, min_alpha_ratio=0.0,
+                                langs=()).count() == 0
     # schema parity (names, types, nullability)
     assert (old_curate(docs, 10, 1_000_000, 0.5, ("en",)).schema
             == corpus.curate_corpus(docs).schema)
@@ -382,3 +439,10 @@ def test_curate_corpus_sql_twin_bit_equal(spark):
     assert out.count() == 9  # 10 rows minus 1 exact duplicate
     assert dedup.distinct_by_content(
         weird, text_col="body`y", doc_id_col="id`x").count() == 9
+
+    # a caller column named like the staging column passes through
+    tagged = docs.withColumn("_rn", F.col("doc_id") * 10)
+    kept = dedup.distinct_by_content(tagged).orderBy("doc_id").collect()
+    assert [r.doc_id for r in kept] == [1, 2, 3, 4, 5, 6, 8, 9, 10]
+    assert [r._rn for r in kept] == [r.doc_id * 10 for r in kept]
+    assert kept[0].asDict().keys() == {"doc_id", "text", "_rn"}

@@ -263,6 +263,24 @@ def test_metrics_sign_invariants(spark, tick_sdf):
         assert m.num_trades >= 0
 
 
+def test_streaks_and_drawdown_match_metrics(spark, tick_sdf):
+    """consecutive_streaks and drawdown_series agree with the streak and
+    drawdown columns compute_metrics folds into its single pass."""
+    b = bars.ticks_to_ohlcv(tick_sdf, "5min", tiebreaker="seq")
+    res = backtest.backtest_signals(
+        signals.momentum_signal(b, lookback=10, threshold=0.01))
+    m = {r.symbol: r for r in metrics_ops.compute_metrics(res).collect()}
+    streaks = metrics_ops.consecutive_streaks(res).collect()
+    dd = (metrics_ops.drawdown_series(res).groupBy("symbol")
+          .agg(F.min("drawdown").alias("dd")).collect())
+    assert len(m) > 1 and len(streaks) == len(dd) == len(m)
+    for r in streaks:
+        assert r.max_consecutive_wins == m[r.symbol].max_consecutive_wins
+        assert r.max_consecutive_losses == m[r.symbol].max_consecutive_losses
+    for r in dd:
+        assert r.dd == m[r.symbol].max_drawdown
+
+
 def test_multi_asset_portfolio(spark, tick_sdf):
     b = bars.ticks_to_ohlcv(tick_sdf, "5min", tiebreaker="seq")
     sig = signals.buy_and_hold_signal(b)
