@@ -123,78 +123,6 @@ def bench_asof_nearest(spark, sf_dir):
                                  direction="nearest"))
 
 
-_MEDIA_PATH = "/tmp/spark_graft_bench_media.parquet"
-_MEDIA_N = 384
-
-
-def _media_corpus_key():
-    """Cache key for the bench corpus: row count alone is NOT enough —
-    changed generation params would silently bench a stale corpus
-    (r6 ADVICE). Keying on the generator's source hash regenerates on
-    any change to what the corpus contains."""
-    import hashlib
-    import inspect
-
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (  # noqa: E501
-        multimodal as mm_ops,
-    )
-
-    src = inspect.getsource(mm_ops.synthetic_media_corpus)
-    return f"n={_MEDIA_N};gen={hashlib.sha256(src.encode()).hexdigest()[:16]}"
-
-
-def _ensure_media_corpus(spark):
-    """Build the codec-bench corpus once (untimed): 384 web-thumbnail
-    rasters (160-320 px wide) encoded on the executors as baseline JPEG,
-    progressive JPEG, and PNG. Deterministic, reused across runs while
-    the generation key (count + generator source hash) matches."""
-    import shutil
-
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (  # noqa: E501
-        multimodal as mm_ops,
-    )
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.session import (  # noqa: E501
-        ensure_package_on_executors,
-    )
-
-    ensure_package_on_executors(spark)
-    key_path = _MEDIA_PATH + ".key"
-    key = _media_corpus_key()
-    try:
-        with open(key_path) as fh:
-            if fh.read() == key and os.path.isdir(_MEDIA_PATH):
-                return
-    except OSError:
-        pass
-    shutil.rmtree(_MEDIA_PATH, ignore_errors=True)
-    mm_ops.synthetic_media_corpus(spark, _MEDIA_N).write.mode(
-        "overwrite").parquet(_MEDIA_PATH)
-    with open(key_path, "w") as fh:
-        fh.write(key)
-
-
-def bench_codec_decode(spark, sf_dir):
-    """Image-corpus decode throughput: parquet scan -> decode (pure-numpy
-    JPEG baseline + progressive + PNG) -> channel stats, one mapInPandas
-    stage. The number that matters is MB/s and Mpix/s per core — a
-    training-data pipeline lives or dies on it (r5 VERDICT #6)."""
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (  # noqa: E501
-        multimodal as mm_ops,
-    )
-
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.skew import (  # noqa: E501
-        ensure_parallelism,
-    )
-
-    # the corpus is ~16 MB of payloads -> ONE 128MB-default scan split,
-    # so the decode stage would run single-core; this is exactly the
-    # explode-amplifying small-input regime ensure_parallelism exists
-    # for (decode work is proportional to pixels, not input bytes)
-    media = ensure_parallelism(
-        spark.read.parquet(_MEDIA_PATH), "media_id")
-    _materialize(mm_ops.image_features(media))
-
-
 def _jvm_gc_ms(spark) -> int:
     """Cumulative JVM GC milliseconds across all collectors (local mode:
     the one JVM doing all the work). Deltas around a workload attribute
@@ -410,7 +338,6 @@ BENCHES = {
     "embedding_topk": bench_from_query("q24_embedding_topk"),
     "black_scholes": bench_from_query("q26_black_scholes"),
     "corpus_curation": bench_from_query("q66_corpus_curation"),
-    "codec_decode": bench_codec_decode,
 }
 
 
@@ -443,17 +370,11 @@ def main():
     _prewarm_python_workers(spark, int(cpus))
     load_post_warmup = _load1()
 
-    _ensure_media_corpus(spark)
-    media_stats = spark.read.parquet(_MEDIA_PATH).selectExpr(
-        "count(*) AS n", "sum(length(content)) AS nbytes",
-        "sum(width * height) AS npix").first()
-
     n_events = spark.sql("SELECT count(*) FROM events").first()[0]
     # input cardinality per workload, for the rows/sec comparison the
     # BASELINE protocol asks for (reference claims 10k ticks/s ETL).
     workload_rows = {"clean_ohlcv": n_events, "backtest_metrics": n_events,
-                     "event_driven": n_events,
-                     "codec_decode": media_stats.n}
+                     "event_driven": n_events}
 
     # Two passes per workload: the first pays per-plan overhead (codegen
     # compilation, broadcast build, AQE re-planning), the second is the
@@ -466,7 +387,6 @@ def main():
     throughput = {}
     gc_ms = {}
     load1 = {}
-    codec = None
     for name, fn in BENCHES.items():
         t0 = time.perf_counter()
         fn(spark, sf_dir)
@@ -493,21 +413,11 @@ def main():
         warm_reps[name] = [round(r, 3) for r in reps]
         if name in workload_rows and dt > 0:
             throughput[name] = round(workload_rows[name] / dt)
-        if name == "codec_decode" and dt > 0:
-            codec = {
-                "mb_per_sec": round(media_stats.nbytes / dt / 1e6, 1),
-                "mpix_per_sec": round(media_stats.npix / dt / 1e6, 1),
-                "images": int(media_stats.n),
-                "total_mb": round(media_stats.nbytes / 1e6, 1),
-            }
 
-    # headline total stays the 12-workload figure BENCH_r04/r05 used
-    # (cross-round comparable); codec_decode's real metric is MB/s and
-    # is reported in its own block + timings entry, not the sum.
-    total = round(sum(v for k, v in timings.items()
-                      if k != "codec_decode"), 3)
-    total_med3 = round(sum(v for k, v in med3.items()
-                           if k != "codec_decode"), 3)
+    # headline total is the 12-workload figure BENCH_r04/r05 used
+    # (cross-round comparable)
+    total = round(sum(timings.values()), 3)
+    total_med3 = round(sum(med3.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf = float(sf)
@@ -538,7 +448,6 @@ def main():
         "queries_med3": med3,
         "queries_cold": cold,
         "rows_per_sec": throughput,
-        "codec": codec,
         "sf": sf,
         # run provenance: a warm number taken on a loaded box (load1 >>
         # ncpus-idle baseline) or during a GC storm is not comparable

@@ -16,6 +16,8 @@ over the corpus, with the filters applied before anything downstream
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -65,9 +67,11 @@ def curate_corpus(
         " AS alpha_ratio",
         f"{text_ops.predict_language_sql(cs)} AS pred_lang",
     )
+    # n_tokens is an integer, so rounding the bounds inward is exact for
+    # fractional thresholds and leaves integer ones unchanged
     d = d.filter(
-        f"((n_tokens >= {int(min_tokens)}) AND (n_tokens <= "
-        f"{int(max_tokens)})) AND (alpha_ratio >= "
+        f"((n_tokens >= {math.ceil(min_tokens)}) AND (n_tokens <= "
+        f"{math.floor(max_tokens)})) AND (alpha_ratio >= "
         f"{sql_double(min_alpha_ratio)})"
     )
     if langs is not None:

@@ -19,6 +19,9 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals import (  # noqa: E501
+    _fresh,
+)
 from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
     sql_double,
     sql_ident,
@@ -49,20 +52,23 @@ def _drawdown_sql(eq: str, runmax: str) -> str:
     return f"({eq} - {runmax}) / {runmax}"
 
 
-def _streak_sql(r: str, group: Sequence[str], ts_col: str):
+def _streak_sql(r: str, group: Sequence[str], ts_col: str,
+                names: Sequence[str]):
     """Gaps-and-islands streak staging, one layer per window dependency:
     ``_flag`` = sign bucket of the return, ``_grp`` = island id (running
     count of flag changes), ``_streak`` = row_number within (group,
-    island); plus the two aggregates reading them."""
-    lag = f"lag(_flag, 1) {_over(group, ts_col)}"
-    flag = f"CASE WHEN {r} > 0 THEN 1 WHEN {r} < 0 THEN -1 ELSE 0 END AS _flag"
-    grp = (f"sum(CASE WHEN ({lag} IS NULL) OR (_flag != {lag}) THEN 1 "
-           f"ELSE 0 END) {_over(group, ts_col, True)} AS _grp")
-    streak = f"row_number() {_over([*group, '_grp'], ts_col)} AS _streak"
+    island); plus the two aggregates reading them. ``names`` holds the
+    three staging column names, ``_fresh`` against the input."""
+    f, g, k = names
+    lag = f"lag({f}, 1) {_over(group, ts_col)}"
+    flag = f"CASE WHEN {r} > 0 THEN 1 WHEN {r} < 0 THEN -1 ELSE 0 END AS {f}"
+    grp = (f"sum(CASE WHEN ({lag} IS NULL) OR ({f} != {lag}) THEN 1 "
+           f"ELSE 0 END) {_over(group, ts_col, True)} AS {g}")
+    streak = f"row_number() {_over([*group, g], ts_col)} AS {k}"
     aggs = [
-        "coalesce(max(CASE WHEN _flag = 1 THEN _streak END), 0)"
+        f"coalesce(max(CASE WHEN {f} = 1 THEN {k} END), 0)"
         " AS max_consecutive_wins",
-        "coalesce(max(CASE WHEN _flag = -1 THEN _streak END), 0)"
+        f"coalesce(max(CASE WHEN {f} = -1 THEN {k} END), 0)"
         " AS max_consecutive_losses",
     ]
     return flag, grp, streak, aggs
@@ -96,7 +102,8 @@ def compute_metrics(
     arrive in one ``selectExpr`` per window-dependency layer (each call
     re-analyzes the whole upstream lineage, guide §7.3) and the aggregates
     in one ``agg``, so a build costs about a hundred py4j round trips
-    instead of the ~1,450 of a Column-API composition.
+    instead of the ~1,450 of a Column-API composition. Staging names are
+    ``_fresh``, so a caller column named like one passes through.
     """
     group = [symbol_col] if symbol_col else []
     cols = set(results.columns)
@@ -104,6 +111,10 @@ def compute_metrics(
     has_position = position_col in cols
     df = results
     r, eq, pos = map(sql_ident, (returns_col, equity_col, position_col))
+    # returns_col leads so a derived returns column is never a staging name
+    _, eq_s, runmax_s, dd_s, trade_s, *streak_names = _fresh(
+        results, returns_col, "_eq", "_runmax", "_dd", "_trade_flag",
+        "_flag", "_grp", "_streak")
 
     if returns_col not in cols and has_equity:
         df = df.selectExpr(
@@ -113,19 +124,19 @@ def compute_metrics(
     # drawdown pre-pass: equity (or synthetic cumprod equity), running max
     eq_src = (eq if has_equity else
               f"exp(sum(log1p({r})) {_over(group, ts_col, True)})")
-    batch1 = [f"{eq_src} AS _eq"]
-    batch2 = [f"{_runmax_sql('_eq', group, ts_col)} AS _runmax"]
-    batch3 = [f"{_drawdown_sql('_eq', '_runmax')} AS _dd"]
+    batch1 = [f"{eq_src} AS {eq_s}"]
+    batch2 = [f"{_runmax_sql(eq_s, group, ts_col)} AS {runmax_s}"]
+    batch3 = [f"{_drawdown_sql(eq_s, runmax_s)} AS {dd_s}"]
 
     # trade detection (metrics.py:194-206): position.diff() != 0
     if has_position:
         batch1.append(
             f"CAST({pos} - coalesce(lag({pos}, 1) {_over(group, ts_col)},"
-            " 0.0D) != 0 AS INT) AS _trade_flag")
-        num_trades = "sum(_trade_flag)"
+            f" 0.0D) != 0 AS INT) AS {trade_s}")
+        num_trades = f"sum({trade_s})"
         exposure = f"sum(CAST({pos} != 0 AS BIGINT)) / count(1)"
     else:
-        batch1.append("CAST(NULL AS INT) AS _trade_flag")
+        batch1.append(f"CAST(NULL AS INT) AS {trade_s}")
         num_trades = f"sum(CAST({r} != 0 AS BIGINT))"
         exposure = "1.0D"
 
@@ -149,8 +160,8 @@ def compute_metrics(
         f" * {ann} ELSE 0.0D END AS sharpe_ratio",
         f"CASE WHEN {downside} > 0 THEN avg({ex}) / {downside} * {ann}"
         " ELSE 0.0D END AS sortino_ratio",
-        "min(_dd) AS max_drawdown",
-        f"CASE WHEN abs(min(_dd)) > 0 THEN ({cagr}) / abs(min(_dd))"
+        f"min({dd_s}) AS max_drawdown",
+        f"CASE WHEN abs(min({dd_s})) > 0 THEN ({cagr}) / abs(min({dd_s}))"
         " ELSE 0.0D END AS calmar_ratio",
         # win_rate: wins / non-zero periods (metrics.py:166-178)
         f"CASE WHEN {nonzero} > 0 THEN sum(CAST({r} > 0 AS BIGINT)) / "
@@ -173,7 +184,8 @@ def compute_metrics(
         # satisfies that clustering, so both extra windows ride the ONE
         # existing exchange as additional sorts, and the streak maxes
         # join the main aggregation for free.
-        flag, grp, streak, streak_aggs = _streak_sql(r, group, ts_col)
+        flag, grp, streak, streak_aggs = _streak_sql(
+            r, group, ts_col, streak_names)
         batch1.append(flag)
         batch2.append(grp)
         batch3.append(streak)
@@ -193,7 +205,9 @@ def consecutive_streaks(
     (metrics.py:208-238) — the same staging as ``compute_metrics``'s
     streak columns, as a standalone aggregate."""
     group = list(group)
-    flag, grp, streak, aggs = _streak_sql(sql_ident(returns_col), group, ts_col)
+    flag, grp, streak, aggs = _streak_sql(
+        sql_ident(returns_col), group, ts_col,
+        _fresh(results, "_flag", "_grp", "_streak"))
     df = (results.selectExpr("*", flag).selectExpr("*", grp)
           .selectExpr("*", streak))
     return _agg(df, group, aggs)

@@ -6,32 +6,17 @@ Beyond-reference operators (SURVEY §7.6): images/audio/video ride as
 resize / frame-sample run as mapInPandas stages so each Arrow batch crosses
 the Python boundary once.
 
-Decode status (r5): **every common web image format decodes for real**
-with pure numpy/stdlib — BMP (24/32-bit BI_RGB, bottom-up or top-down),
-binary PPM/PGM (P6/P5), baseline sequential JFIF (operators/jpeg.py:
-arbitrary DQT/DHT, 4:4:4/4:2:2/4:4:0/4:2:0 sampling, restart markers),
-and PNG (operators/png.py: all 5 filters, grey/RGB/palette/alpha color
-types at depths 1/2/4/8/16, tRNS, multi-IDAT, Adam7 interlace). The
-:func:`image_features` / :func:`resize_images` real paths need no PIL
-for those — progressive JPEG and Adam7 PNG decode natively (r6); the
-residual exotics (12-bit / arithmetic-coded / CMYK JPEG) raise and fall
-through to PIL when importable.
-
-Dispatch preference (r7): :func:`decode_image_array` takes
-``prefer="fast"|"native"`` (env ``SPARK_GRAFT_IMAGE_DECODER``, default
-``"fast"``). Under ``"fast"`` a cluster with Pillow installed decodes
-JPEG/PNG through libjpeg-turbo/libpng at ~50-100 MB/s/core with no plan
-change; the pure-numpy kernels are the dependency-free fallback (the
-only path in this PIL-less container) and the deterministic
-verification twin under ``"native"`` (what the codec goldens pin).
+Image decode covers the uncompressed raster formats only, with pure
+numpy: BMP (24/32-bit BI_RGB, bottom-up or top-down) and binary PPM/PGM
+(P6/P5). Any other payload raises ``NotImplementedError`` from
+:func:`decode_image_array`; :func:`image_features` turns that into a
+``decode_ok = false`` row instead of failing the batch.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 import struct
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -42,29 +27,6 @@ from pyspark.sql import functions as F
 
 DECODE_SCHEMA = ("media_id long, kind string, n_bytes int, sha256 string, "
                  "width int, height int, feature_norm double")
-
-
-def _try_import_pil():
-    try:
-        from PIL import Image  # noqa: F401
-
-        return Image
-    except ImportError:
-        return None
-
-
-def decode_image(content: bytes) -> "object":
-    """PIL decode path — only needed for compressed formats; BMP/PPM/PGM
-    decode without it via :func:`decode_image_array`."""
-    Image = _try_import_pil()
-    if Image is None:
-        raise NotImplementedError(
-            "compressed-image decode requires PIL/Pillow; BMP and binary "
-            "PPM/PGM decode natively via decode_image_array"
-        )
-    import io
-
-    return Image.open(io.BytesIO(content))
 
 
 # ------------------------------------------------- pure-numpy image codecs
@@ -165,137 +127,23 @@ def encode_ppm(arr: np.ndarray) -> bytes:
     return magic + f"\n{w} {h}\n255\n".encode() + arr.tobytes()
 
 
-#: env knob for the compressed-format dispatch order ("fast" | "native").
-#: Read on the EXECUTORS — on a real cluster set it through
-#: ``spark.executorEnv.SPARK_GRAFT_IMAGE_DECODER`` (local mode inherits
-#: the driver's environment).
-PREFER_ENV = "SPARK_GRAFT_IMAGE_DECODER"
+def decode_image_array(content: bytes) -> np.ndarray:
+    """Decode a BMP or binary PPM/PGM payload to an (H, W, C) uint8 array.
 
-
-def _resolve_prefer(prefer: str | None) -> str:
-    """Resolve + validate the decode dispatch preference.
-
-    Raises ``TypeError`` (NOT ValueError) on an invalid value: a typo'd
-    ``SPARK_GRAFT_IMAGE_DECODER`` is a CONFIG error, and ValueError is in
-    :func:`image_features`' per-row catch tuple — raising it per row would
-    silently mark every image ``decode_ok=false`` with no error signal
-    (r8 ADVICE). TypeError escapes the catch, so a bad executor env fails
-    the task loudly; :func:`image_features` additionally resolves the
-    driver-visible value eagerly so local/driver-set typos fail before
-    any Spark job is launched."""
-    if prefer is None:
-        prefer = os.environ.get(PREFER_ENV, "fast")
-    if prefer not in ("fast", "native"):
-        raise TypeError(
-            f"image decoder prefer={prefer!r}: expected 'fast' or "
-            f"'native' (check the {PREFER_ENV} env value)"
-        )
-    return prefer
-
-
-def decode_image_array(content: bytes, prefer: str | None = None,
-                       upsample: str = "box") -> np.ndarray:
-    """Dispatch decode to an (H, W, C) uint8 array.
-
-    BMP / binary PPM / PGM always decode natively (header + frombuffer —
-    no library beats that). For the compressed formats (JPEG, PNG) the
-    dispatch order is selected by ``prefer`` (default: env
-    ``SPARK_GRAFT_IMAGE_DECODER``, else ``"fast"``):
-
-    * ``"fast"`` — try PIL/Pillow FIRST when importable: libjpeg-turbo
-      decodes at ~50-100 MB/s/core vs the pure-Python kernels' ~2.7 MB/s
-      aggregate (BENCH r6 codec row), so a production cluster that has
-      Pillow installed takes the fast path with no plan change. The pure
-      decoders remain the dependency-free fallback — and the only path
-      in this container, which ships no PIL.
-    * ``"native"`` — pure-numpy decoders first (operators/jpeg.py,
-      operators/png.py: deterministic, golden-pinned — what the codec
-      parity tests and fixtures run); PIL only for what they reject
-      (12-bit / arithmetic-coded / CMYK JPEG, exotic PNG color modes).
-
-    ``upsample`` selects the native JPEG chroma filter ("box" default —
-    golden-pinned; "triangle" matches libjpeg/ImageIO, see
-    ``jpeg._upsample_plane``); the PIL path ignores it (PIL always
-    upsamples fancy).
-
-    Either way a decode failure on one path falls through to the other;
-    a payload neither path can decode raises ``ValueError`` (PIL present,
-    bytes undecodable) or ``NotImplementedError`` (format needs the
-    absent library) — both inside :func:`image_features`' per-row catch,
-    so one corrupt image never fails a whole Spark task.
-    """
-    prefer = _resolve_prefer(prefer)
+    Any other payload raises ``NotImplementedError``, which
+    :func:`image_features` catches per row."""
     head = bytes(content[:2])
     if head == b"BM":
         return decode_bmp(bytes(content))
     if head in (b"P6", b"P5"):
         return decode_ppm(bytes(content))
-    is_jpeg = head == b"\xff\xd8"
-    is_png = bytes(content[:8]) == b"\x89PNG\r\n\x1a\n"
-    pil_tried = False
-    if prefer == "fast" and (is_jpeg or is_png):
-        Image = _try_import_pil()
-        if Image is not None:
-            import io
-
-            pil_tried = True
-            try:
-                img = Image.open(io.BytesIO(bytes(content)))
-                return np.asarray(img.convert("RGB"))
-            except (OSError, ValueError, SyntaxError):
-                # the classes PIL raises for unreadable images
-                # (UnidentifiedImageError is an OSError); anything else
-                # (e.g. DecompressionBombError -> MemoryError paths)
-                # should propagate, not silently retry on the slow
-                # pure-Python kernels.
-                pass  # corrupt-for-PIL -> give the native kernels a try
-    if is_jpeg:
-        from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (  # noqa: E501
-            jpeg,
-        )
-
-        try:
-            return jpeg.decode_jpeg(bytes(content), upsample=upsample)
-        except NotImplementedError:
-            pass  # 12-bit / arithmetic / CMYK -> PIL fallback below
-        except (ValueError, IndexError, KeyError, struct.error):
-            # truncated/corrupt entropy stream, or a scan referencing an
-            # undefined DQT/DHT table id (KeyError) -> let PIL try
-            pass
-    if is_png:
-        from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (  # noqa: E501
-            png,
-        )
-
-        try:
-            return png.decode_png(bytes(content))
-        except NotImplementedError:
-            pass  # exotic color modes -> PIL fallback below
-        except (ValueError, IndexError, KeyError, struct.error, zlib.error):
-            pass  # corrupt chunk/deflate stream -> let PIL try
-    if pil_tried:
-        # PIL already failed on these exact bytes under prefer="fast";
-        # re-running Image.open would just repeat a full failed decode.
-        raise ValueError(
-            "image payload undecodable by both PIL and the native kernels"
-        )
-    try:
-        img = decode_image(bytes(content))  # PIL path (raises w/o PIL)
-        return np.asarray(img.convert("RGB"))
-    except (OSError, ValueError, SyntaxError) as exc:
-        # Image.open raises UnidentifiedImageError (an OSError) at open
-        # time and defers further decode work to .convert/.load — keep
-        # the "undecodable payload" contract a per-row error, never a
-        # task-killer (OSError would otherwise escape image_features'
-        # catch tuple on exactly the PIL-equipped production cluster).
-        raise ValueError(
-            f"image payload undecodable by both paths: {exc}"
-        ) from exc
+    raise NotImplementedError(
+        "image decode supports BMP and binary PPM/PGM (P6/P5) only")
 
 
 def resize_nearest(arr: np.ndarray, w: int, h: int) -> np.ndarray:
     """Deterministic nearest-neighbor resize (floor index mapping) —
-    library-free so the real resize path has no PIL dependency."""
+    library-free so the real resize path needs no image library."""
     sh, sw = arr.shape[:2]
     ri = (np.arange(h) * sh) // h
     ci = (np.arange(w) * sw) // w
@@ -310,8 +158,9 @@ def media_features(
     """Per-item features over the binary column via mapInPandas.
 
     Deterministic stub stats (size, sha256, a pseudo 'feature_norm' from the
-    digest) keep the pipeline testable; ``use_real_decoder=True`` switches to
-    the PIL path (raises here, by design). Partitioning note: binary rows are
+    digest) keep the pipeline testable; ``use_real_decoder=True`` takes
+    width/height from :func:`decode_image_array` instead, which raises on
+    any payload that is not BMP/PPM/PGM. Partitioning note: binary rows are
     large — size ``spark.sql.files.maxPartitionBytes`` / repartition so an
     Arrow batch (~batch_size_hint rows) fits executor memory.
     """
@@ -327,7 +176,6 @@ def media_features(
                     lambda b: hashlib.sha256(b or b"").hexdigest()),
             })
             if use_real_decoder:
-                # numpy decode for BMP/PPM/PGM; PIL only for compressed
                 arrs = pdf["content"].map(
                     lambda b: decode_image_array(bytes(b or b"")))
                 out["width"] = arrs.map(
@@ -354,39 +202,25 @@ IMAGE_FEATURES_SCHEMA = (
 )
 
 
-def image_features(media: DataFrame, prefer: str | None = None) -> DataFrame:
+def image_features(media: DataFrame) -> DataFrame:
     """REAL per-image decode + channel statistics over the binary column
     (the image twin of :func:`audio_features`): BMP/PPM/PGM payloads are
-    decoded with pure numpy; rows whose format needs an absent library
+    decoded with pure numpy; rows in any other format, or corrupt ones,
     come back with ``decode_ok = false`` instead of failing the batch.
 
     Stats are computed from integer pixel sums (exact, order-free) so the
     outputs are bit-deterministic across partitionings — golden-pinnable.
-    ``prefer`` follows :func:`decode_image_array`: the golden-pinned
-    queries pass ``"native"`` (JPEG decoders legally differ by ±1/sample
-    in IDCT rounding, so a libjpeg path would shift pinned channel
-    means); the bench row keeps the env default to measure the
-    production dispatch. mapInPandas: one Python crossing per Arrow
-    batch; at 100 TB the only sizing concern is rows-per-batch vs
-    payload size, same as audio."""
-    # fail-fast on the driver: a typo'd prefer/env must not become a
-    # silent all-rows decode_ok=false run (r8 ADVICE). When prefer is
-    # None the executors re-resolve their own env (which may legitimately
-    # differ from the driver's), so validate WITHOUT rebinding — the
-    # closure must ship prefer=None, not the driver's env resolution
-    # (r9 ADVICE). An invalid executor value raises TypeError there —
-    # outside the per-row catch tuple below.
-    if prefer is not None or os.environ.get(PREFER_ENV) is not None:
-        _resolve_prefer(prefer)
+    mapInPandas: one Python crossing per Arrow batch; at 100 TB the only
+    sizing concern is rows-per-batch vs payload size, same as audio."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for mid, b in zip(pdf["media_id"], pdf["content"]):
                 try:
-                    arr = decode_image_array(bytes(b or b""), prefer=prefer)
+                    arr = decode_image_array(bytes(b or b""))
                 except (ValueError, NotImplementedError, struct.error,
-                        IndexError, OSError):
+                        IndexError):
                     rows.append((mid, None, None, None, None, None, None,
                                  None, False))
                     continue
@@ -425,9 +259,8 @@ def resize_images(
     feature extraction in a vision-training pipeline).
 
     Real path (``use_real_decoder=True``): decode -> nearest-neighbor
-    resize -> re-encode inside the UDF. BMP/PPM/PGM payloads do this with
-    pure numpy (no PIL needed — REAL in this container); other formats
-    fall back to PIL and raise without it. Stub path: passes the payload
+    resize -> re-encode inside the UDF, in pure numpy, for BMP/PPM/PGM
+    payloads; any other format raises. Stub path: passes the payload
     through untouched and stamps the target dims + ``resized`` flag,
     keeping the batch shape, schema, and binary round-trip through Arrow
     real. Items already at target size pass through with
@@ -442,7 +275,6 @@ def resize_images(
                 & (pdf["height"] == target_height)
             ).fillna(False)
             if use_real_decoder:
-                # PIL path: decode/resize/re-encode each image payload
                 pdf["content"] = pdf.apply(
                     lambda r: _resize_one(
                         r["content"], target_width, target_height)
@@ -465,19 +297,11 @@ def resize_images(
 
 
 def _resize_one(content: bytes, w: int, h: int) -> bytes:
-    """Real decode->resize->re-encode. Numpy path for BMP/PPM/PGM
-    (re-encodes in the SAME format); PIL (PNG out) for anything else."""
-    head = bytes(content[:2])
-    if head in (b"BM", b"P6", b"P5"):
-        arr = decode_image_array(content)
-        small = resize_nearest(arr, w, h)
-        return encode_bmp(small) if head == b"BM" else encode_ppm(small)
-    img = decode_image(content)
-    import io
-
-    buf = io.BytesIO()
-    img.resize((w, h)).save(buf, format="PNG")
-    return buf.getvalue()
+    """Real decode->resize->re-encode in the SAME format (BMP/PPM/PGM)."""
+    small = resize_nearest(decode_image_array(content), w, h)
+    if bytes(content[:2]) == b"BM":
+        return encode_bmp(small)
+    return encode_ppm(small)
 
 
 AUDIO_SCHEMA = ("media_id long, n_bytes int, n_samples int, "
@@ -582,177 +406,3 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
     )
 
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def synthetic_jpeg_images(spark, n: int = 10) -> DataFrame:
-    """Deterministic REAL JPEG table: seeded gradient rasters encoded by
-    the pure-numpy baseline encoder (operators/jpeg.py) across the
-    sampling/quality/restart matrix — 4:4:4, 4:2:0, 4:2:2, 4:4:0,
-    grayscale, and a restart-interval variant. Every payload decodes
-    through the same ``decode_image_array`` dispatch the corpus pipeline
-    uses; encode is bit-deterministic so the feature outputs golden-pin."""
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (
-        jpeg,
-    )
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.schemas import (
-        MEDIA_SCHEMA,
-    )
-
-    variants = [
-        (90, False, 0), (85, True, 0), (85, "422", 0),
-        (85, "440", 0), (75, True, 3), (95, False, 1),
-    ]
-    rows = []
-    for i in range(n):
-        w = 17 + (i * 11) % 24
-        h = 11 + (i * 7) % 18
-        yy, xx = np.mgrid[0:h, 0:w]
-        r = ((xx * 255) // max(w - 1, 1)).astype(np.uint8)
-        g = ((yy * 255) // max(h - 1, 1)).astype(np.uint8)
-        b = (((xx * 2 + yy * 3 + i) % 32) * 8).astype(np.uint8)
-        q, sub, ri = variants[i % len(variants)]
-        if i % 7 == 6:  # grayscale leg
-            payload = jpeg.encode_jpeg(r, quality=q,
-                                       restart_interval=ri)
-        else:
-            arr = np.stack([r, g, b], axis=-1)
-            payload = jpeg.encode_jpeg(arr, quality=q, subsample=sub,
-                                       restart_interval=ri)
-        rows.append((i, "image", bytearray(payload), "synth/jpeg",
-                     w, h, None, {"q": str(q), "sub": str(sub)}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def synthetic_png_images(spark, n: int = 8) -> DataFrame:
-    """Deterministic REAL PNG table (lossless twin of the JPEG fixture):
-    RGB and grayscale rasters from the pure-stdlib encoder, plus
-    hand-assembled palette and RGBA payloads exercising the PLTE/tRNS
-    and alpha-compositing decode paths through the same dispatch."""
-    import struct
-    import zlib
-
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (
-        png,
-    )
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.schemas import (
-        MEDIA_SCHEMA,
-    )
-
-    def chunk(tag, pl):
-        return (struct.pack(">I", len(pl)) + tag + pl
-                + struct.pack(">I", zlib.crc32(tag + pl) & 0xFFFFFFFF))
-
-    rows = []
-    for i in range(n):
-        w = 15 + (i * 9) % 22
-        h = 10 + (i * 6) % 15
-        yy, xx = np.mgrid[0:h, 0:w]
-        r = ((xx * 13 + i) % 256).astype(np.uint8)
-        g = ((yy * 19) % 256).astype(np.uint8)
-        b = ((xx + yy * 2) % 256).astype(np.uint8)
-        leg = i % 4
-        if leg == 0:  # RGB
-            payload = png.encode_png(np.stack([r, g, b], axis=-1))
-        elif leg == 1:  # grayscale
-            payload = png.encode_png(r)
-        elif leg == 2:  # palette (4 colors, no alpha)
-            pal = np.array([[250, 10, 10], [10, 250, 10],
-                            [10, 10, 250], [120, 120, 120]],
-                           dtype=np.uint8)
-            idx = ((xx + yy + i) % 4).astype(np.uint8)
-            raw = bytearray()
-            for row in idx:
-                raw.append(0)
-                raw += row.tobytes()
-            payload = (b"\x89PNG\r\n\x1a\n"
-                       + chunk(b"IHDR", struct.pack(
-                           ">IIBBBBB", w, h, 8, 3, 0, 0, 0))
-                       + chunk(b"PLTE", pal.tobytes())
-                       + chunk(b"IDAT", zlib.compress(bytes(raw), 6))
-                       + chunk(b"IEND", b""))
-        else:  # RGBA with a deterministic alpha ramp
-            a = ((xx * 255) // max(w - 1, 1)).astype(np.uint8)
-            px = np.stack([r, g, b, a], axis=-1)
-            raw = bytearray()
-            for row in px:
-                raw.append(0)
-                raw += row.tobytes()
-            payload = (b"\x89PNG\r\n\x1a\n"
-                       + chunk(b"IHDR", struct.pack(
-                           ">IIBBBBB", w, h, 8, 6, 0, 0, 0))
-                       + chunk(b"IDAT", zlib.compress(bytes(raw), 6))
-                       + chunk(b"IEND", b""))
-        rows.append((i, "image", bytearray(payload), "synth/png",
-                     w, h, None, {"leg": str(leg)}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def synthetic_media_corpus(spark, n: int = 384, min_w: int = 160,
-                           max_w: int = 320) -> DataFrame:
-    """Bench-scale REAL image corpus: ``n`` seeded rasters encoded IN
-    PARALLEL on the executors (mapInPandas over ``spark.range``) as a
-    2:1 mix of JPEG (baseline + progressive, the sampling/quality
-    matrix) and PNG (rgb / grayscale). Unlike
-    :func:`synthetic_jpeg_images` (driver-built, golden-sized), this
-    exists for codec THROUGHPUT measurement — the payloads are
-    web-thumbnail-sized so a decode sweep moves real megapixels.
-    Deterministic per (media_id): same n -> same corpus."""
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.schemas import (
-        MEDIA_SCHEMA,
-    )
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (  # noqa: E501
-            jpeg, png,
-        )
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                rng = np.random.default_rng(1_000_003 * i + 7)
-                w = min_w + (i * 37) % (max_w - min_w + 1)
-                h = int(w * 3 / 4)
-                base = rng.integers(0, 256, (5, 5, 3)).astype(np.float64)
-                # low-frequency field (JPEG's design domain) + mild noise
-                ys = np.linspace(0, 4, h)
-                xs = np.linspace(0, 4, w)
-                yi, xi = np.floor(ys).astype(int), np.floor(xs).astype(int)
-                yf, xf = (ys - yi)[:, None, None], (xs - xi)[None, :, None]
-                yi2 = np.minimum(yi + 1, 4)
-                xi2 = np.minimum(xi + 1, 4)
-                arr = ((1 - yf) * (1 - xf) * base[yi][:, xi]
-                       + (1 - yf) * xf * base[yi][:, xi2]
-                       + yf * (1 - xf) * base[yi2][:, xi]
-                       + yf * xf * base[yi2][:, xi2])
-                arr = np.clip(
-                    arr + rng.normal(0, 6, (h, w, 3)), 0, 255
-                ).astype(np.uint8)
-                kind = i % 6
-                if kind == 0:
-                    payload = jpeg.encode_jpeg(arr, 85, True)
-                    mime = "image/jpeg"
-                elif kind == 1:
-                    payload = jpeg.encode_jpeg(arr, 75, "422",
-                                               restart_interval=4)
-                    mime = "image/jpeg"
-                elif kind == 2:
-                    payload = jpeg.encode_jpeg_progressive(arr, 85, True)
-                    mime = "image/jpeg"
-                elif kind == 3:
-                    payload = jpeg.encode_jpeg_progressive(arr, 90, False)
-                    mime = "image/jpeg"
-                elif kind == 4:
-                    payload = png.encode_png(arr)
-                    mime = "image/png"
-                else:
-                    payload = png.encode_png(arr[..., 0])
-                    mime = "image/png"
-                rows.append((i, "image", payload, mime, w, h, None, {}))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "kind", "content", "mime_type",
-                "width", "height", "duration_ms", "meta"])
-
-    seeds = spark.range(n).repartition(
-        spark.sparkContext.defaultParallelism)
-    return seeds.mapInPandas(_gen, MEDIA_SCHEMA)

@@ -7024,7 +7024,7 @@ def q145(spark, sf_dir):
 
     ensure_package_on_executors(spark)
     media = mm_ops.synthetic_images(spark, 12)
-    feats = mm_ops.image_features(media, prefer="native")
+    feats = mm_ops.image_features(media)
     return feats.select(
         "media_id", "width", "height", "n_channels",
         F.round("mean_r", 6).alias("mean_r"),
@@ -8311,94 +8311,6 @@ def q170(spark, sf_dir):
               & (F.col("unit_cost") == F.col("_best")))
         .join(keep, F.col("p_partkey") == F.col("l_partkey"))
         .select("p_partkey", "s_name", "nation", "s_acctbal", "unit_cost")
-    )
-
-
-_GOLDENS['q171'] = (
-    ['media_id', 'width', 'height', 'n_channels',
-     'mean_r', 'mean_g', 'mean_b', 'std_gray', 'decode_ok'],
-    [
-        (0, 17, 11, 3, 127.197861, 127.13369, 123.326203, 45.880532, 1),
-        (1, 28, 18, 3, 127.19246, 127.236111, 125.680556, 42.002233, 1),
-        (2, 39, 25, 3, 126.932308, 127.225641, 122.872821, 42.231937, 1),
-        (3, 26, 14, 3, 127.343407, 127.038462, 123.315934, 41.967016, 1),
-        (4, 37, 21, 3, 127.379665, 127.190476, 124.357786, 41.901678, 1),
-        (5, 24, 28, 3, 126.998512, 127.050595, 125.550595, 43.707843, 1),
-        (6, 35, 17, 3, 127.228571, 127.228571, 127.228571, 75.688114, 1),
-        (7, 22, 24, 3, 127.142045, 127.007576, 124.102273, 40.375092, 1),
-        (8, 33, 13, 3, 127.025641, 127.058275, 123.333333, 42.755493, 1),
-        (9, 20, 20, 3, 127.2475, 126.7175, 125.1925, 41.534146, 1),
-    ])
-
-
-@_register("q171_jpeg_decode_features", _golden_sql("q171"))
-def q171(spark, sf_dir):
-    """REAL baseline-JPEG decode end-to-end (closes the r4 VERDICT
-    "what's missing #2" — compressed formats needed PIL): deterministic
-    rasters encoded by the pure-numpy baseline encoder across the
-    sampling matrix (4:4:4 / 4:2:0 / 4:2:2 / 4:4:0, a grayscale leg,
-    quality 75-95, restart intervals 0/1/3), then decoded through the
-    SAME decode_image_array dispatch + image_features mapInPandas stage
-    as the BMP/netpbm corpus (q145 stays frozen on the uncompressed
-    set). Both codec directions are bit-deterministic, so the features
-    golden-pin; media_id 6 is the grayscale leg (equal channel means,
-    the decode contract's channel replication)."""
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.session import (
-        ensure_package_on_executors,
-    )
-
-    ensure_package_on_executors(spark)
-    media = mm_ops.synthetic_jpeg_images(spark, 10)
-    feats = mm_ops.image_features(media, prefer="native")
-    return feats.select(
-        "media_id", "width", "height", "n_channels",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        F.round("std_gray", 6).alias("std_gray"),
-        F.col("decode_ok").cast("int").alias("decode_ok"),
-    )
-
-
-_GOLDENS['q172'] = (
-    ['media_id', 'width', 'height', 'n_channels',
-     'mean_r', 'mean_g', 'mean_b', 'std_gray', 'decode_ok'],
-    [
-        (0, 15, 10, 3, 91.0, 85.5, 16.0, 28.473997, 1),
-        (1, 24, 16, 3, 107.833333, 107.833333, 107.833333, 78.146053, 1),
-        (2, 33, 22, 3, 97.410468, 97.410468, 97.741047, 13.002288, 1),
-        (3, 20, 13, 3, 213.65, 184.842308, 140.419231, 41.124612, 1),
-        (4, 29, 19, 3, 106.551724, 103.631579, 32.0, 35.951679, 1),
-        (5, 16, 10, 3, 102.5, 102.5, 102.5, 59.927039, 1),
-        (6, 25, 16, 3, 97.5, 97.5, 97.5, 12.990381, 1),
-        (7, 34, 22, 3, 191.794118, 180.945187, 149.541444, 50.802565, 1),
-    ])
-
-
-@_register("q172_png_decode_features", _golden_sql("q172"))
-def q172(spark, sf_dir):
-    """REAL PNG decode end-to-end — the lossless twin of q171: RGB and
-    grayscale payloads from the pure-stdlib encoder plus hand-assembled
-    palette (PLTE) and RGBA (alpha-over-white) payloads, decoded through
-    the SAME decode_image_array dispatch + image_features mapInPandas
-    stage. With JPEG (q171) this covers both formats that dominate web
-    image corpora, zero image libraries required; goldens are exact
-    because PNG is lossless (legs 1/2 show the equal-channel and
-    palette-uniform signatures)."""
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.session import (
-        ensure_package_on_executors,
-    )
-
-    ensure_package_on_executors(spark)
-    media = mm_ops.synthetic_png_images(spark, 8)
-    feats = mm_ops.image_features(media, prefer="native")
-    return feats.select(
-        "media_id", "width", "height", "n_channels",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        F.round("std_gray", 6).alias("std_gray"),
-        F.col("decode_ok").cast("int").alias("decode_ok"),
     )
 
 

@@ -190,14 +190,18 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
         # key includes (r12 ADVICE): the Python session identity — a
         # spark.newSession() sibling shares applicationId but must not
         # reuse a DataFrame bound to (and register views on) the other
-        # session — and, for directory-style datasets, the newest entry
-        # stat, because an in-place part-file overwrite can leave the
-        # directory's own stat unchanged.
+        # session — and, for a flat parquet directory, the stats of its
+        # direct entries, because an in-place part-file overwrite can
+        # leave the directory's own stat unchanged. Partition
+        # subdirectories are not scanned.
         inner = (0, 0, 0)
         if os.path.isdir(path):
             mt = sz = cnt = 0
             for e in os.scandir(path):
-                s = e.stat()
+                try:
+                    s = e.stat()
+                except FileNotFoundError:
+                    continue  # deleted by a concurrent rewrite
                 mt = max(mt, s.st_mtime_ns)
                 sz += s.st_size
                 cnt += 1

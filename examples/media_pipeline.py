@@ -1,6 +1,6 @@
 """Multimodal preprocessing pipeline on binary columns — REAL decode.
 
-r4: BMP/PPM/PGM images decode with pure numpy (no PIL), exactly as the
+r4: BMP/PPM/PGM images decode with pure numpy, exactly as the
 audio path decodes raw PCM16. This example runs the full vision-prep
 shape a training pipeline needs:
 

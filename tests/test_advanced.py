@@ -568,8 +568,8 @@ def test_multimodal_plumbing(spark):
 
 
 def test_multimodal_real_decoder_stub(spark):
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"notanimage")
+    with pytest.raises(NotImplementedError, match="BMP and binary PPM/PGM"):
+        multimodal.decode_image_array(b"notanimage")
 
 
 def test_multimodal_resize_plumbing(spark):
@@ -590,7 +590,7 @@ def test_multimodal_resize_plumbing(spark):
         else:
             assert (r.width, r.height) == (w, h)
             assert not r.resized
-    # real-decoder path raises without PIL, same as decode_image
+    # real-decoder path raises on non-BMP/PPM bytes, like decode_image_array
     with pytest.raises(Exception):
         multimodal.resize_images(
             media, use_real_decoder=True).collect()

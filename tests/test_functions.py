@@ -409,7 +409,8 @@ def test_curate_corpus_sql_twin_bit_equal(spark):
         return struct.pack(">d", v) if isinstance(v, float) else v
 
     for langs in (("en",), ("en", "de", "es", "fr"), None):
-        for min_tok, min_alpha in ((10, 0.5), (1, 0.0), (3, 0.25)):
+        for min_tok, min_alpha in ((10, 0.5), (1, 0.0), (3, 0.25),
+                                   (13.5, 0.0)):
             a = old_curate(docs, min_tok, 1_000_000, min_alpha,
                            langs).orderBy("doc_id").collect()
             b = corpus.curate_corpus(

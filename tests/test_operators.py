@@ -279,6 +279,12 @@ def test_streaks_and_drawdown_match_metrics(spark, tick_sdf):
         assert r.max_consecutive_losses == m[r.symbol].max_consecutive_losses
     for r in dd:
         assert r.dd == m[r.symbol].max_drawdown
+    # caller columns named like the internal staging columns pass through
+    clash = res.withColumn("_dd", F.lit(-9.0)).withColumn("_flag", F.lit(7))
+    assert {r.symbol: r for r in
+            metrics_ops.compute_metrics(clash).collect()} == m
+    assert sorted(metrics_ops.consecutive_streaks(clash).collect()) == \
+        sorted(streaks)
 
 
 def test_multi_asset_portfolio(spark, tick_sdf):

@@ -178,6 +178,8 @@ def test_image_features_real_decode(spark):
 
 
 def test_image_features_flags_undecodable(spark):
+    from pyspark.sql import functions as F
+
     from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (
         multimodal as mm,
     )
@@ -186,10 +188,16 @@ def test_image_features_flags_undecodable(spark):
     )
 
     ensure_package_on_executors(spark)
-    media = mm.synthetic_media(spark, 12)  # opaque fake bytes
+    # opaque fake bytes plus one real BMP (media_id 100), in one batch
+    bmp = mm.synthetic_images(spark, 1).withColumn(
+        "media_id", F.lit(100).cast("long"))
+    media = mm.synthetic_media(spark, 12).unionByName(bmp).coalesce(1)
     rows = mm.image_features(media).collect()
-    assert rows and all(not r["decode_ok"] for r in rows)
-    assert all(r["width"] is None for r in rows)
+    bad = [r for r in rows if r["media_id"] != 100]
+    assert bad and all(not r["decode_ok"] for r in bad)
+    assert all(r["width"] is None for r in bad)
+    (good,) = [r for r in rows if r["media_id"] == 100]
+    assert good["decode_ok"] and (good["width"], good["height"]) == (13, 9)
 
 
 def test_resize_images_real_path(spark):

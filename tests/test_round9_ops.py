@@ -436,54 +436,3 @@ def test_spark_digest_chunked_matches_monolithic(spark, sf_dir):
     assert mono[0] > 0
     assert spark_digest_chunked(sdf, "doc_id", 5) == mono
     assert spark_digest_chunked(sdf, "doc_id", 24) == mono
-
-
-def test_dispatch_threads_upsample_to_native_jpeg():
-    """decode_image_array(upsample=...) reaches the native JPEG kernel
-    (PNG/BMP have no chroma subsampling — unaffected)."""
-    import numpy as np
-
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (
-        jpeg,
-        multimodal,
-    )
-
-    img = np.zeros((16, 16, 3), np.uint8)
-    img[:, :8] = [255, 0, 0]
-    img[:, 8:] = [0, 0, 255]
-    payload = jpeg.encode_jpeg(img, quality=85)
-    box = multimodal.decode_image_array(payload, prefer="native")
-    tri = multimodal.decode_image_array(payload, prefer="native",
-                                        upsample="triangle")
-    assert box.shape == tri.shape == (16, 16, 3)
-    assert not np.array_equal(box, tri)  # 4:2:0 edge differs by filter
-    assert np.array_equal(
-        box, jpeg.decode_jpeg(payload))  # default stays box
-
-
-@pytest.mark.parametrize("mode", ["422", "440", "420"])
-def test_triangle_upsample_all_subsampling_modes(mode):
-    """Triangle upsampling must handle asymmetric factors (4:2:2 h-only,
-    4:4:0 v-only) — the f=2 weights are exactly 3/4, 1/4 with edge
-    replication, per libjpeg's fancy filter."""
-    import numpy as np
-
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import jpeg
-
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, (24, 32, 3)).astype(np.uint8)
-    payload = jpeg.encode_jpeg(img, quality=85, subsample=mode)
-    box = jpeg.decode_jpeg(payload)
-    tri = jpeg.decode_jpeg(payload, upsample="triangle")
-    assert box.shape == tri.shape == (24, 32, 3)
-    assert not np.array_equal(box, tri)
-    # both remain within lossy range of the source
-    for out in (box, tri):
-        d = np.abs(out.astype(np.int64) - img.astype(np.int64))
-        # pure NOISE is the worst case for lossy chroma subsampling
-        # (4:2:0 keeps 1/4 of the chroma samples): observed means
-        # ~33 (422/440), ~44 (420) at q85 — sanity bound, not a pin
-        assert d.mean() < 60
-    # exact filter weights on a synthetic column
-    col = jpeg._tri_axis(np.array([[0.0], [4.0]]), 2, 0)
-    assert np.allclose(col.ravel(), [0.0, 1.0, 3.0, 4.0])

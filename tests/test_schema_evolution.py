@@ -113,6 +113,31 @@ def test_documents_passthrough(spark, tmp_path):
     assert docs.collect()[0].text == "hello world"
 
 
+def test_directory_entry_vanishing_mid_scan(spark, tmp_path, monkeypatch):
+    """A part file deleted between the directory listing and its stat (a
+    concurrent rewrite) is skipped by the freshness scan, not raised."""
+    d = tmp_path / "documents.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"doc_id": pa.array([1], pa.int64()),
+                             "text": pa.array(["hello world"])}),
+                   str(d / "part-0.parquet"))
+
+    class Vanished:
+        def stat(self):
+            raise FileNotFoundError("part-1.parquet")
+
+    real_scandir = os.scandir
+
+    def scandir(path="."):
+        if os.path.realpath(path) != os.path.realpath(d):
+            return real_scandir(path)
+        return iter([*real_scandir(path), Vanished()])
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    docs = load_tables(spark, str(tmp_path), ["documents"])["documents"]
+    assert docs.collect()[0].text == "hello world"
+
+
 @pytest.mark.parametrize(
     "label,arr",
     [
