@@ -99,29 +99,52 @@ def unroll_row_bound(decay: float) -> int:
     10% safety margin (ln(DBL_MAX) ≈ 709.78). The validity envelope of
     every closed-form unroll in this module: ~6,000 rows at beta=0.90,
     ~10,300 at lam=0.94. ``decay >= 1`` (the EWMA boundary / IGARCH
-    parameterizations) has NO valid unroll — bound 0, so ``engine="auto"``
-    always takes the recursion there."""
+    parameterizations) and ``decay <= 0`` (``lam=0``, ARCH(1)) have NO
+    valid unroll — bound 0, so the recursion always runs there."""
     import math
 
     decay = float(decay)
-    if decay >= 1.0:
+    if decay <= 0.0 or decay >= 1.0:
         return 0
     return int(0.9 * 709.78 / math.log(1.0 / decay))
 
 
-def _max_rows_per_key(df: DataFrame, symbol_col: str) -> int:
-    """1-scalar driver boundary backing the auto engine choice. Costs one
-    eager count aggregation over the input — callers on hot paths that
-    KNOW their per-key cardinality should pass engine= explicitly."""
-    row = df.groupBy(symbol_col).count().agg(F.max("count")).first()
-    return int(row[0] or 0)
+def _fits_unroll(with_r: DataFrame, symbol_col: str, decay: float) -> bool:
+    """The unroll-or-recursion choice: the closed form runs only when every
+    key's row count is inside :func:`unroll_row_bound`. Checking that
+    costs one eager count aggregation (1 scalar to the driver), skipped
+    when the bound is 0."""
+    bound = unroll_row_bound(decay)
+    if bound == 0:
+        return False
+    row = with_r.groupBy(symbol_col).count().agg(F.max("count")).first()
+    return int(row[0] or 0) <= bound
+
+
+def _require_nonnegative(**params: float) -> None:
+    for name, value in params.items():
+        if float(value) < 0.0:
+            raise ValueError(f"{name}={value}: must be >= 0")
+
+
+def _returns(bars: DataFrame, close_col: str, symbol_col: str,
+             ts_col: str) -> DataFrame:
+    """``(symbol, ts, close, r)`` simple returns, first bar per symbol
+    dropped. The input is projected to its three used columns first, so
+    caller columns never collide with the staging names downstream."""
+    w = Window.partitionBy(symbol_col).orderBy(ts_col)
+    prev = F.lag(close_col).over(w)
+    r = F.when(prev > 0, F.col(close_col) / prev - 1.0)
+    return (bars.select(symbol_col, ts_col, close_col)
+            .withColumn("r", r).where(F.col("r").isNotNull()))
 
 
 def _key_ts_schema(df: DataFrame, symbol_col: str, ts_col: str,
                    value_fields: str) -> str:
     """applyInPandas output schema with the key/ts types taken from the
-    INPUT (int symbol ids and numeric ts columns survive the engine
-    switch instead of hitting a hardcoded string/timestamp contract)."""
+    INPUT (int symbol ids and numeric ts columns survive the switch to
+    the recursion instead of hitting a hardcoded string/timestamp
+    contract)."""
     sym_t = df.schema[symbol_col].dataType.simpleString()
     ts_t = df.schema[ts_col].dataType.simpleString()
     return (f"`{symbol_col}` {sym_t}, `{ts_col}` {ts_t}, "
@@ -143,13 +166,13 @@ def ewma_variance_expr(
 
     Numerically valid while ``lam^(-n)`` stays in double range
     (n < ~709/ln(1/lam) ≈ 11,400 rows per partition at lam=0.94) — ample
-    for bar-level series; chunk or use applyInPandas beyond that.
-    ``w`` must be partitioned + ordered.
+    for bar-level series; :func:`ewma_volatility` switches to the
+    recursion beyond that. ``w`` must be partitioned + ordered.
     """
     if not 0.0 < float(lam) < 1.0:
         raise ValueError(
             f"lam={lam}: the closed-form unroll needs 0 < lam < 1 — "
-            "use engine='pandas' (the recursion) at the boundary")
+            "ewma_volatility runs the recursion there")
     w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     i = F.row_number().over(w) - 1
     u = F.pow(F.lit(1.0 / lam), i)
@@ -165,57 +188,58 @@ def ewma_volatility(
     close_col: str = "close",
     symbol_col: str = "symbol",
     ts_col: str = "ts",
-    engine: str = "auto",
 ) -> DataFrame:
     """Per-symbol RiskMetrics EWMA volatility from bar closes: simple
     returns, EWMA variance (lam = 0.94, the RiskMetrics daily decay),
     vol = sqrt(variance). Rows before the second bar carry NULLs (no
-    return yet). The query itself is one (symbol, ts) window sort;
-    ``engine="auto"`` additionally runs ONE eager count aggregation to
-    pick the engine — pass ``engine=`` explicitly on hot paths where the
-    per-key cardinality is known.
+    return yet). The query itself is one (symbol, ts) window sort.
 
-    ``engine``: ``"expr"`` = the closed-form JVM unroll (fastest; valid
-    while rows/symbol < :func:`unroll_row_bound`), ``"pandas"`` = the
-    sequential recursion via applyInPandas (any length), ``"auto"``
-    (default) checks the max per-symbol row count (1 scalar to the
-    driver) and picks — misuse of the unroll past its overflow envelope
-    is no longer possible (r3 VERDICT #7)."""
-    w = Window.partitionBy(symbol_col).orderBy(ts_col)
-    prev = F.lag(close_col).over(w)
-    r = F.when(prev > 0, F.col(close_col) / prev - 1.0)
-    with_r = bars.withColumn("r", r).where(F.col("r").isNotNull())
-    if engine == "auto":
-        engine = ("expr" if _max_rows_per_key(with_r, symbol_col)
-                  <= unroll_row_bound(lam) else "pandas")
-    if engine == "pandas":
-        lam_f = float(lam)
+    The closed-form JVM unroll runs while rows/symbol stay inside
+    :func:`unroll_row_bound` (one eager count aggregation checks that);
+    past it, or at ``lam`` = 0 or 1, the sequential recursion runs via
+    applyInPandas — misuse of the unroll past its overflow envelope is
+    not possible (r3 VERDICT #7)."""
+    _require_nonnegative(lam=lam)
+    with_r = _returns(bars, close_col, symbol_col, ts_col)
+    if _fits_unroll(with_r, symbol_col, lam):
+        return _ewma_unroll(with_r, lam, symbol_col, ts_col)
+    return _ewma_recursion(with_r, lam, symbol_col, ts_col)
 
-        def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-            v = None
-            out = []
-            for x in pdf["r"]:
-                x = float(x)
-                v = x * x if v is None else \
-                    lam_f * v + (1.0 - lam_f) * x * x
-                out.append(v)
-            pdf["ewma_var"] = out
-            return pdf[[symbol_col, ts_col, "r", "ewma_var"]]
 
-        schema = _key_ts_schema(bars, symbol_col, ts_col,
-                                "`r` double, `ewma_var` double")
-        rec = with_r.select(symbol_col, ts_col, "r") \
-            .groupBy(symbol_col).applyInPandas(_run, schema)
-        return rec.select(
-            symbol_col, ts_col, "r", "ewma_var",
-            F.sqrt("ewma_var").alias("ewma_vol"),
-        )
-    v = ewma_variance_expr("r", lam, w)
+def _ewma_unroll(with_r: DataFrame, lam: float, symbol_col: str,
+                 ts_col: str) -> DataFrame:
+    v = ewma_variance_expr(
+        "r", lam, Window.partitionBy(symbol_col).orderBy(ts_col))
     return with_r.select(
         symbol_col, ts_col, "r",
         v.alias("ewma_var"),
         F.sqrt(v).alias("ewma_vol"),
+    )
+
+
+def _ewma_recursion(with_r: DataFrame, lam: float, symbol_col: str,
+                    ts_col: str) -> DataFrame:
+    lam_f = float(lam)
+
+    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
+        v = None
+        out = []
+        for x in pdf["r"]:
+            x = float(x)
+            v = x * x if v is None else \
+                lam_f * v + (1.0 - lam_f) * x * x
+            out.append(v)
+        pdf["ewma_var"] = out
+        return pdf[[symbol_col, ts_col, "r", "ewma_var"]]
+
+    schema = _key_ts_schema(with_r, symbol_col, ts_col,
+                            "`r` double, `ewma_var` double")
+    rec = with_r.select(symbol_col, ts_col, "r") \
+        .groupBy(symbol_col).applyInPandas(_run, schema)
+    return rec.select(
+        symbol_col, ts_col, "r", "ewma_var",
+        F.sqrt("ewma_var").alias("ewma_vol"),
     )
 
 
@@ -227,7 +251,6 @@ def garch_volatility(
     symbol_col: str = "symbol",
     ts_col: str = "ts",
     periods_per_year: int = 252,
-    engine: str = "auto",
 ) -> DataFrame:
     """Per-symbol GARCH(1,1) conditional volatility from bar closes with
     variance targeting (omega pinned to the per-symbol sample variance) —
@@ -236,14 +259,22 @@ def garch_volatility(
     one per-symbol variance agg joined back; everything else is JVM
     codegen. Emits r, h (conditional variance), and annualized vol.
 
-    ``engine`` as in :func:`ewma_volatility`: ``"auto"`` switches from
-    the closed-form unroll to the applyInPandas recursion when any
-    symbol exceeds :func:`unroll_row_bound`(beta) rows (~6,000 at
-    beta=0.90) — past that the unroll's ``beta^(-n)`` overflows."""
+    As in :func:`ewma_volatility`, the closed-form unroll runs while every
+    symbol stays inside :func:`unroll_row_bound`(beta) rows (~6,000 at
+    beta=0.90); past that, or at ``beta`` = 0 or 1, the applyInPandas
+    recursion runs — the unroll's ``beta^(-n)`` would overflow."""
+    _require_nonnegative(alpha=alpha, beta=beta)
+    with_r = _returns(bars, close_col, symbol_col, ts_col)
+    j = _with_vbar(with_r, symbol_col, ts_col)
+    run = (_garch_unroll if _fits_unroll(with_r, symbol_col, beta)
+           else _garch_recursion)
+    return run(j, alpha, beta, symbol_col, ts_col, periods_per_year)
+
+
+def _with_vbar(with_r: DataFrame, symbol_col: str,
+               ts_col: str) -> DataFrame:
+    """``with_r`` plus the per-symbol sample variance ``vbar`` of r."""
     w = Window.partitionBy(symbol_col).orderBy(ts_col)
-    prev = F.lag(close_col).over(w)
-    r = F.when(prev > 0, F.col(close_col) / prev - 1.0)
-    with_r = bars.withColumn("r", r).where(F.col("r").isNotNull())
     # vbar via ORDERED cumulative sums, not var_samp: a float var_samp is
     # a partial aggregate whose merge ORDER is nondeterministic (task
     # completion order), so its last ~2 ulps differ run-to-run AND
@@ -263,36 +294,42 @@ def garch_volatility(
     s2 = F.max_by("_cs2", "_rn")
     vbar = cs.groupBy(symbol_col).agg(
         ((s2 - s1 * s1 / n) / (n - F.lit(1))).alias("vbar"))
-    j = with_r.join(F.broadcast(vbar), symbol_col)
-    if engine == "auto":
-        engine = ("expr" if _max_rows_per_key(with_r, symbol_col)
-                  <= unroll_row_bound(beta) else "pandas")
-    if engine == "pandas":
-        a_f, b_f, ppy = float(alpha), float(beta), float(periods_per_year)
+    return with_r.join(F.broadcast(vbar), symbol_col)
 
-        def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-            vb = float(pdf["vbar"].iloc[0])
-            omega = vb * (1.0 - a_f - b_f)
-            h, prev_r = vb, None
-            out = []
-            for x in pdf["r"]:
-                if prev_r is not None:
-                    h = omega + a_f * prev_r * prev_r + b_f * h
-                out.append(h)
-                prev_r = float(x)
-            pdf["garch_var"] = out
-            return pdf[[symbol_col, ts_col, "r", "garch_var"]]
 
-        schema = _key_ts_schema(bars, symbol_col, ts_col,
-                                "`r` double, `garch_var` double")
-        rec = j.select(symbol_col, ts_col, "r", "vbar") \
-            .groupBy(symbol_col).applyInPandas(_run, schema)
-        return rec.select(
-            symbol_col, ts_col, "r", "garch_var",
-            F.sqrt(F.col("garch_var") * F.lit(ppy))
-            .alias("garch_vol_ann"),
-        )
+def _garch_recursion(j: DataFrame, alpha: float, beta: float,
+                     symbol_col: str, ts_col: str,
+                     periods_per_year: int) -> DataFrame:
+    a_f, b_f, ppy = float(alpha), float(beta), float(periods_per_year)
+
+    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
+        vb = float(pdf["vbar"].iloc[0])
+        omega = vb * (1.0 - a_f - b_f)
+        h, prev_r = vb, None
+        out = []
+        for x in pdf["r"]:
+            if prev_r is not None:
+                h = omega + a_f * prev_r * prev_r + b_f * h
+            out.append(h)
+            prev_r = float(x)
+        pdf["garch_var"] = out
+        return pdf[[symbol_col, ts_col, "r", "garch_var"]]
+
+    schema = _key_ts_schema(j, symbol_col, ts_col,
+                            "`r` double, `garch_var` double")
+    rec = j.select(symbol_col, ts_col, "r", "vbar") \
+        .groupBy(symbol_col).applyInPandas(_run, schema)
+    return rec.select(
+        symbol_col, ts_col, "r", "garch_var",
+        F.sqrt(F.col("garch_var") * F.lit(ppy))
+        .alias("garch_vol_ann"),
+    )
+
+
+def _garch_unroll(j: DataFrame, alpha: float, beta: float,
+                  symbol_col: str, ts_col: str,
+                  periods_per_year: int) -> DataFrame:
     # Closed-form unroll of the Bollerslev (1986) recursion
     #     h_1 = vbar;  h_t = omega + alpha * r_{t-1}^2 + beta * h_{t-1}
     # with omega = vbar * (1 - alpha - beta) (variance targeting):
@@ -315,9 +352,9 @@ def garch_volatility(
     if not 0.0 < float(beta) < 1.0:
         raise ValueError(
             f"beta={beta}: the closed-form unroll needs 0 < beta < 1 "
-            "(IGARCH beta=1 has no stationary unroll) — use "
-            "engine='pandas' (the recursion) there")
-    spark = bars.sparkSession
+            "(IGARCH beta=1 has no stationary unroll) — "
+            "garch_volatility runs the recursion there")
+    spark = j.sparkSession
     cap = int(unroll_row_bound(beta)) + 2
     inv = 1.0 / float(beta)
     pw_rows, bp, ip = [], 1.0, 1.0
@@ -326,6 +363,7 @@ def garch_volatility(
         bp *= float(beta)
         ip *= inv
     pw = spark.createDataFrame(pw_rows, "i int, bpow double, ipow double")
+    w = Window.partitionBy(symbol_col).orderBy(ts_col)
     i = (F.row_number().over(w) - 1).cast("int")
     r2 = F.col("r") * F.col("r")
     ji = j.withColumn("_i", i).join(

@@ -870,86 +870,23 @@ def connected_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     node_col: str = "doc_id",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Transitive duplicate clustering: connected components over near-dup
-    pairs by min-label propagation (each node repeatedly adopts the
-    smallest label in its neighborhood). The cluster id is the smallest
-    member id — deterministic, partition-invariant.
-
-    Near-dup pair emitters (LSH bands, simhash, embedding buckets) produce
-    EDGES; dropping `doc_b` of each pair under-merges transitive chains
-    (a~b, b~c but a!~c). This closes the chains.
-
-    Scale shape: each round is one equi-join (edges ⋈ labels) + one
-    map-combinable min-agg; rounds needed = component diameter (near-dup
-    clusters are shallow — a handful). ``localCheckpoint`` truncates plan
-    lineage per round; the per-round convergence check is a single scalar
-    count (the standard driver boundary for iterative algorithms, same as
-    the k-means loop in similarity.py). For 100 TB graphs with adversarial
-    diameters, swap in large-star/small-star (O(log n) rounds) — the loop
-    scaffold is identical.
-    """
-    und = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    und = und.union(
-        edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    ).distinct()
-    if nodes is None:
-        nodes = und.select(F.col("src").alias(node_col)).distinct()
-    labels = nodes.select(
-        F.col(node_col).alias("id"), F.col(node_col).alias("label")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        nbr = (
-            und.join(labels, und["dst"] == labels["id"])
-            .groupBy("src").agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr, labels["id"] == nbr["src"], "left")
-            .select(
-                labels["id"],
-                F.least(
-                    labels["label"],
-                    F.coalesce(nbr["nbr_min"], labels["label"]),
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        old = labels.select("id", F.col("label").alias("old_label"))
-        changed = (
-            new_labels.join(old, "id")
-            .filter(F.col("label") != F.col("old_label")).count()
-        )
-        _release_iteration_scratch(labels)  # r8: see star loop note
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(
-        F.col("id").alias(node_col), F.col("label").alias("cluster")
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    node_col: str = "doc_id",
     max_iter: int = 50,
     _stats: dict | None = None,
     chunk_classes: int | None = None,
     scratch_budget_bytes: int | None = None,
 ) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris, Lattanzi,
-    Mirrokni, Rastogi & Vassilvitskii, *Connected Components in MapReduce
-    and Beyond*, SoCC 2014) — the adversarial-diameter upgrade the
-    min-label loop (:func:`connected_components`) documents: rounds are
-    O(log n) in the component size instead of O(diameter), so a 10^6-node
-    chain converges in ~20 rounds, not 10^6.
+    """Transitive duplicate clustering: connected components over near-dup
+    pairs by large-star/small-star (Kiveris, Lattanzi, Mirrokni, Rastogi
+    & Vassilvitskii, *Connected Components in MapReduce and Beyond*,
+    SoCC 2014). Rounds are O(log n) in the component size, not
+    O(diameter), so a 10^6-node chain converges in ~20 rounds.
+
+    Near-dup pair emitters (LSH bands, simhash, embedding buckets) produce
+    EDGES; dropping `doc_b` of each pair under-merges transitive chains
+    (a~b, b~c but a!~c). This closes the chains.
 
     Per round, two relational steps over the canonical (big, small) edge
-    set, each ONE equi-join + ONE map-combinable min-agg (the same
-    shuffle budget per round as min-label):
+    set, each ONE equi-join + ONE map-combinable min-agg:
 
     - **large-star**: every node links its strictly-larger neighbors to
       the minimum of its neighborhood (flattens tall trees in one hop);
@@ -959,10 +896,11 @@ def connected_components_star(
     At the fixed point the edge set IS the component mapping (every node
     points at its component minimum). Convergence is detected by a
     2-scalar (count, hash-sum) signature per round — the standard bounded
-    driver boundary. Same output contract as
-    :func:`connected_components`: ``(node_col, cluster)``, cluster = the
-    smallest member id, singletons (when ``nodes`` is given) keep their
-    own id. ``_stats['rounds']`` reports the round count for tests.
+    driver boundary. Output: ``(node_col, cluster)``, cluster = the
+    smallest member id — deterministic, partition-invariant. Singletons
+    (when ``nodes`` is given) keep their own id; with ``nodes=None`` the
+    node set is the edges' endpoints. ``_stats['rounds']`` reports the
+    round count for tests.
 
     ``chunk_classes`` (r9, the chunked-pricer pattern applied to q146's
     sf100 disk bound): when > 1, every star round executes as

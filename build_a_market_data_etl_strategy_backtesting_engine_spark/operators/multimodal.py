@@ -143,7 +143,7 @@ def decode_image_array(content: bytes) -> np.ndarray:
 
 def resize_nearest(arr: np.ndarray, w: int, h: int) -> np.ndarray:
     """Deterministic nearest-neighbor resize (floor index mapping) —
-    library-free so the real resize path needs no image library."""
+    library-free so the resize needs no image library."""
     sh, sw = arr.shape[:2]
     ri = (np.arange(h) * sh) // h
     ci = (np.arange(w) * sw) // w
@@ -153,14 +153,13 @@ def resize_nearest(arr: np.ndarray, w: int, h: int) -> np.ndarray:
 def media_features(
     media: DataFrame,
     batch_size_hint: int = 256,
-    use_real_decoder: bool = False,
 ) -> DataFrame:
     """Per-item features over the binary column via mapInPandas.
 
     Deterministic stub stats (size, sha256, a pseudo 'feature_norm' from the
-    digest) keep the pipeline testable; ``use_real_decoder=True`` takes
-    width/height from :func:`decode_image_array` instead, which raises on
-    any payload that is not BMP/PPM/PGM. Partitioning note: binary rows are
+    digest, width/height from the metadata columns) keep the pipeline
+    testable for every media kind; :func:`image_features` is the real
+    image decode. Partitioning note: binary rows are
     large — size ``spark.sql.files.maxPartitionBytes`` / repartition so an
     Arrow batch (~batch_size_hint rows) fits executor memory.
     """
@@ -175,18 +174,10 @@ def media_features(
                 "sha256": pdf["content"].map(
                     lambda b: hashlib.sha256(b or b"").hexdigest()),
             })
-            if use_real_decoder:
-                arrs = pdf["content"].map(
-                    lambda b: decode_image_array(bytes(b or b"")))
-                out["width"] = arrs.map(
-                    lambda a: a.shape[1]).astype("int32")
-                out["height"] = arrs.map(
-                    lambda a: a.shape[0]).astype("int32")
-            else:
-                out["width"] = pdf.get(
-                    "width", pd.Series([None] * len(pdf))).astype("Int32")
-                out["height"] = pdf.get(
-                    "height", pd.Series([None] * len(pdf))).astype("Int32")
+            out["width"] = pdf.get(
+                "width", pd.Series([None] * len(pdf))).astype("Int32")
+            out["height"] = pdf.get(
+                "height", pd.Series([None] * len(pdf))).astype("Int32")
             # deterministic pseudo-embedding norm from the content digest
             out["feature_norm"] = out["sha256"].map(
                 lambda h: int(h[:8], 16) / 0xFFFFFFFF)
@@ -253,55 +244,48 @@ def resize_images(
     media: DataFrame,
     target_width: int = 224,
     target_height: int = 224,
-    use_real_decoder: bool = False,
 ) -> DataFrame:
     """Image resize stage via mapInPandas (the preprocessing step before
-    feature extraction in a vision-training pipeline).
+    feature extraction in a vision-training pipeline): decode ->
+    nearest-neighbor resize -> re-encode in the same format, in pure
+    numpy, for BMP/PPM/PGM payloads, with the decoded output dims.
 
-    Real path (``use_real_decoder=True``): decode -> nearest-neighbor
-    resize -> re-encode inside the UDF, in pure numpy, for BMP/PPM/PGM
-    payloads; any other format raises. Stub path: passes the payload
-    through untouched and stamps the target dims + ``resized`` flag,
-    keeping the batch shape, schema, and binary round-trip through Arrow
-    real. Items already at target size pass through with
-    ``resized=false`` in both paths.
+    Rows pass through byte-exact with their input width/height and
+    ``resized = false`` when they are not images, when the image is
+    already at the target size, or when :func:`decode_image_array`
+    rejects the payload (any other format, or a corrupt one).
     """
+
+    def _one(kind, content, width, height):
+        if kind == "image":
+            try:
+                arr = decode_image_array(bytes(content or b""))
+            except (ValueError, NotImplementedError, struct.error,
+                    IndexError):
+                arr = None
+            if arr is not None and arr.shape[:2] != (target_height,
+                                                     target_width):
+                small = resize_nearest(arr, target_width, target_height)
+                enc = encode_bmp if bytes(content[:2]) == b"BM" \
+                    else encode_ppm
+                return enc(small), target_width, target_height, True
+        return content, width, height, False
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            is_img = pdf["kind"] == "image"
-            at_size = (
-                (pdf["width"] == target_width)
-                & (pdf["height"] == target_height)
-            ).fillna(False)
-            if use_real_decoder:
-                pdf["content"] = pdf.apply(
-                    lambda r: _resize_one(
-                        r["content"], target_width, target_height)
-                    if r["kind"] == "image" else r["content"], axis=1)
-            out = pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "content": pdf["content"],
-                "width": pdf["width"].where(~is_img, target_width)
-                .astype("Int32"),
-                "height": pdf["height"].where(~is_img, target_height)
-                .astype("Int32"),
-                "resized": (is_img & ~at_size),
-            })
+            rows = [_one(*r) for r in zip(pdf["kind"], pdf["content"],
+                                          pdf["width"], pdf["height"])]
+            out = pd.DataFrame(
+                rows, columns=["content", "width", "height", "resized"])
+            out.insert(0, "media_id", pdf["media_id"].to_numpy())
+            out.insert(1, "kind", pdf["kind"].to_numpy())
+            out["width"] = out["width"].astype("Int32")
+            out["height"] = out["height"].astype("Int32")
             yield out
 
     return media.select(
         "media_id", "kind", "content", "width", "height"
     ).mapInPandas(_run, RESIZE_SCHEMA)
-
-
-def _resize_one(content: bytes, w: int, h: int) -> bytes:
-    """Real decode->resize->re-encode in the SAME format (BMP/PPM/PGM)."""
-    small = resize_nearest(decode_image_array(content), w, h)
-    if bytes(content[:2]) == b"BM":
-        return encode_bmp(small)
-    return encode_ppm(small)
 
 
 AUDIO_SCHEMA = ("media_id long, n_bytes int, n_samples int, "
@@ -310,8 +294,8 @@ AUDIO_SCHEMA = ("media_id long, n_bytes int, n_samples int, "
 
 def audio_features(media: DataFrame, sample_rate: int = 16000) -> DataFrame:
     """Waveform features over raw PCM16 audio payloads — a REAL decode
-    (unlike the stubbed image path): little-endian int16 PCM needs only
-    numpy, so rms/peak/duration are computed from the actual bytes.
+    (the audio twin of :func:`image_features`): little-endian int16 PCM
+    needs only numpy, so rms/peak/duration are computed from the actual bytes.
 
     mapInPandas keeps one Python crossing per Arrow batch; the numpy body
     is vectorized per item. Containerized formats (wav/mp3/flac) would

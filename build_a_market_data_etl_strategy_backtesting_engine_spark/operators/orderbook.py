@@ -15,7 +15,8 @@ Spark design (SURVEY §3.4): these are inherently sequential per symbol —
 the ONE operator family where imperative code is the correct answer. Batch:
 ``applyInPandas`` per symbol with the loop inside the group (cross-symbol
 parallelism, exact within-symbol sequencing). Streaming: the same kernel
-drops into ``transformWithStateInPandas`` keyed by symbol. A shared cash
+runs in ``applyInPandasWithState`` keyed by symbol
+(``streaming.stateful.streaming_order_book``). A shared cash
 account across symbols forces a single group — same limit as the reference
 (documented divergence: we default to per-symbol cash budgets to stay
 parallel; pass ``shared_cash=True`` to replicate global-cash coupling).

@@ -4009,11 +4009,11 @@ def q79(spark, sf_dir):
 )
 def q80(spark, sf_dir):
     """Transitive duplicate clusters (operators/dedup.py
-    connected_components): min-label propagation over same-source 3-gram
-    Jaccard >= 0.05 near-dup edges; every document labeled with the
-    smallest doc_id in its component. Oracle = DuckDB recursive CTE
-    reachability — a genuinely independent formulation of the same
-    fixpoint."""
+    connected_components, monolithic large-star/small-star rounds) over
+    same-source 3-gram Jaccard >= 0.05 near-dup edges; every document
+    labeled with the smallest doc_id in its component. Oracle = DuckDB
+    recursive CTE reachability — a genuinely independent formulation of
+    the same fixpoint."""
     d = load_tables(spark, sf_dir, ["documents"])["documents"]
     edges = _dup_edges(d)
     return dedup_ops.connected_components(edges, d.select("doc_id"))
@@ -7078,15 +7078,16 @@ def q145(spark, sf_dir):
     """,
 )
 def q146(spark, sf_dir):
-    """q80's transitive duplicate clusters computed by the
-    large-star/small-star algorithm (operators/dedup.py
-    connected_components_star, Kiveris et al. SoCC 2014) instead of
-    min-label propagation: O(log n) rounds vs O(diameter), the
-    100 TB-adversarial-graph path. Same recursive-CTE reachability
-    oracle — both implementations must land on the identical fixpoint."""
+    """q80's transitive duplicate clusters with the star rounds run as
+    two hash-class passes over a parquet-spilled edge set
+    (operators/dedup.py connected_components, ``chunk_classes=2`` — the
+    path that bounds one round's scratch on large graphs). Same
+    recursive-CTE reachability oracle as q80, so the chunked and the
+    monolithic rounds must land on the identical fixpoint."""
     d = load_tables(spark, sf_dir, ["documents"])["documents"]
     edges = _dup_edges(d)
-    return dedup_ops.connected_components_star(edges, d.select("doc_id"))
+    return dedup_ops.connected_components(
+        edges, d.select("doc_id"), chunk_classes=2)
 
 
 @_register(
@@ -8487,14 +8488,14 @@ def q174(spark, sf_dir):
 )
 def q175(spark, sf_dir):
     """The UNIFIED as-of entry point (streaming/joins.py asof_enrich,
-    r9 VERDICT #2) in auto mode: estimates the hottest symbol's quote
-    density x tolerance (estimate_quote_density — one map-combinable
-    agg, one driver row per symbol) and picks the interval-join shape
-    below DEFAULT_MAX_JOIN_AMPLIFICATION, the merge shape above it.
-    Whichever implementation auto selects at this SF, the output is the
-    same ASOF-LEFT-JOIN-with-tolerance semantics the q163/q174 pairs pin
-    for the forced shapes — which is exactly what this pair verifies
-    end-to-end through the driver harness."""
+    r9 VERDICT #2): estimates the hottest symbol's quote density x
+    tolerance (estimate_quote_density — one map-combinable agg, one
+    driver row per symbol) and picks the interval-join shape below
+    DEFAULT_MAX_JOIN_AMPLIFICATION, the merge shape above it. Whichever
+    implementation it selects at this SF, the output is the same
+    ASOF-LEFT-JOIN-with-tolerance semantics the q163/q174 pairs pin for
+    the two implementations called directly — which is exactly what
+    this pair verifies end-to-end through the driver harness."""
     from build_a_market_data_etl_strategy_backtesting_engine_spark.streaming.joins import (
         asof_enrich,
     )
@@ -8512,7 +8513,7 @@ def q175(spark, sf_dir):
             (F.col("_p") + 0.02).alias("ask"),
         )
     )
-    out = asof_enrich(trades, quotes, tolerance="2 minutes", mode="auto")
+    out = asof_enrich(trades, quotes, tolerance="2 minutes")
     return out.select(
         "symbol", F.unix_micros("ts").alias("ts_us"), "seq",
         "price", "volume", "bid", "ask", "mid", "spread", "quote_age_us",

@@ -335,19 +335,3 @@ class StatsListener:
         spark.streams.addListener(listener)
         return listener
 
-
-def dedup_stream(
-    ticks: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-):
-    """Streaming exact dedup within the watermark horizon
-    (``dropDuplicatesWithinWatermark``): duplicate ticks arriving across
-    micro-batches (at-least-once upstreams, reconnect replays —
-    websocket_client.py:92-125's reconnect path can re-deliver) are dropped
-    while state stays bounded by the watermark. Batch twin:
-    ``cleaner.deduplicate``."""
-    keys = keys or ["symbol", ts_col]
-    return ticks.withWatermark(ts_col, watermark) \
-        .dropDuplicatesWithinWatermark(keys)

@@ -26,8 +26,6 @@ same way batch ticks do (operators/skew.py).
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -63,9 +61,9 @@ def streaming_quote_enrich(
     .. warning:: SPARSE-QUOTE shape. The join materializes one row per
        (trade x in-tolerance quote) before electing — at 20k quotes/s
        per side with a 30 s tolerance ONE micro-batch exceeded 120 s
-       (measured r8, SCALING.md). Prefer :func:`asof_enrich` (auto
-       mode), which picks this join only below a measured density
-       ceiling and the merge-based :func:`streaming_asof_enrich` above.
+       (measured r8, SCALING.md). Prefer :func:`asof_enrich`, which
+       picks this join only below a measured density ceiling and the
+       merge-based :func:`streaming_asof_enrich` above.
 
     ``window`` buckets the election aggregate's event time (required for
     the chained stateful operator to be watermark-bounded); it does NOT
@@ -366,7 +364,7 @@ def select_asof_mode(
     ts_col: str = "ts",
     symbol_col: str = "symbol",
 ) -> str:
-    """Pick ``"join"`` or ``"merge"`` for :func:`asof_enrich`'s auto mode.
+    """Pick ``"join"`` or ``"merge"`` for :func:`asof_enrich`.
 
     The decision depends ONLY on the quotes side (the trades side never
     enters the amplification model — r9 ADVICE dropped the misleading
@@ -391,7 +389,6 @@ def asof_enrich(
     trades: DataFrame,
     quotes: DataFrame,
     tolerance: str = "5 minutes",
-    mode: str = "auto",
     density_sample: DataFrame | None = None,
     max_join_amplification: float = DEFAULT_MAX_JOIN_AMPLIFICATION,
     watermark: str = "10 seconds",
@@ -405,16 +402,14 @@ def asof_enrich(
     implementation picked by the measured cost model instead of the
     caller having to know it.
 
-    * ``mode="auto"`` — estimate the hottest symbol's quote density x
-      tolerance (:func:`estimate_quote_density`, from ``density_sample``
-      if given else batch ``quotes``) and take the interval join below
-      ``max_join_amplification``, the merge path above it. A streaming
-      pair with no sample defaults to merge (density-independent cost).
-    * ``mode="join"`` / ``mode="merge"`` — force an implementation.
-      Forcing ``"join"`` on a feed whose estimable density exceeds the
-      ceiling emits a ``UserWarning`` naming the estimate: the r8
-      measurement (20k quotes/s x 30 s tolerance -> one micro-batch
-      >120 s) is exactly the production footgun this guard exists for.
+    :func:`select_asof_mode` estimates the hottest symbol's quote
+    density x tolerance (:func:`estimate_quote_density`, from
+    ``density_sample`` if given else batch ``quotes``) and takes the
+    interval join (:func:`streaming_quote_enrich`) below
+    ``max_join_amplification``, the merge path
+    (:func:`streaming_asof_enrich`) above it. A streaming pair with no
+    sample takes the merge (density-independent cost). A caller who
+    needs one implementation calls that function directly.
 
     Trade-off being arbitrated: the join is zero-Python and
     natively order-tolerant (watermarked state) but materializes
@@ -422,31 +417,11 @@ def asof_enrich(
     O(trades + quotes) with O(symbols) state but crosses Python/Arrow
     and serializes each symbol onto one task (see SCALING.md for the
     single-hot-symbol ceiling)."""
-    if mode not in ("auto", "join", "merge"):
-        raise ValueError(
-            f"asof_enrich mode={mode!r}: expected 'auto', 'join' or "
-            "'merge'")
-    if mode == "auto":
-        mode = select_asof_mode(
-            quotes, tolerance,
-            density_sample=density_sample,
-            max_join_amplification=max_join_amplification,
-            ts_col=ts_col, symbol_col=symbol_col)
-    elif mode == "join":
-        sample = density_sample if density_sample is not None else (
-            quotes if not quotes.isStreaming else None)
-        if sample is not None:
-            density = estimate_quote_density(
-                sample, tolerance, ts_col=ts_col, symbol_col=symbol_col)
-            if density > max_join_amplification:
-                warnings.warn(
-                    f"asof_enrich(mode='join'): estimated in-tolerance "
-                    f"quote density {density:.0f}/trade exceeds "
-                    f"{max_join_amplification:.0f} — the interval join "
-                    f"materializes (trades x density) rows per batch and "
-                    f"was measured unable to finish one micro-batch at "
-                    f"density ~600k (r8); use mode='merge' or 'auto'",
-                    UserWarning, stacklevel=2)
+    mode = select_asof_mode(
+        quotes, tolerance,
+        density_sample=density_sample,
+        max_join_amplification=max_join_amplification,
+        ts_col=ts_col, symbol_col=symbol_col)
     if mode == "merge":
         return streaming_asof_enrich(
             trades, quotes, tolerance=tolerance,

@@ -118,79 +118,6 @@ def streaming_position_tracker(
     )
 
 
-# ------------------------- transformWithStateInPandas twins (Spark 4 API)
-
-def streaming_trailing_stops_tws(
-    ticks: DataFrame,
-    trail_pct: float = 0.05,
-    ts_col: str = "ts",
-    symbol_col: str = "symbol",
-    price_col: str = "price",
-) -> DataFrame:
-    """``transformWithStateInPandas`` twin of ``streaming_trailing_stops``:
-    the same running-max ratchet expressed as a ``StatefulProcessor`` with
-    a typed ValueState — the newer Spark 4 stateful API (multiple typed
-    state variables, timers, TTL) instead of ``applyInPandasWithState``'s
-    single tuple. Requires the RocksDB state store provider (set on the
-    session if unset — transformWithState does not support the HDFS-backed
-    default) and the ``protobuf`` package (the TWS state-server protocol is
-    protobuf-framed; environments without it get a clear error here instead
-    of a crashed Python driver worker mid-query)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise RuntimeError(
-            "transformWithStateInPandas needs the 'protobuf' package for "
-            "its state protocol; it is not installed in this environment. "
-            "Use streaming_trailing_stops (applyInPandasWithState) instead."
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    spark = ticks.sparkSession
-    prov = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    if spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                      "") != prov:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prov)
-    trail = float(trail_pct)
-
-    class _TrailingStop(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._runmax = handle.getValueState("runmax", "m double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            (symbol,) = key
-            cur = self._runmax.get()
-            runmax = cur[0] if cur is not None else float("-inf")
-            for pdf in rows:
-                pdf = pdf.sort_values(ts_col)
-                maxes, stops, hits = [], [], []
-                for px in pdf[price_col]:
-                    runmax = max(runmax, px)
-                    stop = runmax * (1.0 - trail)
-                    maxes.append(runmax)
-                    stops.append(stop)
-                    hits.append(px <= stop)
-                yield pd.DataFrame({
-                    "symbol": symbol, "ts": pdf[ts_col],
-                    "price": pdf[price_col], "running_max": maxes,
-                    "stop_price": stops, "stop_hit": hits,
-                })
-            self._runmax.update((runmax,))
-
-        def close(self) -> None:
-            pass
-
-    return ticks.groupBy(symbol_col).transformWithStateInPandas(
-        statefulProcessor=_TrailingStop(),
-        outputStructType=TRAILING_STOP_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 def streaming_dedup(
     df: DataFrame,
     subset: list[str] | None = None,

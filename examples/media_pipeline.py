@@ -35,8 +35,8 @@ def main():
     print("== image_features (pure-numpy decode) ==")
     mm.image_features(imgs).show(6)
 
-    print("== resize_images (real path, 64x48 -> re-encoded) ==")
-    resized = mm.resize_images(imgs, 64, 48, use_real_decoder=True)
+    print("== resize_images (64x48 -> re-encoded) ==")
+    resized = mm.resize_images(imgs, 64, 48)
     stats = mm.image_features(
         resized.select("media_id", "kind", "content"))
     stats.select("media_id", "width", "height", "n_channels").show(6)

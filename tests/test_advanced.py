@@ -573,8 +573,9 @@ def test_multimodal_real_decoder_stub(spark):
 
 
 def test_multimodal_resize_plumbing(spark):
-    """resize_images stub path: binary payloads round-trip Arrow byte-exact,
-    images get target dims + resized flag, non-images pass through."""
+    """resize_images on payloads it cannot decode: every row round-trips
+    Arrow byte-exact with its input dims and ``resized = false`` —
+    synthetic media carries seeded bytes, not BMP/PPM/PGM images."""
     media = multimodal.synthetic_media(spark, 12)
     src = {r.media_id: (r.kind, bytes(r.content), r.width, r.height)
            for r in media.select(
@@ -584,16 +585,8 @@ def test_multimodal_resize_plumbing(spark):
     for r in out:
         kind, content, w, h = src[r.media_id]
         assert bytes(r.content) == content  # byte-exact Arrow round-trip
-        if kind == "image":
-            assert (r.width, r.height) == (224, 224)
-            assert r.resized  # synthetic media is 64x48, never at target
-        else:
-            assert (r.width, r.height) == (w, h)
-            assert not r.resized
-    # real-decoder path raises on non-BMP/PPM bytes, like decode_image_array
-    with pytest.raises(Exception):
-        multimodal.resize_images(
-            media, use_real_decoder=True).collect()
+        assert (r.kind, r.width, r.height) == (kind, w, h)
+        assert not r.resized
 
 
 def test_config_dot_notation(tmp_path):

@@ -371,20 +371,29 @@ def test_garch_unroll_equals_recursion(spark):
     rng = np.random.default_rng(31)
     closes = 100.0 * np.exp(np.cumsum(rng.normal(0, 0.02, 80)))
     df = _bars_df(spark, closes)
-    alpha, beta = 0.08, 0.90
-    out = ewm.garch_volatility(df, alpha=alpha, beta=beta) \
-        .orderBy("ts").collect()
-
+    # caller columns named like the operator's staging columns must not
+    # collide with them (AMBIGUOUS_REFERENCE)
+    clash = df.selectExpr("*", "1 AS i", "2.0 AS vbar", "3.0 AS bpow",
+                          "4.0 AS ipow")
     r = np.diff(closes) / closes[:-1]
     vbar = float(np.var(r, ddof=1))
-    omega = vbar * (1 - alpha - beta)
-    h = vbar
-    for k, row in enumerate(out):
-        if k > 0:
-            h = omega + alpha * r[k - 1] ** 2 + beta * h
-        assert row["garch_var"] == pytest.approx(h, rel=1e-9), k
-        assert row["garch_vol_ann"] == pytest.approx(
-            (h * 252) ** 0.5, rel=1e-9)
+    # beta = 0 is ARCH(1): no unroll exists, the recursion must run
+    for bars, alpha, beta in ((df, 0.08, 0.90), (clash, 0.08, 0.90),
+                              (df, 0.10, 0.0)):
+        out = ewm.garch_volatility(bars, alpha=alpha, beta=beta) \
+            .orderBy("ts").collect()
+        assert len(out) == len(r)
+        omega = vbar * (1 - alpha - beta)
+        h = vbar
+        for k, row in enumerate(out):
+            if k > 0:
+                h = omega + alpha * r[k - 1] ** 2 + beta * h
+            assert row["garch_var"] == pytest.approx(h, rel=1e-9), k
+            assert row["garch_vol_ann"] == pytest.approx(
+                (h * 252) ** 0.5, rel=1e-9)
+    for bad in ({"alpha": -0.1}, {"beta": -0.5}):
+        with pytest.raises(ValueError, match=next(iter(bad))):
+            ewm.garch_volatility(df, **bad)
 
 
 # -------------------------------------------------------- triple barrier

@@ -201,7 +201,7 @@ def test_image_features_flags_undecodable(spark):
 
 
 def test_resize_images_real_path(spark):
-    """use_real_decoder=True now works WITHOUT PIL for BMP/PPM payloads:
+    """resize_images works WITHOUT PIL for BMP/PPM payloads:
     decode -> nearest-neighbor -> re-encode in the same format, dims
     verified by re-decoding the output payload."""
     from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (
@@ -213,8 +213,7 @@ def test_resize_images_real_path(spark):
 
     ensure_package_on_executors(spark)
     media = mm.synthetic_images(spark, 6)
-    out = mm.resize_images(media, target_width=8, target_height=5,
-                           use_real_decoder=True).collect()
+    out = mm.resize_images(media, target_width=8, target_height=5).collect()
     assert len(out) == 6
     for r in out:
         assert r["resized"]
@@ -266,8 +265,9 @@ def test_jdbc_round_trip(spark, tmp_path):
 
 
 def test_cc_star_matches_minlabel_on_random_graph(spark):
-    """Differential oracle: on shallow graphs (the near-dup regime) the
-    star algorithm must produce exactly the min-label labels."""
+    """Differential oracle: on a random graph the star rounds must give
+    exactly the labels of an in-test union-find (cluster = smallest
+    member id) — a reference independent of Spark."""
     import random
 
     rng = random.Random(42)
@@ -275,31 +275,35 @@ def test_cc_star_matches_minlabel_on_random_graph(spark):
     edf = spark.createDataFrame(
         [(a, b) for a, b in edges if a != b], "doc_a long, doc_b long")
     nodes = spark.createDataFrame([(i,) for i in range(60)], "doc_id long")
-    ref = {r["doc_id"]: r["cluster"] for r in
-           dedup.connected_components(edf, nodes=nodes).collect()}
+    parent = list(range(60))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # root = smallest member
+    ref = {i: find(i) for i in range(60)}
     got = {r["doc_id"]: r["cluster"] for r in
-           dedup.connected_components_star(edf, nodes=nodes).collect()}
+           dedup.connected_components(edf, nodes=nodes).collect()}
     assert got == ref
 
 
 def test_cc_star_long_chain_logarithmic_rounds(spark):
-    """The adversarial-diameter case the min-label loop truncates at
-    (diameter 200 >> max_iter 25): star converges in O(log n) rounds and
-    labels the whole chain with node 0."""
+    """The adversarial-diameter case (diameter 200): star converges in
+    O(log n) rounds and labels the whole chain with node 0."""
     n = 200
     edf = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long")
     stats = {}
     got = {r["doc_id"]: r["cluster"] for r in
-           dedup.connected_components_star(edf, _stats=stats).collect()}
+           dedup.connected_components(edf, _stats=stats).collect()}
     assert len(got) == n
     assert set(got.values()) == {0}, "chain not fully merged"
     assert stats["rounds"] <= 20, f"rounds {stats['rounds']} not O(log n)"
-    # and the documented failure mode is real: min-label at default
-    # max_iter=25 must NOT fully merge a 200-chain
-    partial = {r["cluster"] for r in
-               dedup.connected_components(edf).collect()}
-    assert len(partial) > 1, "expected min-label truncation on the chain"
 
 
 def test_cc_star_singletons_and_two_components(spark):
@@ -308,7 +312,7 @@ def test_cc_star_singletons_and_two_components(spark):
     nodes = spark.createDataFrame(
         [(i,) for i in [10, 11, 12, 20, 21, 99]], "doc_id long")
     got = {r["doc_id"]: r["cluster"] for r in
-           dedup.connected_components_star(edf, nodes=nodes).collect()}
+           dedup.connected_components(edf, nodes=nodes).collect()}
     assert got == {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 99: 99}
 
 
@@ -441,10 +445,20 @@ def _long_bars(spark, n=10_000, seed=3):
     return spark.createDataFrame(pdf), pdf
 
 
+def _garch_path(path, df, alpha=0.08, beta=0.90):
+    """Run one GARCH path (unroll or recursion) directly, bypassing the
+    row-count choice ``garch_volatility`` makes."""
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import ewm
+
+    j = ewm._with_vbar(ewm._returns(df, "close", "symbol", "ts"),
+                       "symbol", "ts")
+    return path(j, alpha, beta, "symbol", "ts", 252)
+
+
 def test_garch_auto_switches_and_matches_recursion(spark):
-    """r3 VERDICT #7: at 10k rows/symbol (beta=0.9 bound ~6,000) the auto
-    engine must take the recursion path and match a local float64
-    recursion bit-for-bit; the unroll would overflow there."""
+    """r3 VERDICT #7: at 10k rows/symbol (beta=0.9 bound ~6,000)
+    garch_volatility must take the recursion path and match a local
+    float64 recursion bit-for-bit; the unroll would overflow there."""
     from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import ewm
 
     assert 5000 < ewm.unroll_row_bound(0.90) < 6500
@@ -473,9 +487,7 @@ def test_garch_auto_switches_and_matches_recursion(spark):
     np.testing.assert_allclose(got["garch_var"].to_numpy(),
                                np.array(exp), rtol=1e-12)
     # and the guard is load-bearing: the raw unroll overflows at this n
-    forced = (ewm.garch_volatility(df, alpha=0.08, beta=0.90,
-                                   engine="expr")
-              .toPandas())
+    forced = _garch_path(ewm._garch_unroll, df).toPandas()
     assert not np.isfinite(forced["garch_var"].to_numpy()).all()
 
 
@@ -501,15 +513,15 @@ def test_ewma_auto_matches_recursion_at_10k(spark):
 
 def test_engines_agree_inside_envelope(spark):
     """Below the bound the unroll and the recursion agree to float
-    round-off — the auto switch changes nothing observable."""
+    round-off — the row-count switch changes nothing observable."""
     from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import ewm
 
     import numpy as np
 
     df, _ = _long_bars(spark, n=400, seed=5)
-    a = (ewm.garch_volatility(df, engine="expr").toPandas()
+    a = (_garch_path(ewm._garch_unroll, df).toPandas()
          .sort_values("ts")["garch_var"].to_numpy())
-    b = (ewm.garch_volatility(df, engine="pandas").toPandas()
+    b = (_garch_path(ewm._garch_recursion, df).toPandas()
          .sort_values("ts")["garch_var"].to_numpy())
     np.testing.assert_allclose(a, b, rtol=1e-9)
 

@@ -263,6 +263,8 @@ def test_asof_auto_selects_join_on_sparse_merge_on_dense(spark):
 
 
 def test_asof_auto_output_matches_forced_modes(spark):
+    """asof_enrich must return what each implementation it chooses
+    between returns when called directly."""
     import pandas as pd
 
     from build_a_market_data_etl_strategy_backtesting_engine_spark.streaming import (
@@ -273,42 +275,13 @@ def test_asof_auto_output_matches_forced_modes(spark):
     for q in (sparse_q, dense_q):
         auto = (sjoins.asof_enrich(trades, q, tolerance="2 minutes")
                 .toPandas().sort_values("seq").reset_index(drop=True))
-        for forced in ("join", "merge"):
-            import warnings as _w
-
-            with _w.catch_warnings():
-                _w.simplefilter("ignore")
-                got = (sjoins.asof_enrich(trades, q, tolerance="2 minutes",
-                                          mode=forced)
-                       .toPandas().sort_values("seq")
-                       .reset_index(drop=True))
+        for impl in (sjoins.streaming_quote_enrich,
+                     sjoins.streaming_asof_enrich):
+            got = (impl(trades, q, tolerance="2 minutes")
+                   .toPandas().sort_values("seq").reset_index(drop=True))
             pd.testing.assert_frame_equal(
                 auto, got[auto.columns.tolist()]
                 .astype(auto.dtypes.to_dict()))
-
-
-def test_asof_forced_join_on_dense_feed_warns(spark):
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.streaming import (
-        joins as sjoins,
-    )
-
-    trades, sparse_q, dense_q = _enrich_frames(spark)
-    with pytest.warns(UserWarning, match="quote density"):
-        sjoins.asof_enrich(trades, dense_q, tolerance="2 minutes",
-                           mode="join")
-    # sparse feed: no warning. Error ONLY on UserWarning — a blanket
-    # simplefilter("error") also errored a py4j socket's GC-time
-    # ResourceWarning inside the block, surfacing as an unraisable
-    # exception (the r9 suite's one warning). Collect pending finalizers
-    # first so no stale socket is destroyed inside the filter window.
-    import gc
-    import warnings as _w
-
-    gc.collect()
-    with _w.catch_warnings():
-        _w.simplefilter("error", UserWarning)
-        sjoins.asof_enrich(trades, sparse_q, tolerance="2 minutes",
-                           mode="join")
 
 
 def test_asof_streaming_without_sample_defaults_to_merge(spark):
@@ -331,16 +304,6 @@ def test_asof_streaming_without_sample_defaults_to_merge(spark):
         sq, "2 minutes", density_sample=sparse_q) == "join"
     assert sjoins.select_asof_mode(
         sq, "2 minutes", density_sample=dense_q) == "merge"
-
-
-def test_asof_enrich_rejects_unknown_mode(spark):
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.streaming import (
-        joins as sjoins,
-    )
-
-    trades, sparse_q, _ = _enrich_frames(spark)
-    with pytest.raises(ValueError, match="expected 'auto'"):
-        sjoins.asof_enrich(trades, sparse_q, mode="fastest")
 
 
 # ---------------------- bench load self-arbitration (r8 VERDICT #6)
@@ -385,9 +348,9 @@ def test_star_cc_chunked_equals_monolithic(spark, edges, n_nodes):
     e = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     nodes = spark.range(n_nodes).select(F.col("id").alias("doc_id"))
     mono_stats, chunk_stats = {}, {}
-    mono = dedup.connected_components_star(
+    mono = dedup.connected_components(
         e, nodes, _stats=mono_stats, chunk_classes=1)
-    chunked = dedup.connected_components_star(
+    chunked = dedup.connected_components(
         e, nodes, _stats=chunk_stats, chunk_classes=3)
     assert _cc_label_map(mono) == _cc_label_map(chunked)
     assert chunk_stats["chunk_classes"] == 3
@@ -402,7 +365,7 @@ def test_star_cc_auto_dispatch_stays_monolithic_on_small_graphs(spark):
 
     e = spark.createDataFrame([(1, 2), (2, 3)], ["doc_a", "doc_b"])
     stats = {}
-    out = dedup.connected_components_star(e, _stats=stats)
+    out = dedup.connected_components(e, _stats=stats)
     assert "chunk_classes" not in stats  # monolithic path ran
     assert {r.cluster for r in out.collect()} == {1}
 

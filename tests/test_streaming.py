@@ -299,63 +299,22 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     os.utime(d / "b1.json", (1_700_000_000, 1_700_000_000))
     os.utime(d / "b2.json", (1_700_000_060, 1_700_000_060))
 
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.streaming.ingest import (
-        dedup_stream,
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.streaming.stateful import (
+        streaming_dedup,
     )
 
     _stamp_dir(d)
     src = (spark.readStream.format("json")
            .schema("ts timestamp, symbol string, price double, volume double")
            .option("maxFilesPerTrigger", 1).load(str(d)))
-    q = (dedup_stream(src).writeStream.format("memory")
+    q = (streaming_dedup(src, subset=["symbol", "ts"])
+         .writeStream.format("memory")
          .queryName("dedup_mem").outputMode("append")
          .trigger(availableNow=True).start())
     q.awaitTermination(60)
     got = spark.sql("SELECT * FROM dedup_mem").toPandas()
     assert len(got) == 8  # 5 + 3 new, 3 replays dropped
     assert got.ts.nunique() == 8
-
-
-def test_tws_trailing_stops_across_batches(spark, tmp_path):
-    """transformWithStateInPandas twin must persist ValueState across
-    micro-batches and agree with the batch ratchet + the
-    applyInPandasWithState twin. Skipped where protobuf (the TWS state
-    protocol dependency) is unavailable; the gate itself is asserted."""
-    pytest.importorskip("google.protobuf")
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import risk
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.streaming import (
-        stateful,
-    )
-
-    prices = [100.0, 110.0, 105.0, 120.0, 95.0, 118.0]
-    t0 = pd.Timestamp("2024-01-01")
-    rows = [{"ts": (t0 + pd.Timedelta(minutes=i)).isoformat(),
-             "symbol": "A", "price": p} for i, p in enumerate(prices)]
-    d = tmp_path / "tws_in"
-    d.mkdir()
-    pd.DataFrame(rows[:3]).to_json(d / "b1.json", orient="records",
-                                   lines=True)
-    pd.DataFrame(rows[3:]).to_json(d / "b2.json", orient="records",
-                                   lines=True)
-    _stamp_dir(d)
-    src = (spark.readStream.format("json")
-           .schema("ts timestamp, symbol string, price double")
-           .option("maxFilesPerTrigger", 1).load(str(d)))
-    out = stateful.streaming_trailing_stops_tws(src, trail_pct=0.05)
-    q = (out.writeStream.format("memory").queryName("twsstops")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = (spark.sql("SELECT * FROM twsstops").toPandas()
-           .sort_values("ts").reset_index(drop=True))
-    assert len(got) == 6
-    batch = (risk.trailing_stops(
-        spark.createDataFrame(pd.DataFrame({
-            "symbol": "A",
-            "ts": pd.date_range("2024-01-01", periods=6, freq="1min"),
-            "close": prices})), 0.05, price_col="close")
-        .toPandas().sort_values("ts").reset_index(drop=True))
-    np.testing.assert_allclose(got["stop_price"], batch["stop_price"])
-    assert (got["stop_hit"].values == batch["stop_hit"].values).all()
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
@@ -382,25 +341,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     got = spark.sql("SELECT * FROM sdedup").toPandas()
     assert len(got) == 3
     assert set(zip(got.symbol, got.seq)) == {("A", 1), ("A", 2), ("B", 2)}
-
-
-def test_tws_gate_raises_clearly_without_protobuf(spark):
-    """Without protobuf the TWS twin must fail fast with a clear message,
-    not crash the streaming Python driver worker mid-query."""
-    try:
-        import google.protobuf  # noqa: F401
-        pytest.skip("protobuf present; gate not exercised")
-    except ImportError:
-        pass
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.streaming import (
-        stateful,
-    )
-
-    src = (spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-           .selectExpr("timestamp AS ts", "'A' AS symbol",
-                       "CAST(value AS DOUBLE) AS price"))
-    with pytest.raises(RuntimeError, match="protobuf"):
-        stateful.streaming_trailing_stops_tws(src)
 
 
 def test_idempotent_sink_survives_epoch_replay(spark, tmp_path):

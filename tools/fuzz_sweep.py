@@ -1102,7 +1102,7 @@ def t_binom_chunked_sql(p):
 
 
 def t_cc_chunked_spark(spark, sf_dir, p):
-    """Chunked star-CC vs a CLOSED-FORM oracle: edges chain consecutive
+    """Chunked connected components vs a CLOSED-FORM oracle: edges chain consecutive
     dense ranks except at every gap-th boundary, so components are the
     rank runs [m*gap, (m+1)*gap) and the cluster label is analytically
     the run head's doc_id — an oracle independent of any CC algorithm,
@@ -1128,7 +1128,7 @@ def t_cc_chunked_spark(spark, sf_dir, p):
     edges = (rid.filter(F.pmod("rid", F.lit(gap)) != gap - 1)
              .join(nxt, "rid")
              .select(F.col("doc_id").alias("doc_a"), "doc_b"))
-    labels = dedup.connected_components_star(
+    labels = dedup.connected_components(
         edges, d.select("doc_id"), chunk_classes=p["k"])
     return labels.select("doc_id", "cluster")
 
@@ -1148,15 +1148,17 @@ def t_cc_chunked_sql(p):
 def t_asof_auto_spark(spark, sf_dir, p):
     """auto-dispatch boundary fuzz (r9 VERDICT #7): randomize the quote
     density (qmod x tol) AND the amplification ceiling around the
-    dispatch boundary, then pin ALL THREE modes (auto + both forced) of
-    the same frame against one SQL oracle — transitively auto == join ==
-    merge, with the boundary crossed in both directions across seeds."""
-    import warnings
-
+    dispatch boundary, then pin asof_enrich and BOTH implementations it
+    chooses between (streaming_quote_enrich = "join",
+    streaming_asof_enrich = "merge") on the same frame against one SQL
+    oracle — transitively auto == join == merge, with the boundary
+    crossed in both directions across seeds."""
     from pyspark.sql import functions as F
 
     from build_a_market_data_etl_strategy_backtesting_engine_spark.streaming.joins import (  # noqa: E501
         asof_enrich,
+        streaming_asof_enrich,
+        streaming_quote_enrich,
     )
 
     ck = _ticks(spark, sf_dir).filter(F.col("symbol") == "click")
@@ -1174,14 +1176,15 @@ def t_asof_auto_spark(spark, sf_dir, p):
         )
     )
     tol = f"{p['tol']} seconds"
-    outs = []
-    with warnings.catch_warnings():
-        # forcing "join" above the sampled ceiling legitimately warns
-        warnings.simplefilter("ignore", UserWarning)
-        for m in ("auto", "join", "merge"):
-            out = asof_enrich(trades, quotes, tolerance=tol, mode=m,
-                              max_join_amplification=p["amp"])
-            outs.append(out.withColumn("mode", F.lit(m)))
+    outs = [
+        asof_enrich(trades, quotes, tolerance=tol,
+                    max_join_amplification=p["amp"])
+        .withColumn("mode", F.lit("auto")),
+        streaming_quote_enrich(trades, quotes, tolerance=tol)
+        .withColumn("mode", F.lit("join")),
+        streaming_asof_enrich(trades, quotes, tolerance=tol)
+        .withColumn("mode", F.lit("merge")),
+    ]
     u = outs[0].unionByName(outs[1]).unionByName(outs[2])
     return u.select(
         "mode", "symbol", F.unix_micros("ts").alias("ts_us"), "seq",
