@@ -1,19 +1,39 @@
-"""Exponentially-weighted moving statistics (EWM / MACD).
+"""Exponentially-weighted moving statistics: EWM mean, MACD, RiskMetrics
+EWMA and GARCH(1,1) volatility.
 
-Spark has no native EWM window aggregate (SURVEY §7.7.2). Two implementations:
+Spark has no native EWM window aggregate (SURVEY §7.7.2). ``ewm_mean`` and
+``macd`` run on ONE kernel of JVM window expressions, emitted as one
+``spark.sql`` statement. pandas' ``ewm(span, adjust=True).mean()`` with
+decay ``w = 1 - 2/(span + 1)`` is
 
-1. ``ewm_mean`` — Arrow-batched ``applyInPandas`` per symbol running pandas
-   ``ewm(span).mean()``: exact pandas parity (the reference's semantics at
-   ``/root/reference/backtesting/ml_strategy.py:151-155``,
-   ``portfolio_optimization.py:39-41``). Per-symbol groups scale out across
-   the cluster; within a symbol EWM is inherently sequential.
+    y_t = sum_{j<=t} w^(t-j) x_j / sum_{j<=t} w^(t-j)
 
-2. ``ewm_mean_expr`` — closed-form column expression for the adjust=True
-   weighting: y_t = sum_i x_i*(1-a)^(-i) / sum_i (1-a)^(-i) over an unbounded
-   running window (the (1-a)^t factor cancels in the ratio). Pure built-ins,
-   stays JVM-side; numerically valid while (1-a)^(-n) stays in double range
-   (n < ~700/ln(1/(1-a)) rows per partition) — fine for bar-level series,
-   use the pandas path for very long tick series.
+(the reference's semantics at ``ml_strategy.py:151-155`` and
+``portfolio_optimization.py:39-41``). Dividing both sums by ``w^t`` gives
+the closed form ``sum(x_j w^-j) / sum(w^-j)`` over a running window, but
+``w^-j`` overflows a double past :func:`unroll_row_bound` rows (3,823 at
+span 12). So the kernel cuts each symbol's rows into blocks of
+``B = unroll_row_bound(w)`` rows:
+
+- row ``i`` lies in block ``k = i div B`` at local index ``l = i mod B``;
+- running sums over ``(symbol, k)``: ``S = sum x w^-l`` and
+  ``SD = sum w^-l`` stay inside double range;
+- the block carry: ``S'`` and ``SD'``, the sums at the previous block's
+  last row, taken with ``last(..., true)`` over the rows up to 1 PRECEDING;
+- ``y = (S + w^B S') / (SD + w^B SD')``.
+
+The true carry also holds every older block, each scaled by a further
+``w^B`` = e^-639 (the bound keeps 10% of ln(DBL_MAX)), i.e. below 1e-270 of
+the previous block's share, far under the 2^-53 resolution of a double: one
+carry is exact to double precision at any series length. Block 0 has no
+carry and is exactly the closed form ``sum(x w^-i) / sum(w^-i)``. MACD's
+three spans share one block length (one extra sort) while the slowest
+span's ``w^B`` stays below 2^-60; a span past that blocks at its own bound.
+NULL values carry the last mean forward, like pandas' NaN handling.
+
+``ewma_volatility`` and ``garch_volatility`` keep their own unroll, whose
+power tables are tuned for bit-stability against DuckDB, and switch to a
+per-symbol recursion past the unroll's envelope.
 """
 
 from __future__ import annotations
@@ -23,9 +43,82 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals import (  # noqa: E501
+    _fresh,
+)
+from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
+    layered_sql,
+    sql_double,
+    sql_tmpl_ident,
+    with_columns_sql,
+)
+
 
 def ewm_alpha(span: int) -> float:
     return 2.0 / (span + 1.0)
+
+
+def _block_lens(spans) -> dict:
+    """Block length per span: the fastest span's bound, shared by every
+    span whose decay^B stays below 2^-60 (one (symbol, block) sort for
+    all of them); any other span blocks at its own bound."""
+    for s in spans:
+        if not float(s) >= 1.0:
+            raise ValueError(f"span={s}: must be >= 1")
+    bound = {s: max(1, unroll_row_bound(1.0 - ewm_alpha(s))) for s in spans}
+    shared = min(bound.values())
+    return {s: shared if (1.0 - ewm_alpha(s)) ** shared < 2.0 ** -60
+            else bound[s] for s in spans}
+
+
+def _ewm_sql(x: str, span: float, blk: int, sym: str, i: str, k: str,
+             s: str, d: str) -> tuple[list[str], str]:
+    """The blocked kernel for value ``x`` (quoted names; ``i`` is the
+    0-based row index, ``k`` the block of length ``blk``): the select
+    items of the block-sum layer (``s``, ``d``) and the EWM read from
+    them in the next layer."""
+    decay = 1.0 - ewm_alpha(span)
+    # the same literal the closed form used, so block 0 is bit-identical
+    p = f"power({sql_double(1.0 / decay if decay else 0.0)}, {i} % {blk})"
+    wk = (f"OVER (PARTITION BY {sym}, {k} ORDER BY {i}"
+          " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
+    # a NULL x adds no weight (pandas skips NaN), so a sum is 0, not NULL,
+    # until the first value
+    sums = [f"sum(coalesce({x} * {p}, 0.0D)) {wk} AS {s}",
+            f"sum(CASE WHEN {x} IS NOT NULL THEN {p} ELSE 0.0D END) {wk}"
+            f" AS {d}"]
+    wc = (f"OVER (PARTITION BY {sym} ORDER BY {k}, {i}"
+          " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)")
+
+    def carry(v: str) -> str:
+        # -0.0 in block 0: adding it is exact for every double
+        return (f"coalesce({sql_double(decay ** blk)} * last(CASE WHEN"
+                f" {i} % {blk} = {blk - 1} THEN {v} END, true) {wc}, -0.0D)")
+
+    return sums, f"({s} + {carry(s)}) / nullif({d} + {carry(d)}, 0.0D)"
+
+
+def _kernel(df: DataFrame, symbol_col: str, ts_col: str, spans,
+            *bases: str):
+    """Staging shared by the EWMs of one statement: the layers adding the
+    row index and the block column of each block length, the kernel for
+    one EWM (``(x, span, s, d) -> (block-sum items, EWM)``), and ``bases``
+    as quoted ``_fresh`` names."""
+    q = sql_tmpl_ident
+    blk = _block_lens(spans)
+    lens = sorted(set(blk.values()))
+    i, *rest = map(q, _fresh(df, "_i", *(f"_k{b}" for b in lens), *bases))
+    k_of = dict(zip(lens, rest))
+    sym = q(symbol_col)
+    rn = f"(row_number() OVER (PARTITION BY {sym} ORDER BY {q(ts_col)}) - 1)"
+    layers = [["*", f"{rn} AS {i}",
+               *(f"{rn} div {b} AS {k}" for b, k in k_of.items())]]
+
+    def ewm(x: str, span, s: str, d: str) -> tuple[list[str], str]:
+        b = blk[span]
+        return _ewm_sql(x, span, b, sym, i, k_of[b], s, d)
+
+    return layers, ewm, rest[len(lens):]
 
 
 def ewm_mean(
@@ -36,33 +129,13 @@ def ewm_mean(
     ts_col: str = "ts",
     out_col: str = "ewm",
 ) -> DataFrame:
-    """pandas-exact EWM mean (adjust=True) per symbol."""
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", `{out_col}` double"
-
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        pdf[out_col] = pdf[value_col].ewm(span=span, adjust=True).mean()
-        return pdf
-
-    return df.groupBy(symbol_col).applyInPandas(_run, schema=schema)
-
-
-def ewm_mean_expr(
-    value_col: str,
-    span: int,
-    w: Window,
-) -> Column:
-    """Closed-form EWM over window spec ``w`` (must be partitioned+ordered)."""
-    alpha = ewm_alpha(span)
-    beta_inv = 1.0 / (1.0 - alpha)
-    w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    i = F.row_number().over(w) - 1
-    u = F.pow(F.lit(beta_inv), i)
-    num = F.sum(F.col(value_col) * u).over(w_cum)
-    den = F.sum(u).over(w_cum)
-    return num / den
+    """pandas ``ewm(span, adjust=True).mean()`` per symbol, on the blocked
+    JVM kernel; ``out_col`` is added to the input's columns."""
+    layers, ewm, (s, d) = _kernel(df, symbol_col, ts_col, [span],
+                                  "_ewm_s", "_ewm_d")
+    sums, y = ewm(sql_tmpl_ident(value_col), span, s, d)
+    return layered_sql(df, [*layers, ["*", *sums],
+                            with_columns_sql(df.columns, {out_col: y})])
 
 
 def macd(
@@ -74,21 +147,25 @@ def macd(
     symbol_col: str = "symbol",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """MACD line/signal/histogram, pandas-exact (ml_strategy.py:151-155)."""
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", `macd` double, `macd_signal` double, `macd_hist` double"
-
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        fast_e = pdf[value_col].ewm(span=fast, adjust=True).mean()
-        slow_e = pdf[value_col].ewm(span=slow, adjust=True).mean()
-        pdf["macd"] = fast_e - slow_e
-        pdf["macd_signal"] = pdf["macd"].ewm(span=signal, adjust=True).mean()
-        pdf["macd_hist"] = pdf["macd"] - pdf["macd_signal"]
-        return pdf
-
-    return df.groupBy(symbol_col).applyInPandas(_run, schema=schema)
+    """MACD line/signal/histogram (ml_strategy.py:151-155): EWM(fast) -
+    EWM(slow), its EWM(signal), and their difference, on the blocked JVM
+    kernel as one statement."""
+    layers, ewm, (fs, fd, ss, sd, m, gs, gd, g) = _kernel(
+        df, symbol_col, ts_col, [fast, slow, signal], "_fast_s", "_fast_d",
+        "_slow_s", "_slow_d", "_macd", "_sig_s", "_sig_d", "_sig")
+    x = sql_tmpl_ident(value_col)
+    f_sums, f_y = ewm(x, fast, fs, fd)
+    s_sums, s_y = ewm(x, slow, ss, sd)
+    g_sums, g_y = ewm(m, signal, gs, gd)
+    return layered_sql(df, [
+        *layers,
+        ["*", *f_sums, *s_sums],
+        ["*", f"{f_y} - {s_y} AS {m}"],
+        ["*", *g_sums],
+        ["*", f"{g_y} AS {g}"],
+        with_columns_sql(df.columns, {"macd": m, "macd_signal": g,
+                                      "macd_hist": f"{m} - {g}"}),
+    ])
 
 
 # ------------------------------------------- RiskMetrics EWMA volatility
@@ -161,8 +238,8 @@ def ewma_variance_expr(
     ``v_t = lam * v_{t-1} + (1 - lam) * r_t^2`` seeded with
     ``v_1 = r_1^2``, unrolled to
     ``v_t = lam^i * (r_1^2 + (1-lam) * sum_{k>=2} lam^(-i_k) r_k^2)``
-    (``i`` = 0-based row index), so it stays a pure JVM window expression
-    like :func:`ewm_mean_expr`.
+    (``i`` = 0-based row index), so it stays a pure JVM window
+    expression.
 
     Numerically valid while ``lam^(-n)`` stays in double range
     (n < ~709/ln(1/lam) ≈ 11,400 rows per partition at lam=0.94) — ample

@@ -13,12 +13,12 @@ Reference dataflow (``/root/reference/backtesting/portfolio.py:169-220``,
 8. equity    = cumprod(1 + net_returns) * initial_cash
 9. emit the results frame
 
-Spark design: the whole kernel is ONE select over per-symbol windows — a
-single sort-shuffle on ``(symbol)``, then every step runs inside whole-stage
-codegen. cumprod has no native window aggregate; the standard idiom is
-``exp(sum(log1p(x)) over unbounded-preceding)`` (valid because net returns are
-> -1 by construction; SURVEY §7.7.1 — FP tolerance ~1e-9 relative vs an exact
-sequential product).
+Spark design: the whole kernel is ONE ``spark.sql`` statement over
+per-symbol windows — a single sort-shuffle on ``(symbol)``, then every step
+runs inside whole-stage codegen. cumprod has no native window aggregate;
+the standard idiom is ``exp(sum(log1p(x)) over unbounded-preceding)`` (valid
+because net returns are > -1 by construction; SURVEY §7.7.1 — FP tolerance
+~1e-9 relative vs an exact sequential product).
 
 The multi-asset variant keeps long format and adds one tiny aggregation by ts
 (one row per bar), mirroring ``portfolio.py:222-271``.
@@ -38,6 +38,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals import (  # noqa: E501
+    _fresh,
+)
+from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
+    layered_sql,
+    sql_double,
+    sql_tmpl_ident,
+)
 
 DEFAULT_COMMISSION = 0.001
 DEFAULT_SLIPPAGE = 0.0005
@@ -72,61 +81,49 @@ def backtest_signals(
     costs, net_returns, equity)``.  ``signal`` keeps the input signal's type
     (int signals stay int; fractional signals are NOT truncated).
     """
+    q = sql_tmpl_ident
+    src = "{df}"
+    frames = {}
     if signals is not None:
-        sig = signals.select(
-            F.col(symbol_col).alias(symbol_col),
-            F.col(ts_col).alias(ts_col),
-            F.col(signal_col).alias("_sig_in"),
-        )
-        base = prices.join(sig, on=[symbol_col, ts_col], how="left")
-        sig_expr = F.coalesce(F.col("_sig_in"), F.lit(0))
+        (sig_in,) = _fresh(prices, "_sig_in")
+        sig = f"coalesce({q(sig_in)}, 0)"
+        keys = f"{q(symbol_col)}, {q(ts_col)}"
+        src = (f"{{df}} LEFT JOIN (SELECT {keys}, {q(signal_col)} AS "
+               f"{q(sig_in)} FROM {{sig}}) USING ({keys})")
+        frames["sig"] = signals
     else:
-        base = prices
-        sig_expr = F.coalesce(F.col(signal_col), F.lit(0))
+        sig = f"coalesce({q(signal_col)}, 0)"
 
-    w = Window.partitionBy(symbol_col).orderBy(ts_col)
-    w_all = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    position = (sig_expr * F.lit(float(position_size))).cast("double")
+    position = f"CAST({sig} * {sql_double(position_size)} AS DOUBLE)"
     if weight_col is not None:
-        position = position * F.coalesce(F.col(weight_col), F.lit(0.0))
-    out = base.select(
-        F.col(symbol_col).alias("symbol"),
-        F.col(ts_col).alias("ts"),
-        F.col(price_col).cast("double").alias("price"),
-        sig_expr.alias("signal"),
-        position.alias("position"),
-    )
-    # lag(position) feeds both trade and strategy_returns — materialize it
-    # once (Catalyst computes one window expression per reference).
-    # (r12) One select per window LAYER instead of one withColumn per
-    # kernel step: every withColumn is a full Catalyst analysis pass over
-    # the whole upstream lineage, and the 7-step chain cost more driver
-    # time than the kernel's own execution at bench scale (guide §7.3).
-    # Layer 1 materializes the two lag results every later step reads;
-    # layer 2 is pure scalar arithmetic plus the equity cumprod window.
-    # Expressions, evaluation order and output columns are IDENTICAL.
-    returns = F.coalesce(F.col("price") / F.lag("price", 1).over(w) - 1, F.lit(0.0))
-    out = out.select(
-        "*",
-        F.lag("position", 1).over(w).alias("_prev_pos"),
-        returns.alias("returns"),
-    )
-    prev_pos = F.coalesce(F.col("_prev_pos"), F.lit(0.0))
-    trade = F.col("position") - prev_pos
-    strategy_returns = prev_pos * F.col("returns")
-    costs = F.abs(trade) * F.lit(float(commission) + float(slippage))
-    net = strategy_returns - costs
-    return out.select(
-        "symbol", "ts", "price", "signal", "position",
-        trade.alias("trade"),
-        "returns",
-        strategy_returns.alias("strategy_returns"),
-        costs.alias("costs"),
-        net.alias("net_returns"),
-        (F.exp(F.sum(F.log1p(net)).over(w_all)) * F.lit(float(initial_cash))
-         ).alias("equity"),
-    )
+        position += f" * coalesce({q(weight_col)}, 0.0D)"
+    w = "OVER (PARTITION BY symbol ORDER BY ts)"
+    w_all = ("OVER (PARTITION BY symbol ORDER BY ts"
+             " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
+    # One statement, one layer per window dependency: the projection, the
+    # two lag results every later step reads (lag(position) feeds both
+    # trade and strategy_returns — materialized once, as Catalyst
+    # computes one window expression per reference), then scalar
+    # arithmetic plus the equity cumprod window.
+    prev_pos = "coalesce(_prev_pos, 0.0D)"
+    trade = f"(position - {prev_pos})"
+    strategy_returns = f"({prev_pos} * returns)"
+    cost_rate = sql_double(float(commission) + float(slippage))
+    costs = f"(abs({trade}) * {cost_rate})"
+    net = f"({strategy_returns} - {costs})"
+    layers = [
+        [f"{q(symbol_col)} AS symbol", f"{q(ts_col)} AS ts",
+         f"CAST({q(price_col)} AS DOUBLE) AS price", f"{sig} AS signal",
+         f"{position} AS position"],
+        ["*", f"lag(position, 1) {w} AS _prev_pos",
+         f"coalesce(price / lag(price, 1) {w} - 1, 0.0D) AS returns"],
+        ["symbol", "ts", "price", "signal", "position", f"{trade} AS trade",
+         "returns", f"{strategy_returns} AS strategy_returns",
+         f"{costs} AS costs", f"{net} AS net_returns",
+         f"exp(sum(log1p({net})) {w_all}) * {sql_double(initial_cash)}"
+         " AS equity"],
+    ]
+    return layered_sql(prices, layers, source=src, **frames)
 
 
 def backtest_multi_asset(
@@ -160,8 +157,6 @@ def backtest_multi_asset(
 
     Returns ``(ts, strategy_returns, costs, net_returns, equity)``.
     """
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals import _fresh
-
     (c_w,) = _fresh(prices, "_w")
     if weights is None:
         if n_symbols is not None:

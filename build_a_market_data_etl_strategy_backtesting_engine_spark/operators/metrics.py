@@ -4,8 +4,8 @@ Reference: ``/root/reference/backtesting/metrics.py`` (PerformanceMetrics,
 defaults risk_free_rate=0.02, periods_per_year=252, :11-34; full set
 assembled by get_all_metrics :279-301). Each metric is a guarded aggregate
 expression; the whole suite evaluates as ONE hash aggregation over the
-results frame (plus a windowed pre-pass for the streak metrics, which need
-gaps-and-islands).
+results frame (plus a windowed pre-pass for drawdown and the streak
+metrics, which need gaps-and-islands), built as one SQL statement.
 
 Determinism: first/last-in-time use ``min_by/max_by(value, ts)``; the streak
 islands use explicit window ordering.
@@ -23,27 +23,30 @@ from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals
     _fresh,
 )
 from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
+    layered_sql,
     sql_double,
     sql_ident,
+    sql_tmpl_ident,
 )
 
 RISK_FREE_RATE = 0.02
 PERIODS_PER_YEAR = 252
 
 
-def _over(group: Sequence[str], ts_col: str, running: bool = False) -> str:
-    """``OVER (PARTITION BY group ORDER BY ts [ROWS ...])`` window text;
-    ``running`` adds the unbounded-preceding-to-current-row frame."""
-    spec = [f"PARTITION BY {', '.join(map(sql_ident, group))}"] if group else []
-    spec.append(f"ORDER BY {sql_ident(ts_col)}")
+def _over(group: Sequence[str], ts: str, running: bool = False) -> str:
+    """``OVER (PARTITION BY group ORDER BY ts [ROWS ...])`` window text
+    over quoted names; ``running`` adds the unbounded-preceding-to-
+    current-row frame."""
+    spec = [f"PARTITION BY {', '.join(group)}"] if group else []
+    spec.append(f"ORDER BY {ts}")
     if running:
         spec.append("ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
     return f"OVER ({' '.join(spec)})"
 
 
-def _runmax_sql(eq: str, group: Sequence[str], ts_col: str) -> str:
+def _runmax_sql(eq: str, group: Sequence[str], ts: str) -> str:
     """Running maximum of the equity curve."""
-    return f"max({eq}) {_over(group, ts_col, True)}"
+    return f"max({eq}) {_over(group, ts, True)}"
 
 
 def _drawdown_sql(eq: str, runmax: str) -> str:
@@ -52,19 +55,23 @@ def _drawdown_sql(eq: str, runmax: str) -> str:
     return f"({eq} - {runmax}) / {runmax}"
 
 
-def _streak_sql(r: str, group: Sequence[str], ts_col: str,
+def _streak_sql(r: str, group: Sequence[str], ts: str,
                 names: Sequence[str]):
     """Gaps-and-islands streak staging, one layer per window dependency:
     ``_flag`` = sign bucket of the return, ``_grp`` = island id (running
     count of flag changes), ``_streak`` = row_number within (group,
     island); plus the two aggregates reading them. ``names`` holds the
-    three staging column names, ``_fresh`` against the input."""
+    three quoted staging names, ``_fresh`` against the input.
+
+    ``_flag`` is never NULL, so ``NOT (flag <=> lag)`` is true on the
+    first row and on every change: one lag window, where the equivalent
+    ``lag IS NULL OR flag != lag`` made Catalyst compute it twice."""
     f, g, k = names
-    lag = f"lag({f}, 1) {_over(group, ts_col)}"
+    lag = f"lag({f}, 1) {_over(group, ts)}"
     flag = f"CASE WHEN {r} > 0 THEN 1 WHEN {r} < 0 THEN -1 ELSE 0 END AS {f}"
-    grp = (f"sum(CASE WHEN ({lag} IS NULL) OR ({f} != {lag}) THEN 1 "
-           f"ELSE 0 END) {_over(group, ts_col, True)} AS {g}")
-    streak = f"row_number() {_over([*group, g], ts_col)} AS {k}"
+    grp = (f"sum(CASE WHEN NOT ({f} <=> {lag}) THEN 1 "
+           f"ELSE 0 END) {_over(group, ts, True)} AS {g}")
+    streak = f"row_number() {_over([*group, g], ts)} AS {k}"
     aggs = [
         f"coalesce(max(CASE WHEN {f} = 1 THEN {k} END), 0)"
         " AS max_consecutive_wins",
@@ -72,11 +79,6 @@ def _streak_sql(r: str, group: Sequence[str], ts_col: str,
         " AS max_consecutive_losses",
     ]
     return flag, grp, streak, aggs
-
-
-def _agg(df: DataFrame, group: Sequence[str], aggs: list[str]) -> DataFrame:
-    exprs = [F.expr(a) for a in aggs]
-    return df.groupBy(*group).agg(*exprs) if group else df.agg(*exprs)
 
 
 def compute_metrics(
@@ -98,40 +100,41 @@ def compute_metrics(
     calmar_ratio, win_rate, profit_factor, num_trades, exposure, avg_win,
     avg_loss, n_periods [, max_consecutive_wins, max_consecutive_losses].
 
-    Every expression is SQL text, parsed JVM-side: the staging columns
-    arrive in one ``selectExpr`` per window-dependency layer (each call
-    re-analyzes the whole upstream lineage, guide §7.3) and the aggregates
-    in one ``agg``, so a build costs about a hundred py4j round trips
-    instead of the ~1,450 of a Column-API composition. Staging names are
-    ``_fresh``, so a caller column named like one passes through.
+    The suite is ONE ``spark.sql`` statement: one subquery per window-
+    dependency layer for the staging columns, then the grouped aggregate — one
+    Catalyst analysis and a few py4j round trips, where a Column-API
+    composition cost ~1,450. Staging names are ``_fresh``, so a caller
+    column named like one passes through.
     """
-    group = [symbol_col] if symbol_col else []
+    q = sql_tmpl_ident
+    group = [q(symbol_col)] if symbol_col else []
+    ts = q(ts_col)
     cols = set(results.columns)
     has_equity = equity_col in cols
     has_position = position_col in cols
-    df = results
-    r, eq, pos = map(sql_ident, (returns_col, equity_col, position_col))
+    r, eq, pos = map(q, (returns_col, equity_col, position_col))
     # returns_col leads so a derived returns column is never a staging name
-    _, eq_s, runmax_s, dd_s, trade_s, *streak_names = _fresh(
+    _, eq_s, runmax_s, dd_s, trade_s, *streak_names = map(q, _fresh(
         results, returns_col, "_eq", "_runmax", "_dd", "_trade_flag",
-        "_flag", "_grp", "_streak")
+        "_flag", "_grp", "_streak"))
 
+    layers = []
     if returns_col not in cols and has_equity:
-        df = df.selectExpr(
-            "*", f"coalesce({eq} / lag({eq}, 1) {_over(group, ts_col)} - 1,"
-            f" 0.0D) AS {r}")
+        layers.append([
+            "*", f"coalesce({eq} / lag({eq}, 1) {_over(group, ts)} - 1,"
+            f" 0.0D) AS {r}"])
 
     # drawdown pre-pass: equity (or synthetic cumprod equity), running max
     eq_src = (eq if has_equity else
-              f"exp(sum(log1p({r})) {_over(group, ts_col, True)})")
-    batch1 = [f"{eq_src} AS {eq_s}"]
-    batch2 = [f"{_runmax_sql(eq_s, group, ts_col)} AS {runmax_s}"]
-    batch3 = [f"{_drawdown_sql(eq_s, runmax_s)} AS {dd_s}"]
+              f"exp(sum(log1p({r})) {_over(group, ts, True)})")
+    batch1 = ["*", f"{eq_src} AS {eq_s}"]
+    batch2 = ["*", f"{_runmax_sql(eq_s, group, ts)} AS {runmax_s}"]
+    batch3 = ["*", f"{_drawdown_sql(eq_s, runmax_s)} AS {dd_s}"]
 
     # trade detection (metrics.py:194-206): position.diff() != 0
     if has_position:
         batch1.append(
-            f"CAST({pos} - coalesce(lag({pos}, 1) {_over(group, ts_col)},"
+            f"CAST({pos} - coalesce(lag({pos}, 1) {_over(group, ts)},"
             f" 0.0D) != 0 AS INT) AS {trade_s}")
         num_trades = f"sum({trade_s})"
         exposure = f"sum(CAST({pos} != 0 AS BIGINT)) / count(1)"
@@ -185,14 +188,13 @@ def compute_metrics(
         # existing exchange as additional sorts, and the streak maxes
         # join the main aggregation for free.
         flag, grp, streak, streak_aggs = _streak_sql(
-            r, group, ts_col, streak_names)
+            r, group, ts, streak_names)
         batch1.append(flag)
         batch2.append(grp)
         batch3.append(streak)
         aggs += streak_aggs
-    df = (df.selectExpr("*", *batch1).selectExpr("*", *batch2)
-          .selectExpr("*", *batch3))
-    return _agg(df, group, aggs)
+    layers += [batch1, batch2, batch3, [*group, *aggs]]
+    return layered_sql(results, layers, group_by=group)
 
 
 def consecutive_streaks(
@@ -204,13 +206,13 @@ def consecutive_streaks(
     """Max consecutive win / loss streaks via gaps-and-islands
     (metrics.py:208-238) — the same staging as ``compute_metrics``'s
     streak columns, as a standalone aggregate."""
-    group = list(group)
+    keys = [sql_tmpl_ident(g) for g in group]
     flag, grp, streak, aggs = _streak_sql(
-        sql_ident(returns_col), group, ts_col,
-        _fresh(results, "_flag", "_grp", "_streak"))
-    df = (results.selectExpr("*", flag).selectExpr("*", grp)
-          .selectExpr("*", streak))
-    return _agg(df, group, aggs)
+        sql_tmpl_ident(returns_col), keys, sql_tmpl_ident(ts_col),
+        [sql_tmpl_ident(n) for n in _fresh(results, "_flag", "_grp",
+                                           "_streak")])
+    layers = [["*", flag], ["*", grp], ["*", streak], [*keys, *aggs]]
+    return layered_sql(results, layers, group_by=keys)
 
 
 def drawdown_series(
@@ -221,10 +223,10 @@ def drawdown_series(
 ) -> DataFrame:
     """Per-bar ``running_max`` and ``drawdown`` columns, with the same
     fragments ``compute_metrics`` aggregates into ``max_drawdown``."""
-    group = [symbol_col] if symbol_col else []
+    group = [sql_ident(symbol_col)] if symbol_col else []
     eq = sql_ident(equity_col)
     return results.withColumn(
-        "running_max", F.expr(_runmax_sql(eq, group, ts_col))
+        "running_max", F.expr(_runmax_sql(eq, group, sql_ident(ts_col)))
     ).withColumn("drawdown", F.expr(_drawdown_sql(eq, "running_max")))
 
 

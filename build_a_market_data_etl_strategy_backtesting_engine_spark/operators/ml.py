@@ -31,16 +31,16 @@ def engineer_features(
 ) -> DataFrame:
     """The reference feature battery (ml_strategy.py:125-175): returns, SMA
     ratios, RSI, Bollinger position, rolling volatility, volume ratio."""
-    w = signals.sym_window(symbol_col, ts_col)
+    keys = (symbol_col, ts_col)
     df = bars
-    df = df.withColumn("ret_1", signals.pct_change(price_col, w))
-    df = df.withColumn("ret_5", signals.pct_change(price_col, w, 5))
+    df = df.withColumn("ret_1", signals.pct_change(price_col, 1, *keys))
+    df = df.withColumn("ret_5", signals.pct_change(price_col, 5, *keys))
     df = df.withColumn(
         "sma_ratio_10",
-        F.col(price_col) / signals.rolling_mean(price_col, 10, w))
+        F.col(price_col) / signals.rolling_mean(price_col, 10, *keys))
     df = df.withColumn(
         "sma_ratio_20",
-        F.col(price_col) / signals.rolling_mean(price_col, 20, w))
+        F.col(price_col) / signals.rolling_mean(price_col, 20, *keys))
     df = signals.with_rsi(df, 14, price_col, symbol_col, ts_col)
     df = signals.with_bollinger(df, 20, 2.0, price_col, symbol_col, ts_col)
     df = df.withColumn(

@@ -13,9 +13,13 @@ Reference semantics, ported exactly (cited per method):
 
 Spark design (SURVEY §3.4): these are inherently sequential per symbol —
 the ONE operator family where imperative code is the correct answer. Batch:
-``applyInPandas`` per symbol with the loop inside the group (cross-symbol
-parallelism, exact within-symbol sequencing). Streaming: the same kernel
-runs in ``applyInPandasWithState`` keyed by symbol
+a grouped map per symbol with the loop inside the group (cross-symbol
+parallelism, exact within-symbol sequencing). The event-driven engine maps
+with ``applyInArrow``: it loops over the group's Arrow columns as Python
+lists and returns Arrow arrays, building no pandas frame per group; the
+order book keeps ``applyInPandas``. Every Python task pays a fixed worker
+cost (SCALING.md), so an operator that can be a window expression is one.
+Streaming: the matcher runs in ``applyInPandasWithState`` keyed by symbol
 (``streaming.stateful.streaming_order_book``). A shared cash
 account across symbols forces a single group — same limit as the reference
 (documented divergence: we default to per-symbol cash budgets to stay
@@ -387,39 +391,60 @@ def event_driven_backtest(
     the per-symbol budget explicit; when omitted it is derived lazily via a
     broadcast 1-row countDistinct frame (no eager job at plan-build time).
     """
-    out_schema = (f"{symbol_col} string, {ts_col} timestamp, price double, "
-                  "signal int, position double, cash double, equity double")
+    import pyarrow as pa
+
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions.ewm import (  # noqa: E501
+        _key_ts_schema,
+    )
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals import (  # noqa: E501
+        _fresh,
+    )
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (  # noqa: E501
+        sql_double,
+        sql_ident,
+    )
+
+    out_schema = _key_ts_schema(
+        bars, symbol_col, ts_col,
+        "price double, signal int, position double, cash double, "
+        "equity double")
     comm, slip = float(commission), float(slippage)
-
+    # the four used columns only: caller columns never meet the staging
+    # names, and the Arrow batches carry nothing the loop does not read
+    c_budget, c_group = _fresh(bars, "_budget", "_g")
+    q = sql_ident
+    used = [q(symbol_col), q(ts_col),
+            f"CAST({q(price_col)} AS DOUBLE) AS {q(price_col)}",
+            q(signal_col)]
+    total = sql_double(initial_cash)
     if shared_cash:
-        grouped = bars.withColumn(
-            "_budget", F.lit(float(initial_cash))
-        ).withColumn("_g", F.lit(1)).groupBy("_g")
+        grouped = bars.selectExpr(
+            *used, f"{total} AS {q(c_budget)}", f"1 AS {q(c_group)}",
+        ).groupBy(c_group)
+    elif n_symbols is not None:
+        grouped = bars.selectExpr(
+            *used,
+            f"{sql_double(float(initial_cash) / max(n_symbols, 1))}"
+            f" AS {q(c_budget)}",
+        ).groupBy(symbol_col)
     else:
-        if n_symbols is not None:
-            budget_col = F.lit(float(initial_cash) / max(n_symbols, 1))
-            wtd = bars.withColumn("_budget", budget_col)
-        else:
-            n_df = bars.select(
-                (F.lit(float(initial_cash))
-                 / F.greatest(F.countDistinct(symbol_col), F.lit(1))
-                 ).alias("_budget")
-            )
-            wtd = bars.crossJoin(F.broadcast(n_df))
-        grouped = wtd.groupBy(symbol_col)
+        wtd = bars.selectExpr(*used)
+        n_df = wtd.selectExpr(
+            f"{total} / greatest(count(DISTINCT {q(symbol_col)}), 1)"
+            f" AS {q(c_budget)}")
+        grouped = wtd.crossJoin(F.broadcast(n_df)).groupBy(symbol_col)
 
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        budget = float(pdf["_budget"].iloc[0])
-        pdf = pdf.drop(columns=["_budget"])
-        pdf = pdf.sort_values([ts_col, symbol_col]).reset_index(drop=True)
-        cash = budget
-        positions: dict[str, float] = {}
-        last_px: dict[str, float] = {}
-        rows = []
-        for row in pdf.itertuples(index=False):
-            sym = getattr(row, symbol_col)
-            px = getattr(row, price_col)
-            sig = getattr(row, signal_col) or 0
+    def _run(table: pa.Table) -> pa.Table:
+        cash = float(table.column(c_budget)[0].as_py())
+        table = table.sort_by([(ts_col, "ascending"),
+                               (symbol_col, "ascending")])
+        positions: dict = {}
+        last_px: dict = {}
+        out_px, out_sig, out_pos, out_cash, out_eq = [], [], [], [], []
+        for sym, px, sig in zip(table.column(symbol_col).to_pylist(),
+                                table.column(price_col).to_pylist(),
+                                table.column(signal_col).to_pylist()):
+            sig = sig or 0  # a missing signal is flat, as in the kernel
             last_px[sym] = px
             desired = sig * shares_per_unit
             cur = positions.get(sym, 0.0)
@@ -439,14 +464,22 @@ def event_driven_backtest(
             equity = cash + sum(
                 positions.get(s, 0.0) * last_px.get(s, 0.0) for s in positions
             )
-            rows.append((sym, getattr(row, ts_col), px, int(sig),
-                         positions.get(sym, 0.0), cash, equity))
-        out = pd.DataFrame(rows, columns=[symbol_col, ts_col, "price",
-                                          "signal", "position", "cash",
-                                          "equity"])
-        return out
+            out_px.append(px)
+            out_sig.append(int(sig))
+            out_pos.append(positions.get(sym, 0.0))
+            out_cash.append(cash)
+            out_eq.append(equity)
+        ts = table.column(ts_col)
+        if pa.types.is_timestamp(ts.type) and ts.type.tz:
+            # the batches carry the session zone; the result must say UTC
+            ts = ts.cast(pa.timestamp(ts.type.unit, "UTC"))
+        f64 = pa.float64()
+        return pa.Table.from_arrays(
+            [table.column(symbol_col), ts,
+             pa.array(out_px, f64), pa.array(out_sig, pa.int32()),
+             pa.array(out_pos, f64), pa.array(out_cash, f64),
+             pa.array(out_eq, f64)],
+            names=[symbol_col, ts_col, "price", "signal", "position", "cash",
+                   "equity"])
 
-    if shared_cash:
-        return grouped.applyInPandas(
-            lambda pdf: _run(pdf.drop(columns=["_g"])), out_schema)
-    return grouped.applyInPandas(_run, out_schema)
+    return grouped.applyInArrow(_run, out_schema)

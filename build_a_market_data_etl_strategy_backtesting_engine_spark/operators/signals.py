@@ -7,13 +7,22 @@ volume ratio).
 
 pandas-parity rules (SURVEY §7.7.7):
 - ``rolling(N)`` yields NaN for the first N-1 rows and NaN comparisons are
-  False in signal masks. Spark's ``avg().over(rowsBetween(-(N-1),0))`` yields
+  False in signal masks. Spark's ``avg() OVER (ROWS N-1 PRECEDING)`` yields
   partial-window values instead, so every rolling expression is gated with
-  ``row_number() >= N`` -> NULL during warm-up; ``when`` treats NULL
+  ``row_number() >= N`` -> NULL during warm-up; ``CASE`` treats NULL
   comparisons as false exactly like the pandas NaN masks.
-- every window has an explicit orderBy; all state is per-symbol
-  (``partitionBy(symbol)``) so a thousand symbols parallelize across the
+- every window has an explicit ORDER BY; all state is per-symbol
+  (``PARTITION BY symbol``) so a thousand symbols parallelize across the
   cluster and one sort per symbol-partition is the only shuffle.
+
+Each indicator and window strategy below is ONE ``spark.sql`` statement
+(``sqlapi.layered_sql``): one subquery per window layer, each window result
+staged once under a ``_fresh`` name (Catalyst computes one window
+expression per reference, so inlining a window result into a CASE
+multiplies it), then the CASE arithmetic. A call is one Catalyst analysis
+and a few py4j calls instead of one analysis per ``withColumn``. Each formula has one definition, its SQL
+fragment below; the Column helpers ``rolling_mean``, ``rolling_std`` and
+``pct_change`` are ``F.expr`` wrappers over the same fragments.
 
 A "strategy" in this engine is any function ``DataFrame -> DataFrame`` adding
 a ``signal`` int column in {-1, 0, 1}; these are the built-ins, and arbitrary
@@ -30,48 +39,76 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
+    layered_sql,
+    sql_double,
+    sql_ident,
+    sql_tmpl_ident,
+    with_columns_sql,
+)
+
 
 def sym_window(symbol_col: str = "symbol", ts_col: str = "ts") -> Window:
     return Window.partitionBy(symbol_col).orderBy(ts_col)
 
 
-def _rn(w) -> Column:
-    return F.row_number().over(w)
+# ------------------------------------------- SQL fragments (quoted names)
+
+def _over(sym: str, ts: str, n: int | None = None) -> str:
+    """Per-symbol window text; ``n`` adds the trailing ``n``-row frame of
+    pandas ``rolling(n)``."""
+    frame = ""
+    if n is not None:
+        lo = "CURRENT ROW" if n == 1 else f"{n - 1} PRECEDING"
+        frame = f" ROWS BETWEEN {lo} AND CURRENT ROW"
+    return f"OVER (PARTITION BY {sym} ORDER BY {ts}{frame})"
 
 
-def rolling_mean(col: str, n: int, w) -> Column:
-    """pandas ``rolling(n).mean()``: NULL for the first n-1 rows."""
-    frame = w.rowsBetween(-(n - 1), 0)
-    return F.when(_rn(w) >= n, F.avg(col).over(frame))
+def _gate(rn: str, n: int, value: str) -> str:
+    """NULL warm-up: ``value`` from the ``n``-th row on."""
+    return f"CASE WHEN {rn} >= {n} THEN {value} END"
 
 
-def rolling_std(col: str, n: int, w) -> Column:
-    """pandas ``rolling(n).std()`` (sample std), NULL warm-up."""
-    frame = w.rowsBetween(-(n - 1), 0)
-    return F.when(_rn(w) >= n, F.stddev_samp(col).over(frame))
+def _pct_sql(c: str, prev: str) -> str:
+    """``c / prev - 1`` — NULL on warm-up rows like pandas.
 
-
-def rolling_sum(col: str, n: int, w) -> Column:
-    frame = w.rowsBetween(-(n - 1), 0)
-    return F.when(_rn(w) >= n, F.sum(col).over(frame))
-
-
-def pct_change(col: str, w, periods: int = 1) -> Column:
-    """``col / lag(col, n) - 1`` — NULL on warm-up rows like pandas.
-
-    A zero lag value follows pandas float semantics (x/0 -> ±inf,
+    A zero ``prev`` follows pandas float semantics (x/0 -> ±inf,
     0/0 -> NaN) instead of throwing under ANSI mode (Spark 4 default —
     found by the parameter fuzzer on an all-zero-volume window, the
     same crash class as with_volume_ratio)."""
-    prev = F.lag(col, periods).over(w)
-    c = F.col(col)
-    return (
-        F.when(prev != 0, c / prev - 1)
-        .when(prev.isNull(), F.lit(None).cast("double"))
-        .when(c > 0, F.lit(float("inf")))
-        .when(c < 0, F.lit(float("-inf")))
-        .otherwise(F.lit(float("nan")))
-    )
+    return (f"CASE WHEN {prev} != 0 THEN {c} / {prev} - 1"
+            f" WHEN {prev} IS NULL THEN CAST(NULL AS DOUBLE)"
+            f" WHEN {c} > 0 THEN CAST('Infinity' AS DOUBLE)"
+            f" WHEN {c} < 0 THEN CAST('-Infinity' AS DOUBLE)"
+            " ELSE CAST('NaN' AS DOUBLE) END")
+
+
+def _rolling_col(fn: str, col: str, n: int, symbol_col: str,
+                 ts_col: str) -> Column:
+    s, t = sql_ident(symbol_col), sql_ident(ts_col)
+    return F.expr(_gate(f"row_number() {_over(s, t)}", n,
+                        f"{fn}({sql_ident(col)}) {_over(s, t, n)}"))
+
+
+def rolling_mean(col: str, n: int, symbol_col: str = "symbol",
+                 ts_col: str = "ts") -> Column:
+    """pandas ``rolling(n).mean()``: NULL for the first n-1 rows."""
+    return _rolling_col("avg", col, n, symbol_col, ts_col)
+
+
+def rolling_std(col: str, n: int, symbol_col: str = "symbol",
+                ts_col: str = "ts") -> Column:
+    """pandas ``rolling(n).std()`` (sample std), NULL warm-up."""
+    return _rolling_col("stddev_samp", col, n, symbol_col, ts_col)
+
+
+def pct_change(col: str, periods: int = 1, symbol_col: str = "symbol",
+               ts_col: str = "ts") -> Column:
+    """pandas ``pct_change(periods)`` per symbol (see :func:`_pct_sql`)."""
+    c = sql_ident(col)
+    prev = (f"lag({c}, {int(periods)}) "
+            f"{_over(sql_ident(symbol_col), sql_ident(ts_col))}")
+    return F.expr(_pct_sql(c, prev))
 
 
 def _fresh(df: DataFrame, *bases: str) -> list[str]:
@@ -90,25 +127,21 @@ def _fresh(df: DataFrame, *bases: str) -> list[str]:
     return out
 
 
-def with_pct_change(df: DataFrame, col: str, w, periods: int = 1,
-                    out_col: str = "_pct") -> DataFrame:
-    """:func:`pct_change` with the lag hoisted into a projection: the
-    Column form references ``lag`` in three CASE branches and Catalyst
-    computes a separate window expression for each reference, so callers
-    that then reference the result twice pay 6 lags. Materializing
-    ``lag`` once makes the CASE pure scalar codegen over it."""
-    (pc_prev,) = _fresh(df, "_pc_prev")
-    prev = F.col(pc_prev)
-    c = F.col(col)
-    expr = (
-        F.when(prev != 0, c / prev - 1)
-        .when(prev.isNull(), F.lit(None).cast("double"))
-        .when(c > 0, F.lit(float("inf")))
-        .when(c < 0, F.lit(float("-inf")))
-        .otherwise(F.lit(float("nan")))
-    )
-    return (df.withColumn(pc_prev, F.lag(col, periods).over(w))
-              .withColumn(out_col, expr).drop(pc_prev))
+def _staged(df: DataFrame, *bases: str) -> list[str]:
+    """:func:`_fresh` names, quoted for statement text."""
+    return [sql_tmpl_ident(n) for n in _fresh(df, *bases)]
+
+
+def _statement(df: DataFrame, windows: list[list[str]],
+               outputs: dict[str, str]) -> DataFrame:
+    """``df`` plus ``outputs`` (``withColumns`` placement), computed over
+    the staged ``windows`` layers, as one statement."""
+    layers = [["*", *items] for items in windows]
+    return layered_sql(df, [*layers, with_columns_sql(df.columns, outputs)])
+
+
+def _keys(*cols: str) -> list[str]:
+    return [sql_tmpl_ident(c) for c in cols]
 
 
 def simple_returns(df: DataFrame, price_col: str = "close",
@@ -116,11 +149,13 @@ def simple_returns(df: DataFrame, price_col: str = "close",
                    out_col: str = "returns", fill_first: bool = True) -> DataFrame:
     """Per-symbol simple returns; first row 0 where the reference fills
     (portfolio.py:193 ``pct_change().fillna(0)``)."""
-    w = sym_window(symbol_col, ts_col)
-    df = with_pct_change(df, price_col, w, out_col=out_col)
+    s, t, p = _keys(symbol_col, ts_col, price_col)
+    (prev,) = _staged(df, "_pc_prev")
+    ret = _pct_sql(p, prev)
     if fill_first:
-        df = df.withColumn(out_col, F.coalesce(F.col(out_col), F.lit(0.0)))
-    return df
+        ret = f"coalesce({ret}, 0.0D)"
+    return _statement(df, [[f"lag({p}, 1) {_over(s, t)} AS {prev}"]],
+                      {out_col: ret})
 
 
 # ---------------------------------------------------------------- indicators
@@ -131,54 +166,46 @@ def with_rsi(df: DataFrame, n: int = 14, price_col: str = "close",
     """Simple-average RSI (NOT Wilder smoothing), matching
     ``ml_strategy.py:144-149``: gain = mean_n(max(delta,0)),
     loss = mean_n(max(-delta,0)), rsi = 100 - 100/(1+gain/loss)."""
-    w = sym_window(symbol_col, ts_col)
-    # hoist every window result before the CASEs (each Column reference
-    # is a separate window expression to Catalyst: the inlined form paid
-    # 6 lags + 10 rn/avg pairs; this pays 1 lag + 2 rn + 2 avg)
-    c_prev, c_gain, c_loss, c_g, c_l = _fresh(
-        df, "_rsi_prev", "_gain", "_loss", "_g", "_l")
-    df = df.withColumn(c_prev, F.lag(price_col, 1).over(w))
-    delta = F.col(price_col) - F.col(c_prev)
-    df = df.withColumns({
-        c_gain: F.when(delta > 0, delta).otherwise(
-            F.when(delta.isNotNull(), F.lit(0.0))),
-        c_loss: F.when(delta < 0, -delta).otherwise(
-            F.when(delta.isNotNull(), F.lit(0.0))),
-    })
+    s, t, p = _keys(symbol_col, ts_col, price_col)
+    prev, rn, gain, loss, g, lo = _staged(
+        df, "_rsi_prev", "_rn", "_gain", "_loss", "_g", "_l")
+    delta = f"({p} - {prev})"
     # pandas: delta has 1 NaN then rolling(n) -> first valid at row n+1
-    frame = w.rowsBetween(-(n - 1), 0)
-    df = df.withColumns({
-        c_g: F.when(_rn(w) >= n + 1, F.avg(c_gain).over(frame)),
-        c_l: F.when(_rn(w) >= n + 1, F.avg(c_loss).over(frame)),
-    })
-    gain, loss = F.col(c_g), F.col(c_l)
-    rs = gain / loss
-    rsi = F.lit(100.0) - F.lit(100.0) / (F.lit(1.0) + rs)
+    windows = [
+        [f"lag({p}, 1) {_over(s, t)} AS {prev}",
+         f"row_number() {_over(s, t)} AS {rn}"],
+        [f"CASE WHEN {delta} > 0 THEN {delta} ELSE CASE WHEN {delta}"
+         f" IS NOT NULL THEN 0.0D END END AS {gain}",
+         f"CASE WHEN {delta} < 0 THEN -{delta} ELSE CASE WHEN {delta}"
+         f" IS NOT NULL THEN 0.0D END END AS {loss}"],
+        [f"{_gate(rn, n + 1, f'avg({gain}) {_over(s, t, n)}')} AS {g}",
+         f"{_gate(rn, n + 1, f'avg({loss}) {_over(s, t, n)}')} AS {lo}"],
+    ]
     # loss == 0, gain > 0 -> rs = inf -> pandas RSI = 100; but a fully flat
     # stretch (gain == 0 AND loss == 0) is pandas 0/0 = NaN -> NULL here,
     # not 100 — emitting 100 would flip overbought signals on constant prices.
-    rsi = (
-        F.when((loss == 0) & (gain == 0), F.lit(None).cast("double"))
-        .when(loss == 0, F.lit(100.0))
-        .otherwise(rsi)
-    )
-    return df.withColumn(out_col, rsi).drop(c_prev, c_gain, c_loss, c_g, c_l)
+    rsi = (f"CASE WHEN ({lo} = 0) AND ({g} = 0) THEN CAST(NULL AS DOUBLE)"
+           f" WHEN {lo} = 0 THEN 100.0D"
+           f" ELSE 100.0D - 100.0D / (1.0D + {g} / {lo}) END")
+    return _statement(df, windows, {out_col: rsi})
 
 
 def with_bollinger(df: DataFrame, n: int = 20, k: float = 2.0,
                    price_col: str = "close", symbol_col: str = "symbol",
                    ts_col: str = "ts") -> DataFrame:
     """SMA_n +/- k*STD_n (ml_strategy.py:157-161)."""
-    w = sym_window(symbol_col, ts_col)
-    # bb_mid is reused by both bands: reference the materialized column
-    # (inlining recomputes the avg window expression 3x and std 2x)
-    (c_sd,) = _fresh(df, "_bb_sd")
-    df = df.withColumns({"bb_mid": rolling_mean(price_col, n, w),
-                         c_sd: rolling_std(price_col, n, w)})
-    mid, sd = F.col("bb_mid"), F.col(c_sd)
-    return (df.withColumns({"bb_upper": mid + k * sd,
-                            "bb_lower": mid - k * sd})
-              .drop(c_sd))
+    s, t, p = _keys(symbol_col, ts_col, price_col)
+    rn, m, sd = _staged(df, "_rn", "_bb_m", "_bb_sd")
+    mid, dev = _gate(rn, n, m), _gate(rn, n, sd)
+    kk = sql_double(k)
+    return _statement(
+        df,
+        [[f"row_number() {_over(s, t)} AS {rn}",
+          f"avg({p}) {_over(s, t, n)} AS {m}",
+          f"stddev_samp({p}) {_over(s, t, n)} AS {sd}"]],
+        {"bb_mid": mid,
+         "bb_upper": f"({mid}) + ({dev}) * {kk}",
+         "bb_lower": f"({mid}) - ({dev}) * {kk}"})
 
 
 def with_rolling_volatility(df: DataFrame, n: int = 20,
@@ -186,13 +213,15 @@ def with_rolling_volatility(df: DataFrame, n: int = 20,
                             symbol_col: str = "symbol", ts_col: str = "ts",
                             out_col: str = "volatility") -> DataFrame:
     """``pct_change().rolling(n).std()`` (ml_strategy.py:174-175)."""
-    w = sym_window(symbol_col, ts_col)
-    (c_r,) = _fresh(df, "_r")
-    df = with_pct_change(df, price_col, w, out_col=c_r)
+    s, t, p = _keys(symbol_col, ts_col, price_col)
+    prev, rn, r = _staged(df, "_pc_prev", "_rn", "_r")
     # pandas: 1 NaN from pct_change, so first valid at row n+1
-    frame = w.rowsBetween(-(n - 1), 0)
-    vol = F.when(_rn(w) >= n + 1, F.stddev_samp(c_r).over(frame))
-    return df.withColumn(out_col, vol).drop(c_r)
+    return _statement(
+        df,
+        [[f"lag({p}, 1) {_over(s, t)} AS {prev}",
+          f"row_number() {_over(s, t)} AS {rn}"],
+         [f"{_pct_sql(p, prev)} AS {r}"]],
+        {out_col: _gate(rn, n + 1, f"stddev_samp({r}) {_over(s, t, n)}")})
 
 
 def with_volume_ratio(df: DataFrame, n: int = 20, volume_col: str = "volume",
@@ -204,54 +233,59 @@ def with_volume_ratio(df: DataFrame, n: int = 20, volume_col: str = "volume",
     volume == 0 — pandas emits 0/0 = NaN there; the bare division
     throws under ANSI mode (found by the parameter fuzzer: two
     consecutive zero-volume bars at n=2)."""
-    w = sym_window(symbol_col, ts_col)
-    (c_m,) = _fresh(df, "_vr_m")
-    df = df.withColumn(c_m, rolling_mean(volume_col, n, w))
-    m = F.col(c_m)  # hoisted: 3 CASE references = 1 window expr
-    ratio = (F.when(m != 0, F.col(volume_col) / m)
-             .when(m == 0, F.lit(float("nan"))))
-    return df.withColumn(out_col, ratio).drop(c_m)
+    s, t, v = _keys(symbol_col, ts_col, volume_col)
+    rn, m = _staged(df, "_rn", "_vr_m")
+    mg = f"({_gate(rn, n, m)})"
+    return _statement(
+        df,
+        [[f"row_number() {_over(s, t)} AS {rn}",
+          f"avg({v}) {_over(s, t, n)} AS {m}"]],
+        {out_col: f"CASE WHEN {mg} != 0 THEN {v} / {mg}"
+                  f" WHEN {mg} = 0 THEN CAST('NaN' AS DOUBLE) END"})
 
 
 # ---------------------------------------------------------------- strategies
+
+def _signal(cases: str) -> str:
+    return f"CAST(CASE {cases} ELSE 0 END AS INT)"
+
 
 def mean_reversion_signal(df: DataFrame, n: int = 20, num_std: float = 2.0,
                           price_col: str = "close", symbol_col: str = "symbol",
                           ts_col: str = "ts", out_col: str = "signal") -> DataFrame:
     """z = (close - SMA_n)/STD_n; +1 if z < -k, -1 if z > k, else 0
     (strategy.py:69-111)."""
-    w = sym_window(symbol_col, ts_col)
-    # Materialize the window results ONCE: Catalyst does not dedup equal
-    # window-expression instances, so inlining sd/mid into the z CASE and
-    # z into the signal CASE computes stddev 4x and row_number 6x in the
-    # Window operator (measured r8; the CASE itself is required — ANSI
-    # mode throws DIVIDE_BY_ZERO even for doubles).
-    c_sd, c_mid = _fresh(df, "_mr_sd", "_mr_mid")
-    # one withColumns batch = one Catalyst analysis pass for both
-    # independent window results (r12, guide §7.3)
-    df = df.withColumns({c_sd: rolling_std(price_col, n, w),
-                         c_mid: rolling_mean(price_col, n, w)})
-    sd = F.col(c_sd)
+    s, t, p = _keys(symbol_col, ts_col, price_col)
+    rn, sd, mid = _staged(df, "_rn", "_mr_sd", "_mr_mid")
+    g_sd, g_mid = f"({_gate(rn, n, sd)})", f"({_gate(rn, n, mid)})"
     # sd == 0 (constant window) implies price == mean, so pandas z is
     # 0/0 = NaN and both comparisons are False -> signal 0. Emit NULL z
     # there: ANSI mode would throw on the division, and Spark's
     # NaN-sorts-greatest comparison rule would otherwise flip the
     # signal to -1 where pandas says 0.
-    z = F.when(sd != 0, (F.col(price_col) - F.col(c_mid)) / sd)
-    sig = (F.when(z < -num_std, 1).when(z > num_std, -1).otherwise(0)
-           .cast("int"))
-    return df.withColumn(out_col, sig).drop(c_sd, c_mid)
+    z = f"(CASE WHEN {g_sd} != 0 THEN ({p} - {g_mid}) / {g_sd} END)"
+    return _statement(
+        df,
+        [[f"row_number() {_over(s, t)} AS {rn}",
+          f"stddev_samp({p}) {_over(s, t, n)} AS {sd}",
+          f"avg({p}) {_over(s, t, n)} AS {mid}"]],
+        {out_col: _signal(f"WHEN {z} < {sql_double(-num_std)} THEN 1"
+                          f" WHEN {z} > {sql_double(num_std)} THEN -1")})
 
 
 def ma_cross_signal(df: DataFrame, fast: int = 10, slow: int = 50,
                     price_col: str = "close", symbol_col: str = "symbol",
                     ts_col: str = "ts", out_col: str = "signal") -> DataFrame:
     """+1 while SMA_fast > SMA_slow else 0 (strategy.py:114-153)."""
-    w = sym_window(symbol_col, ts_col)
-    f_ma = rolling_mean(price_col, fast, w)
-    s_ma = rolling_mean(price_col, slow, w)
-    sig = F.when(f_ma > s_ma, 1).otherwise(0).cast("int")
-    return df.withColumn(out_col, sig)
+    s, t, p = _keys(symbol_col, ts_col, price_col)
+    rn, f_ma, s_ma = _staged(df, "_rn", "_ma_f", "_ma_s")
+    return _statement(
+        df,
+        [[f"row_number() {_over(s, t)} AS {rn}",
+          f"avg({p}) {_over(s, t, fast)} AS {f_ma}",
+          f"avg({p}) {_over(s, t, slow)} AS {s_ma}"]],
+        {out_col: _signal(f"WHEN ({_gate(rn, fast, f_ma)})"
+                          f" > ({_gate(rn, slow, s_ma)}) THEN 1")})
 
 
 def momentum_signal(df: DataFrame, lookback: int = 20, threshold: float = 0.0,
@@ -259,16 +293,16 @@ def momentum_signal(df: DataFrame, lookback: int = 20, threshold: float = 0.0,
                     ts_col: str = "ts", out_col: str = "signal") -> DataFrame:
     """N-period momentum: +1 if pct_change(lookback) > threshold, -1 if
     < -threshold (strategy.py:178-194)."""
-    w = sym_window(symbol_col, ts_col)
-    # hoisted: the Column-form pct_change referenced twice costs 6 lag
-    # window expressions; this is 1 lag + scalar CASEs.
-    (c_mom,) = _fresh(df, "_mom")
-    df = with_pct_change(df, price_col, w, periods=lookback,
-                         out_col=c_mom)
-    mom = F.col(c_mom)
-    sig = (F.when(mom > threshold, 1).when(mom < -threshold, -1).otherwise(0)
-           .cast("int"))
-    return df.withColumn(out_col, sig).drop(c_mom)
+    s, t, p = _keys(symbol_col, ts_col, price_col)
+    (prev,) = _staged(df, "_mom_prev")
+    mom = f"({_pct_sql(p, prev)})"
+    return _statement(
+        df,
+        [[f"lag({p}, {int(lookback)}) {_over(s, t)} AS {prev}"]],
+        {out_col: _signal(f"WHEN {mom} > {sql_double(threshold)} THEN 1"
+                          f" WHEN {mom} < {sql_double(-threshold)} THEN -1")})
+
+
 
 
 def buy_and_hold_signal(df: DataFrame, out_col: str = "signal") -> DataFrame:

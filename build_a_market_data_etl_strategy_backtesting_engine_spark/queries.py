@@ -874,15 +874,14 @@ def q19(spark, sf_dir):
     """,
 )
 def q20(spark, sf_dir):
-    """EWM mean span=12 via the closed-form adjust=True weighting as pure
-    window expressions (SURVEY §7.7.2). The pandas-exact ``applyInPandas``
-    twin (``ewm_fns.ewm_mean``) is asserted equal to this within 1e-9 in
-    tests/test_functions.py — the oracle pair uses the expression form so
-    both engines share the summation structure."""
+    """EWM mean span=12 on the blocked JVM kernel (SURVEY §7.7.2). The
+    series sits inside the kernel's first block, where it is exactly the
+    closed-form adjust=True ratio the oracle states, so both engines share
+    the summation structure; tests/test_functions.py checks the kernel
+    against pandas across block boundaries."""
     ticks = _ticks(spark, sf_dir)
     b = bars.ticks_to_ohlcv(ticks, "1H").filter(F.col("symbol") == "click")
-    w = Window.partitionBy("symbol").orderBy("ts")
-    e = b.withColumn("ewm", ewm_fns.ewm_mean_expr("close", 12, w))
+    e = ewm_fns.ewm_mean(b, 12, "close")
     return e.select(
         "symbol", F.unix_micros("ts").alias("bar_us"),
         F.round("ewm", 4).alias("ewm"),
@@ -3312,10 +3311,10 @@ def q62(spark, sf_dir):
     """,
 )
 def q63(spark, sf_dir):
-    """MACD(12,26,9) (ml_strategy.py:151-155): pandas-exact applyInPandas
-    EWM kernel vs the closed-form adjust=True ratio stated in SQL — the
-    signal line is an EWM over a derived (linear-in-price) series, still
-    closed-form expressible."""
+    """MACD(12,26,9) (ml_strategy.py:151-155): the blocked JVM EWM kernel
+    vs the closed-form adjust=True ratio stated in SQL — the signal line is
+    an EWM over a derived (linear-in-price) series, still closed-form
+    expressible."""
     ticks = _ticks(spark, sf_dir).filter(F.col("symbol") == "click")
     b = bars.ticks_to_ohlcv(ticks, "1H")
     m = ewm_fns.macd(b, fast=12, slow=26, signal=9, value_col="close")

@@ -13,7 +13,9 @@ as SQL text built with the quoting helpers below.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from typing import Sequence
+
+from pyspark.sql import DataFrame, SparkSession
 
 from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (
     derivatives as deriv,
@@ -31,6 +33,54 @@ def sql_str(s: str) -> str:
 def sql_ident(name: str) -> str:
     """Backtick-quoted identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def sql_tmpl_ident(name: str) -> str:
+    """:func:`sql_ident` for statement text that goes through
+    ``str.format`` (:func:`layered_sql`): braces are doubled, so a column
+    named ``a{b}`` stays a literal name."""
+    return sql_ident(name).replace("{", "{{").replace("}", "}}")
+
+
+def with_columns_sql(columns: Sequence[str], outputs: dict[str, str],
+                     ) -> list[str]:
+    """Select list with ``DataFrame.withColumns`` semantics: an output
+    named like an input column (case-insensitively) takes its place, the
+    others follow in order. ``outputs`` maps names to SQL expressions."""
+    by_low = {k.lower(): k for k in outputs}
+    sel, done = [], set()
+    for c in columns:
+        k = by_low.get(c.lower())
+        sel.append(sql_tmpl_ident(c) if k is None
+                   else f"{outputs[k]} AS {sql_tmpl_ident(k)}")
+        if k is not None:
+            done.add(k)
+    return sel + [f"{e} AS {sql_tmpl_ident(k)}"
+                  for k, e in outputs.items() if k not in done]
+
+
+def layered_sql(df: DataFrame, layers: Sequence[Sequence[str]],
+                group_by: Sequence[str] = (), source: str = "{df}",
+                **frames: DataFrame) -> DataFrame:
+    """One ``spark.sql`` statement over ``df``. Every layer but the last
+    is a subquery selecting its items from the one before it, starting at
+    ``source``; the last layer is the final select list, grouped by
+    ``group_by``. An operator emits one layer per window dependency, so a
+    whole operator is one Catalyst analysis and a handful of py4j calls.
+
+    The layers nest as subqueries, not CTEs: Spark keeps a statement's
+    CTEs as ``WithCTE`` nodes in its analyzed plan, and every later
+    analysis over that lineage pays for them (a MACD -> backtest ->
+    metrics build took about twice as long with CTEs). The text goes
+    through ``str.format`` with ``df`` and ``frames`` as relations: quote
+    identifiers with :func:`sql_tmpl_ident`."""
+    rel = source
+    for i, items in enumerate(layers[:-1]):
+        rel = f"(SELECT {', '.join(items)} FROM {rel}) AS _l{i}"
+    text = f"SELECT {', '.join(layers[-1])} FROM {rel}"
+    if group_by:
+        text += f" GROUP BY {', '.join(group_by)}"
+    return df.sparkSession.sql(text, df=df, **frames)
 
 
 def sql_double(v: float) -> str:

@@ -164,6 +164,41 @@ def test_event_driven_insufficient_cash_rejected(spark):
     assert out.position == 0.0 and out.cash == 100.0
 
 
+def test_event_driven_null_signal_is_flat(spark):
+    """A missing signal is 0, as in the vectorized kernel's left join."""
+    bars = spark.createDataFrame([
+        (_ts(0), 100.0, 1), (_ts(1), 101.0, None), (_ts(2), 102.0, 1),
+    ], "ts timestamp, close double, signal int").withColumn(
+        "symbol", F.lit("A"))
+    out = sorted(orderbook.event_driven_backtest(bars).collect(),
+                 key=lambda r: r.ts)
+    assert [r.signal for r in out] == [1, 0, 1]
+    assert [r.position for r in out] == [100.0, 0.0, 100.0]
+
+
+@pytest.mark.parametrize("case", ["int_symbol", "ntz_ts", "budget_column"])
+def test_event_driven_keeps_key_types_and_caller_columns(spark, case):
+    """The output keys keep the input's types, and a caller column named
+    like the budget staging column passes through (n_symbols omitted)."""
+    sym_t = "int" if case == "int_symbol" else "string"
+    ts_t = "timestamp_ntz" if case == "ntz_ts" else "timestamp"
+    a, b = (1, 2) if case == "int_symbol" else ("A", "B")
+    bars = spark.createDataFrame([
+        (a, _ts(0), 100.0, 1, 7.0), (a, _ts(1), 101.0, 0, 7.0),
+        (b, _ts(0), 50.0, 1, 7.0),
+    ], f"symbol {sym_t}, ts {ts_t}, close double, signal int, "
+       "_budget double")
+    out = orderbook.event_driven_backtest(bars, initial_cash=100_000.0)
+    assert out.schema["symbol"].dataType == bars.schema["symbol"].dataType
+    assert out.schema["ts"].dataType == bars.schema["ts"].dataType
+    rows = sorted(out.collect(), key=lambda r: (r.symbol, r.ts))
+    assert [(r.symbol, r.position) for r in rows] == [
+        (a, 100.0), (a, 0.0), (b, 100.0)]
+    # per-symbol budget initial_cash / 2, not the caller's _budget column
+    fill = 100 * 50.0 * (1 + 0.0005)
+    assert rows[2].cash == pytest.approx(50_000.0 - fill * 1.001)
+
+
 def test_event_vs_vectorized_accuracy(spark):
     """Reference claim (README.md:257): vectorized == event-driven for
     simple strategies. Compare equity paths on buy&hold with zero costs."""

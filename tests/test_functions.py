@@ -97,11 +97,38 @@ def test_ewm_pandas_parity(spark):
     exp = pdf["close"].ewm(span=12, adjust=True).mean()
     np.testing.assert_allclose(got["ewm"], exp, rtol=1e-12)
 
-    # closed-form expression twin agrees with pandas to 1e-9
-    w = Window.partitionBy("symbol").orderBy("ts")
-    got2 = (sdf.withColumn("e", ewm_fns.ewm_mean_expr("close", 12, w))
-            .toPandas().sort_values("ts").reset_index(drop=True))
-    np.testing.assert_allclose(got2["e"], exp, rtol=1e-9)
+
+@pytest.mark.parametrize("case", ["span12_6000", "macd_30000",
+                                  "block_multiple"])
+def test_ewm_kernel_across_blocks(spark, case):
+    """The blocked kernel against pandas past the closed form's overflow
+    bound: 6,000 rows at span 12 (bound 3,823 rows), 30,000 rows of MACD
+    at spans 5/35/5 (about 19 blocks of 1,575 rows), and a series of
+    exactly three blocks."""
+    span = {"span12_6000": 12, "macd_30000": 5, "block_multiple": 3}[case]
+    blk = ewm_fns.unroll_row_bound(1.0 - ewm_fns.ewm_alpha(span))
+    n = {"span12_6000": 6000, "macd_30000": 30000,
+         "block_multiple": 3 * blk}[case]
+    rng = np.random.default_rng(11)
+    pdf = pd.DataFrame({
+        "ts": pd.date_range("2024-01-01", periods=n, freq="1min"),
+        "symbol": "A",
+        "close": 100 + np.cumsum(rng.normal(0, 1, n)),
+    })
+    sdf = spark.createDataFrame(pdf).repartition(2)
+    ewm = lambda s, sp: s.ewm(span=sp, adjust=True).mean()  # noqa: E731
+    if case == "macd_30000":
+        got = ewm_fns.macd(sdf, fast=5, slow=35, signal=5)
+        line = ewm(pdf["close"], 5) - ewm(pdf["close"], 35)
+        exp = {"macd": line, "macd_signal": ewm(line, 5),
+               "macd_hist": line - ewm(line, 5)}
+    else:
+        got = ewm_fns.ewm_mean(sdf, span=span)
+        exp = {"ewm": ewm(pdf["close"], span)}
+    got = got.toPandas().sort_values("ts").reset_index(drop=True)
+    for col, want in exp.items():
+        assert not got[col].isna().any(), col
+        np.testing.assert_allclose(got[col], want, rtol=0, atol=1e-9)
 
 
 def test_macd_pandas_parity(spark):

@@ -452,12 +452,11 @@ def t_rolling_spark(spark, sf_dir, p):
     )
 
     b = _bars(spark, sf_dir, p["m"])
-    w = signals.sym_window()
     n = p["n"]
     return b.select(
         "symbol", F.unix_micros("ts").alias("bar_us"),
-        F.round(signals.rolling_mean("close", n, w), 8).alias("rmean"),
-        F.round(signals.rolling_std("close", n, w), 8).alias("rstd"))
+        F.round(signals.rolling_mean("close", n), 8).alias("rmean"),
+        F.round(signals.rolling_std("close", n), 8).alias("rstd"))
 
 
 def t_rolling_sql(p):
@@ -483,10 +482,9 @@ def t_pctchange_spark(spark, sf_dir, p):
     )
 
     b = _bars(spark, sf_dir, p["m"])
-    w = signals.sym_window()
     return b.select(
         "symbol", F.unix_micros("ts").alias("bar_us"),
-        signals.pct_change("close", w, periods=p["k"]).alias("ret"))
+        signals.pct_change("close", periods=p["k"]).alias("ret"))
 
 
 def t_pctchange_sql(p):
@@ -495,6 +493,39 @@ def t_pctchange_sql(p):
            close / lag(close, {p['k']}) OVER (PARTITION BY symbol
              ORDER BY bts) - 1.0e0 AS ret
     FROM bars"""
+
+
+def t_ewm_spark(spark, sf_dir, p):
+    from pyspark.sql import functions as F
+
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (  # noqa: E501
+        ewm,
+    )
+
+    e = ewm.ewm_mean(_bars(spark, sf_dir, p["m"]), p["span"], "close")
+    return e.select("symbol", F.unix_micros("ts").alias("bar_us"),
+                    F.round("ewm", 4).alias("ewm"))
+
+
+def t_ewm_sql(p):
+    """q20's closed form: the series stay inside the kernel's first
+    block, where it is exactly this ratio."""
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.queries import (  # noqa: E501
+        _dlit,
+    )
+
+    binv = _dlit(1.0 / (1.0 - 2.0 / (p["span"] + 1.0)))
+    return f"""WITH {_ticks_cte()}, {_bars_cte(p['m'])},
+    seq AS (SELECT symbol, bts, close,
+                   row_number() OVER (PARTITION BY symbol ORDER BY bts) - 1
+                     AS i
+            FROM bars),
+    e AS (SELECT symbol, bts,
+                 sum(close * power({binv}, i)) OVER w
+                   / sum(power({binv}, i)) OVER w AS ewm
+          FROM seq WINDOW w AS (PARTITION BY symbol ORDER BY bts
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+    SELECT symbol, epoch_us(bts) AS bar_us, round(ewm, 4) AS ewm FROM e"""
 
 
 _BAR_MINUTES = [1, 2, 3, 5, 10, 15, 30, 60, 120]
@@ -574,6 +605,11 @@ TARGETS = {
         "sample": lambda r: {"m": r.choice([30, 60]),
                              "k": r.randint(1, 10)},
         "spark": t_pctchange_spark, "sql": t_pctchange_sql,
+    },
+    "ewm": {
+        "sample": lambda r: {"m": r.choice(_BAR_MINUTES),
+                             "span": r.randint(2, 200)},
+        "spark": t_ewm_spark, "sql": t_ewm_sql,
     },
 }
 
