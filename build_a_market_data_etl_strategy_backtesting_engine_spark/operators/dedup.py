@@ -9,7 +9,10 @@ Beyond-reference operators (SURVEY §7.6). Design rules for 100TB:
 - verification (exact Jaccard / Hamming / cosine) runs only on candidate
   pairs, whose cardinality is data-dependent but tiny next to n^2;
 - every shuffle key is a hash bucket -> uniformly distributed, skew-safe
-  (AQE skew-join handles pathological buckets like empty-text shingles).
+  (AQE skew-join handles pathological buckets like empty-text shingles);
+- no operator splits its work into sequential hash-class passes over
+  parquet spills of its own: a shuffle or sort larger than memory spills
+  through Spark's own external sort and shuffle.
 
 ``md5``-based variants exist where the DuckDB oracle needs a portable hash
 (queries.py); the production path uses ``xxhash64`` (one 64-bit mix vs a
@@ -17,8 +20,6 @@ full crypto digest — ~5x cheaper in the shingle hot loop).
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -143,7 +144,6 @@ def lsh_candidate_pairs(
     bands: int = 4,
     doc_id_col: str = "doc_id",
     max_band_df: int | None = None,
-    chunk_ranges: int | None = None,
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` bands of
     ``num_hashes/bands`` rows; docs sharing any full band become candidate
@@ -162,11 +162,9 @@ def lsh_candidate_pairs(
     same band key the join already shuffles on.
 
     At 100TB the band tables are written bucketed by band hash so repeated
-    dedup runs skip the shuffle. ``chunk_ranges`` passes through to the
-    sequential band-range execution (see ``lsh_pairs_from_bands``)."""
+    dedup runs skip the shuffle."""
     banded = band_table(signatures, num_hashes, bands, doc_id_col)
-    return lsh_pairs_from_bands(banded, max_band_df=max_band_df,
-                                chunk_ranges=chunk_ranges)
+    return lsh_pairs_from_bands(banded, max_band_df=max_band_df)
 
 
 def band_table(
@@ -203,38 +201,10 @@ def band_table(
 def lsh_pairs_from_bands(
     banded: DataFrame,
     max_band_df: int | None = None,
-    chunk_ranges: int | None = None,
-    hot_pair_budget: int | None = None,
 ) -> DataFrame:
     """Pair-generation half of ``lsh_candidate_pairs``: takes a (doc,
     band, bh) frame — freshly computed or re-opened from a bucketed
-    table — applies the optional stop-band cap, and joins.
-
-    ``chunk_ranges`` (r10, the chunked-execution pattern's third target —
-    after the binomial pricer and the star-CC rounds): when > 1, the
-    band-bucket space is partitioned into that many ``xxhash64(band, bh)``
-    hash classes and the pair join runs as SEQUENTIAL per-class passes
-    over a parquet-spilled band table, each pass's output appended to a
-    pair spill; a final per-``(doc_a, doc_b)``-class combine sums the
-    per-pass partial ``n_shared_bands``. A pair lives in EXACTLY the
-    band buckets that generate it and every row of one bucket shares the
-    bucket's hash class, so the passes partition the pair-join work with
-    no pair lost or double-counted after the combine — the output is
-    row-identical to the monolithic join (pinned by pytest). The live
-    shuffle of one pass is ~1/chunk_ranges of the monolithic join, which
-    is the whole point: the monolithic pair join is the one stage of the
-    near-dup pipeline that doc-chunking cannot partition (a pair spans
-    doc classes), measured disk-dead at sf100 on a 20 GB-free box (r9).
-    The stop-band cap stays exact: it is applied here on the GLOBAL
-    per-bucket document frequency, before any chunking.
-
-    ``hot_pair_budget`` (r11, r10 VERDICT #4): max pairs one chunked
-    pass may emit from a single (band, bh) bucket — buckets over it are
-    peeled out and subdivided by doc hash (see ``_lsh_pairs_chunked``).
-    Only meaningful with ``chunk_ranges > 1``. Pass-level skew salt
-    (r12, r11 VERDICT #5): hot passes keep the measured ``_PAIR_SALT``;
-    cold passes size theirs from the actual max cold bucket via
-    ``_sized_pair_salt`` (1 — no a-side explode — at small SFs)."""
+    table — applies the optional stop-band cap, and joins."""
     if max_band_df is not None:
         # Stop-band cap as a WINDOW count over (band, bh), not a separate
         # count-agg + join (r12 optimization, guide §2.4): the old bdf
@@ -254,19 +224,12 @@ def lsh_pairs_from_bands(
         # fresh staging name (r12 ADVICE): ``banded`` is caller-provided
         # (possibly re-opened from a bucketed table) and may carry a
         # same-named column
-        from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals import (  # noqa: E501
-            _fresh,
-        )
-
         (c_df,) = _fresh(banded, "_df")
         banded = (
             banded.withColumn(c_df, F.count(F.lit(1)).over(w_df))
             .filter(F.col(c_df) <= max_band_df)
             .select("doc", "band", "bh")
         )
-    if chunk_ranges is not None and chunk_ranges > 1:
-        return _lsh_pairs_chunked(banded, int(chunk_ranges),
-                                  hot_pair_budget=hot_pair_budget)
     a = banded.alias("a")
     b_ = banded.alias("b")
     pairs = (
@@ -277,250 +240,6 @@ def lsh_pairs_from_bands(
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
     return pairs
-
-
-def estimate_band_pair_multiplicity(banded: DataFrame) -> int:
-    """EXACT pre-combine output cardinality of the band pair join:
-    sum over (band, bh) buckets of C(d, 2). One map-combinable agg over
-    the band table — knowable BEFORE the join runs, which is what makes
-    the chunked pair join auto-sizable (the join's input is tiny; its
-    OUTPUT is the scratch bound)."""
-    # integer DIV, not double /: C(d,2) via float division goes inexact
-    # past 2^53 (d > ~9.4e7 docs in one bucket) and the chunk auto-sizer
-    # would under-count (r11 ADVICE)
-    row = (banded.groupBy("band", "bh")
-           .agg(F.count(F.lit(1)).alias("d"))
-           .agg(F.sum(F.expr("CAST(d AS BIGINT) * (d - 1) DIV 2"))
-                .alias("m"))
-           .first())
-    return int(row["m"] or 0)
-
-
-@contextmanager
-def _no_auto_broadcast(spark):
-    """Scope guard: disable Catalyst's auto-broadcast inside a chunked
-    sequential pass loop. The pass inputs scan zstd-parquet SPILLS whose
-    size stats wildly undersell their in-memory row count, so the
-    planner promotes multi-GB build sides to broadcast hash joins —
-    measured killing q135 at sf10/sf30 three different ways in r10
-    (maxResultSize, driver heap OOM, 'Not enough memory to build and
-    broadcast', a 2 GiB broadcast-exchange allocation). The chunked
-    passes are scratch-bounded shuffle jobs BY DESIGN; explicit
-    F.broadcast() hints inside the scope still win when a side really
-    is tiny.
-
-    SESSION-WIDE while held (r10 ADVICE): the conf toggle applies to
-    every query planned on this SparkSession during the scope, so a
-    concurrent query on the same session temporarily loses
-    auto-broadcast (it still runs — as sort-merge — just without the
-    small-dim optimization). The guard covers the internal pass loops;
-    frames RETURNED from the chunked operators are lazy spill scans
-    consumed after the guard exits, so they carry a per-plan
-    ``hint("merge")`` instead (see ``_spill_scan``) — join-hint
-    priority keeps an explicit broadcast of the OTHER side winning."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-#: MAX tasks each (band, bh) bucket's pair-join output spreads across
-#: inside a chunked pass — bounds the per-task partial-agg hash map
-#: whatever the bucket skew (see _pair_partial in _lsh_pairs_chunked).
-_PAIR_SALT = 32
-#: target per-task partial-agg rows the cold-pass salt is sized against
-#: (r11 VERDICT #5): one bucket's whole pass output lands in ONE task
-#: (the shuffle hashes on (band, bh)), and a 25M-row per-task hash agg
-#: OOM'd a 12g heap at sf100 — 4M keeps a 6x margin. Cold buckets are
-#: budget-capped, so their salt is min(_PAIR_SALT, ceil(max_cold_bpairs
-#: / this)); at small SFs it collapses to 1 and the 32x a-side explode
-#: the fixed constant imposed on every cold pass disappears (r11 ADVICE).
-_PAIR_AGG_TARGET_ROWS = 4_000_000
-
-
-def _sized_pair_salt(max_bucket_pairs: int) -> int:
-    """Salt factor for a chunked pass whose largest single bucket emits
-    ``max_bucket_pairs`` pairs: enough b-side classes that no task's
-    partial agg exceeds ~_PAIR_AGG_TARGET_ROWS, capped at _PAIR_SALT
-    (the value measured at sf100: byte-identical partials, pass wall
-    halved on the hot set)."""
-    if max_bucket_pairs <= _PAIR_AGG_TARGET_ROWS:
-        return 1
-    return min(_PAIR_SALT,
-               -(-max_bucket_pairs // _PAIR_AGG_TARGET_ROWS))
-
-
-def _spill_scan(spark, schema, path) -> DataFrame:
-    """Read back a chunked-operator spill for EXTERNAL consumption with a
-    per-plan ``merge`` join hint attached (r10 ADVICE): zstd pair spills'
-    size stats wildly undersell their row count, so a caller joining the
-    returned frame OUTSIDE the ``_no_auto_broadcast`` guard could still
-    see Catalyst promote a multi-GB build side to broadcast — the exact
-    failure the guard fixes internally. The relation-level hint rides the
-    plan itself (no session conf), and Spark's hint priority still lets
-    an explicit ``F.broadcast`` on the OTHER side win when it really is
-    tiny."""
-    return spark.read.schema(schema).parquet(path).hint("merge")
-
-
-def _lsh_pairs_chunked(banded: DataFrame, k: int,
-                       hot_pair_budget: int | None = None) -> DataFrame:
-    """Sequential band-range pair join (see ``lsh_pairs_from_bands``).
-
-    Phases, each bounded to ~1/k of the monolithic join's live scratch:
-
-    1. spill the (doc, band, bh) table to parquet once (16 B/row zstd);
-    2. for each ``xxhash64(band, bh) % k`` class: self-join that class's
-       buckets only, aggregate partial per-pair band counts, append to a
-       pair spill — ONE pass's shuffle is bounded by its class's
-       C(d, 2) sum;
-    3. for each ``xxhash64(doc_a, doc_b) % k`` class: sum the partials
-       (a pair surfacing in several bands may land in several passes;
-       its combine rows all share the pair hash, so the per-class
-       groupBy is exactly the global one), append to the result spill.
-
-    **Hot-bucket subdivision (r11, r10 VERDICT #4)**: a (band, bh)
-    bucket was pass-ATOMIC in r10 — all C(d, 2) of its pairs land in one
-    pass (sf100's hottest: d=45,864 → 1.05e9 pairs, ~100 GB live, alone
-    over any per-pass budget). Bucket size d is knowable BEFORE the join
-    (one map-combinable agg, same shape as
-    ``estimate_band_pair_multiplicity``), so buckets whose OWN
-    C(d, 2) > ``hot_pair_budget`` are peeled out of the bucket-class
-    passes and their pair space is subdivided a second level by
-    ``xxhash64(doc_a) % m``: pass j joins the hot rows whose doc hashes
-    to j (a-side) against ALL hot rows (b-side) on (band, bh) equality
-    with ``doc_a < doc_b`` — each a's pairs stay together, every hot
-    pair is emitted in exactly the one pass its a-side hashes to, and a
-    bucket is hot XOR cold so nothing is double-counted before the
-    combine. One hot pass's output is ~hot_multiplicity/m; m is sized
-    from the exact hot multiplicity against the same budget. The
-    stop-band cap (applied upstream on GLOBAL df) is unaffected.
-    ``hot_pair_budget=None`` disables peeling (r10 behavior).
-
-    Returns a DataFrame scanning the result spill (cleaned at process
-    exit, same contract as the chunked pricer's spill dirs)."""
-    import uuid as _uuid
-
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions.derivatives import (  # noqa: E501
-        _register_spill_dir,
-    )
-
-    spark = banded.sparkSession
-    scratch = str(spark.conf.get("spark.local.dir", "/tmp")).split(",")[0]
-    base = f"{scratch}/sg_lshpairs_{_uuid.uuid4().hex[:12]}"
-    _register_spill_dir(base)
-
-    banded.write.parquet(f"{base}/bands")
-    bands_r = spark.read.parquet(f"{base}/bands")
-
-    def _pair_partial(a_side: DataFrame, b_side: DataFrame,
-                      salt: int = _PAIR_SALT) -> DataFrame:
-        # b-side salt (r11, measured at sf100): a pass's shuffle hashes on
-        # (band, bh), so ONE bucket's whole join output — and the partial
-        # hash-agg over it — lands in ONE task (the hottest bucket's
-        # 1.05e9/42 pairs per pass OOM'd a 12g heap at hot pass 5).
-        # Salting the b side by doc hash and exploding the (small) a side
-        # spreads every bucket's pair space across ``salt`` tasks; output
-        # rows are identical (each (a, b) pair matches exactly the one
-        # salt equal to hash(b) % salt). ``salt`` is SIZED per pass kind
-        # (r11 ADVICE/VERDICT #5): hot passes keep the measured
-        # _PAIR_SALT; cold passes get _sized_pair_salt(max cold bucket),
-        # which is 1 at small SFs — no explode, plain self-join.
-        if salt <= 1:
-            a, b_ = a_side.alias("a"), b_side.alias("b")
-            salt_eq = F.lit(True)
-        else:
-            a = a_side.withColumn(
-                "_ps", F.explode(F.sequence(F.lit(0),
-                                            F.lit(salt - 1)))).alias("a")
-            b_ = b_side.withColumn(
-                "_ps", F.pmod(F.xxhash64("doc"),
-                              F.lit(salt)).cast("int")).alias("b")
-            salt_eq = F.col("a._ps") == F.col("b._ps")
-        return (
-            a.join(b_, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bh") == F.col("b.bh"))
-                   & salt_eq
-                   & (F.col("a.doc") < F.col("b.doc")))
-            .groupBy(F.col("a.doc").alias("doc_a"),
-                     F.col("b.doc").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-        )
-
-    # hot-bucket peel: bucket sizes are knowable before the join; any
-    # bucket whose OWN pair count exceeds the per-pass budget gets its
-    # pair space subdivided by xxhash64(doc_a) instead of riding its
-    # (pass-atomic) bucket class
-    n_hot_passes = 0
-    # without bucket stats (peeling off — the r10 path) the protective
-    # max salt stays: a cold bucket may then be arbitrarily hot
-    cold_salt = _PAIR_SALT
-    cold_r = bands_r
-    if hot_pair_budget is not None and hot_pair_budget > 0:
-        stats = (
-            bands_r.groupBy("band", "bh")
-            .agg(F.count(F.lit(1)).alias("d"))
-            # integer DIV, not double /: float C(d,2) goes inexact past
-            # 2^53 and would under-size the hot passes (r11 ADVICE)
-            .withColumn("bpairs",
-                        F.expr("CAST(d AS BIGINT) * (d - 1) DIV 2"))
-        )
-        hot_stats = stats.filter(F.col("bpairs") > hot_pair_budget)
-        _hot = F.col("bpairs") > hot_pair_budget
-        agg = stats.agg(
-            F.count(F.when(_hot, 1)).alias("n"),
-            F.sum(F.when(_hot, F.col("bpairs"))).alias("mult"),
-            F.max(F.when(~_hot, F.col("bpairs"))).alias("cold_max"),
-        ).first()
-        # cold buckets are budget-capped; size their salt from the
-        # actual max so small corpora skip the a-side explode entirely
-        cold_salt = _sized_pair_salt(int(agg["cold_max"] or 0))
-        if agg["n"]:
-            hot_mult = int(agg["mult"])
-            n_hot_passes = max(2, -(-hot_mult // hot_pair_budget))
-            hot_keys = F.broadcast(hot_stats.select("band", "bh"))
-            # split ONCE to spills so the pass loops re-scan parquet,
-            # never re-run the stats agg; explicit schema — either side
-            # may be empty
-            bands_r.join(hot_keys, ["band", "bh"], "left_semi").write.parquet(
-                f"{base}/hot")
-            bands_r.join(hot_keys, ["band", "bh"], "left_anti").write.parquet(
-                f"{base}/cold")
-            hot_r = spark.read.schema(banded.schema).parquet(f"{base}/hot")
-            cold_r = spark.read.schema(banded.schema).parquet(f"{base}/cold")
-
-    cls = F.pmod(F.xxhash64("band", "bh"), F.lit(k))
-    partial_schema = None
-    with _no_auto_broadcast(spark):
-        for i in range(k):
-            p_i = _pair_partial(cold_r.filter(cls == i),
-                                cold_r.filter(cls == i),
-                                salt=cold_salt)
-            partial_schema = p_i.schema
-            p_i.write.mode("append").parquet(f"{base}/partial")
-        # hot passes: a-side one doc-hash class, b-side ALL hot rows —
-        # (band, bh) equality keeps pairs within their bucket, doc_a <
-        # doc_b plus "emitted where a hashes" gives exactly-once
-        acls = F.pmod(F.xxhash64("doc"), F.lit(n_hot_passes or 1))
-        for j in range(n_hot_passes):
-            p_j = _pair_partial(hot_r.filter(acls == j), hot_r)
-            partial_schema = p_j.schema
-            p_j.write.mode("append").parquet(f"{base}/partial")
-        # explicit schema: an all-empty spill dir has no part files to
-        # infer from, and the contract is an EMPTY pair frame, not a
-        # read error
-        partials = spark.read.schema(partial_schema).parquet(
-            f"{base}/partial")
-        pcls = F.pmod(F.xxhash64("doc_a", "doc_b"), F.lit(k))
-        for j in range(k):
-            (partials.filter(pcls == j)
-             .groupBy("doc_a", "doc_b")
-             .agg(F.sum("n_shared_bands").cast("long")
-                  .alias("n_shared_bands"))
-             .write.mode("append").parquet(f"{base}/pairs"))
-    return _spill_scan(spark, partial_schema, f"{base}/pairs")
 
 
 def minhash_similarity(
@@ -679,65 +398,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def chunked_jaccard_edges(
-    docs: DataFrame,
-    candidate_pairs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.05,
-    chunk_classes: int = 1,
-    text_col: str = "text",
-    doc_id_col: str = "doc_id",
-) -> DataFrame:
-    """Verify stage of the near-dup pipeline with bounded live scratch:
-    exact n-gram Jaccard over the candidate pairs, thresholded to the
-    edge set fed to connected components — executed as ``chunk_classes``
-    SEQUENTIAL ``xxhash64(doc_a, doc_b)`` hash-class passes.
-
-    The verify join's intermediate is Σ_pairs |grams(doc)| rows — the
-    gram-amplified twin of the pair join, and the second stage of the
-    r9 sf100 disk death. Jaccard of one pair depends only on that pair's
-    two gram sets, so the pair space partitions freely by pair hash; per
-    pass, docs are first semi-joined to the pass's candidate ids so the
-    gram explode touches only documents that pass actually verifies
-    (grams per doc are identical whatever subset they're computed in —
-    per-class verify == monolithic verify, pinned by pytest).
-
-    ``chunk_classes=1`` is the plain monolithic expression (returned
-    lazily, no spill); > 1 spills the per-class edges to parquet and
-    returns a frame scanning the spill."""
-    def _edges(p: DataFrame, d: DataFrame) -> DataFrame:
-        jac = ngram_jaccard_pairs(d, p, n, text_col, doc_id_col)
-        return (jac.filter(F.col("jaccard") >= threshold)
-                .select("doc_a", "doc_b"))
-
-    if chunk_classes <= 1:
-        return _edges(candidate_pairs, docs)
-
-    import uuid as _uuid
-
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions.derivatives import (  # noqa: E501
-        _register_spill_dir,
-    )
-
-    spark = docs.sparkSession
-    scratch = str(spark.conf.get("spark.local.dir", "/tmp")).split(",")[0]
-    base = f"{scratch}/sg_jacverify_{_uuid.uuid4().hex[:12]}"
-    _register_spill_dir(base)
-    pcls = F.pmod(F.xxhash64("doc_a", "doc_b"), F.lit(chunk_classes))
-    schema = None
-    with _no_auto_broadcast(spark):
-        for j in range(chunk_classes):
-            p_j = candidate_pairs.filter(pcls == j)
-            ids = (p_j.select(F.col("doc_a").alias(doc_id_col))
-                   .union(p_j.select(F.col("doc_b").alias(doc_id_col)))
-                   .distinct())
-            d_j = docs.join(ids, doc_id_col, "left_semi")
-            e_j = _edges(p_j, d_j)
-            schema = e_j.schema
-            e_j.write.mode("append").parquet(f"{base}/edges")
-    return _spill_scan(spark, schema, f"{base}/edges")
-
-
 # ------------------------------------------------- embedding near-dup
 
 def embedding_near_dups(
@@ -807,46 +467,6 @@ def embedding_near_dups(
     return pairs.filter(F.col("cosine") >= threshold)
 
 
-def spill_frame(df: DataFrame, tag: str = "frame") -> DataFrame:
-    """Materialize ``df`` ONCE to a process-lifetime parquet spill and
-    return a frame scanning it — the chunked-execution building block
-    for inputs that sequential passes re-filter many times (re-scanning
-    a parquet spill is ~free; re-computing a join pipeline per pass is
-    not). The dir is swept at interpreter exit, same contract as the
-    chunked pricer's spills."""
-    import uuid as _uuid
-
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions.derivatives import (  # noqa: E501
-        _register_spill_dir,
-    )
-
-    spark = df.sparkSession
-    scratch = str(spark.conf.get("spark.local.dir", "/tmp")).split(",")[0]
-    path = f"{scratch}/sg_{tag}_{_uuid.uuid4().hex[:12]}"
-    _register_spill_dir(path)
-    df.write.parquet(path)
-    return spark.read.schema(df.schema).parquet(path)
-
-
-def box_scratch_budget(spark, override: int | None = None) -> int:
-    """Box-adaptive live-scratch budget shared by every chunked-execution
-    operator (binomial pricer, star-CC rounds, band pair join):
-    ``min(16 GiB, free/2)`` on the Spark scratch volume, floor 1 GiB —
-    the r9-measured rule that kept the 2M-option pricer alive on a
-    20 GB-free box."""
-    if override is not None:
-        return int(override)
-    import shutil as _sh
-
-    scratch = str(spark.conf.get(
-        "spark.local.dir", "/tmp")).split(",")[0]
-    try:
-        free = _sh.disk_usage(scratch).free
-    except OSError:
-        free = 32 << 30
-    return min(16 << 30, max(free // 2, 1 << 30))
-
-
 def _release_iteration_scratch(df: DataFrame) -> None:
     """Free a superseded iteration's scratch: unpersist its
     ``localCheckpoint`` blocks (safe once nothing will read the frame
@@ -855,7 +475,7 @@ def _release_iteration_scratch(df: DataFrame) -> None:
     round's now-unreachable shuffle files. ContextCleaner's own periodic
     GC defaults to 30 minutes — longer than most iterative jobs — so
     without the nudge every round's shuffle stays on disk until the app
-    exits; measured at sf100 (q146's 5M-doc component graph) the
+    exits; measured at sf100 (a 5M-doc near-dup component graph) the
     accumulation exceeded 50 GB and killed the job on disk space."""
     try:
         df.unpersist(blocking=False)
@@ -872,8 +492,6 @@ def connected_components(
     node_col: str = "doc_id",
     max_iter: int = 50,
     _stats: dict | None = None,
-    chunk_classes: int | None = None,
-    scratch_budget_bytes: int | None = None,
 ) -> DataFrame:
     """Transitive duplicate clustering: connected components over near-dup
     pairs by large-star/small-star (Kiveris, Lattanzi, Mirrokni, Rastogi
@@ -900,22 +518,7 @@ def connected_components(
     smallest member id — deterministic, partition-invariant. Singletons
     (when ``nodes`` is given) keep their own id; with ``nodes=None`` the
     node set is the edges' endpoints. ``_stats['rounds']`` reports the
-    round count for tests.
-
-    ``chunk_classes`` (r9, the chunked-pricer pattern applied to q146's
-    sf100 disk bound): when > 1, every star round executes as
-    ``chunk_classes`` SEQUENTIAL hash-class passes over a parquet-spilled
-    edge set, bounding one round's live shuffle/spill to ~1/k of the
-    monolithic round (measured r8: ONE monolithic large-star round at
-    sf100 needs > 53 GB live spill). Default None auto-sizes: chunking
-    engages only when the canonical edge count's estimated round scratch
-    exceeds ``scratch_budget_bytes`` (default: min(16 GiB, free/2) on
-    the scratch volume). Both star steps are per-``u`` local given the
-    FULL neighborhood of ``u``, and hash-partitioning by ``u`` keeps
-    each neighborhood whole inside one pass — so the fixpoint (and the
-    per-round edge sets, up to transient cross-chunk duplicates that
-    the next pass's per-chunk distinct removes) is IDENTICAL to the
-    monolithic loop; a pytest pins chunked == monolithic labels."""
+    round count for tests."""
     u, v = F.col("u"), F.col("v")
     e = (
         edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
@@ -925,22 +528,6 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if chunk_classes is None:
-        spark = edges.sparkSession
-        scratch_budget_bytes = box_scratch_budget(
-            spark, scratch_budget_bytes)
-        # ~300 B of live shuffle/spill per canonical edge per round
-        # (symmetrize x2, three join/agg stages, row overhead) — the
-        # estimate that retrodicts the measured 53 GB at ~180M edges
-        n_e = e.count()  # cheap: e was just checkpointed
-        est = n_e * 300
-        chunk_classes = 1 if est <= scratch_budget_bytes else min(
-            64, -(-est // int(scratch_budget_bytes)))
-    if chunk_classes and chunk_classes > 1:
-        labels = _star_rounds_chunked(
-            e, int(chunk_classes), max_iter, _stats)
-        _release_iteration_scratch(e)
-        return _star_finish(labels, nodes, node_col)
     prev_sig = None
     rounds = 0
     for _ in range(max_iter):
@@ -984,13 +571,7 @@ def connected_components(
         prev_sig = (sig["n"], sig["h"])
     if _stats is not None:
         _stats["rounds"] = rounds
-    return _star_finish(e, nodes, node_col)
-
-
-def _star_finish(e: DataFrame, nodes: DataFrame | None,
-                 node_col: str) -> DataFrame:
-    """Fixed point -> labels: e = (member, component-min) star edges."""
-    u, v = F.col("u"), F.col("v")
+    # fixed point -> labels: e = (member, component-min) star edges
     labels = (
         e.select(u.alias(node_col), v.alias("cluster"))
         .union(e.select(v.alias(node_col), v.alias("cluster")))
@@ -1007,109 +588,6 @@ def _star_finish(e: DataFrame, nodes: DataFrame | None,
             )
         )
     return labels
-
-
-def _star_rounds_chunked(e: DataFrame, k: int, max_iter: int,
-                         _stats: dict | None) -> DataFrame:
-    """Run the large-star/small-star rounds as k sequential hash-class
-    passes with the edge set spilled to parquet between phases.
-
-    Both star steps only need the FULL neighborhood of each ``u``:
-    partitioning the (symmetrized) edge set by ``xxhash64(u) % k`` keeps
-    every neighborhood inside exactly one pass, so each pass computes
-    the same per-u attachments as the monolithic round. Cross-chunk
-    duplicate OUTPUT edges (two source-u's emitting the same pair into
-    different passes) are legal intermediates: duplicates of (u, v)
-    share u, land in the same class next phase, and its per-chunk
-    ``distinct`` removes them — which is also why the per-chunk distinct
-    EQUALS a global distinct. Convergence uses the same 2-scalar
-    signature, computed by one extra chunked distinct pass per round.
-
-    Disk: one round keeps at most (current, large-star, next) edge
-    parquets, each ~16 B/edge zstd — the >53 GB monolithic-round spill
-    becomes ~1/k live shuffle per pass plus three bounded parquet dirs;
-    consumed dirs are deleted as soon as the next phase lands."""
-    import shutil as _shutil
-    import uuid as _uuid
-
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions.derivatives import (  # noqa: E501
-        _register_spill_dir,
-    )
-
-    spark = e.sparkSession
-    u, v = F.col("u"), F.col("v")
-    scratch = str(spark.conf.get("spark.local.dir", "/tmp")).split(",")[0]
-    base = f"{scratch}/sg_ccstar_{_uuid.uuid4().hex[:12]}"
-    _register_spill_dir(base)
-
-    def _cls(col: str) -> Column:
-        return F.pmod(F.xxhash64(F.col(col)), F.lit(k))
-
-    e.write.parquet(f"{base}/r0")
-    cur = f"{base}/r0"
-    prev_sig = None
-    rounds = 0
-    for rnd in range(max_iter):
-        edges_r = spark.read.parquet(cur)
-        # ---- large-star, chunked by the symmetrized u
-        ls_dir = f"{base}/ls{rnd}"
-        for i in range(k):
-            both_i = (
-                edges_r.select("u", "v")
-                .union(edges_r.select(v.alias("u"), u.alias("v")))
-                .filter(_cls("u") == i)
-                .distinct()
-            )
-            mins = both_i.groupBy("u").agg(F.min("v").alias("mn"))
-            m = F.least(F.col("u"), F.col("mn"))
-            ls_i = (
-                both_i.join(mins, "u")
-                .filter(v > u)
-                .select(v.alias("u"), m.alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            ls_i.write.mode("append").parquet(ls_dir)
-        # ---- small-star, chunked by the large-star output's u
-        nxt = f"{base}/r{rnd + 1}"
-        ls_r = spark.read.parquet(ls_dir)
-        for i in range(k):
-            ls_i = ls_r.filter(_cls("u") == i).distinct()
-            mins2 = ls_i.groupBy("u").agg(F.min("v").alias("mn"))
-            ss_i = (
-                ls_i.join(mins2, "u")
-                .select(v.alias("u"), F.col("mn").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .union(mins2.select(F.col("u"), F.col("mn").alias("v")))
-                .distinct()
-            )
-            ss_i.write.mode("append").parquet(nxt)
-        rounds += 1
-        # ---- convergence signature over the globally-distinct edge set
-        # (per-chunk distinct == global distinct: duplicates share u)
-        nxt_r = spark.read.parquet(nxt)
-        sig_n, sig_h = 0, 0
-        for i in range(k):
-            s = (nxt_r.filter(_cls("u") == i).distinct()
-                 .agg(F.count(F.lit(1)).alias("n"),
-                      F.sum(F.xxhash64("u", "v")
-                            .cast("decimal(38,0)")).alias("h"))
-                 .first())
-            sig_n += int(s["n"])
-            sig_h += int(s["h"] or 0)
-        _shutil.rmtree(ls_dir, ignore_errors=True)
-        if cur != f"{base}/r0":
-            _shutil.rmtree(cur, ignore_errors=True)
-        cur = nxt
-        if prev_sig == (sig_n, sig_h):
-            break
-        prev_sig = (sig_n, sig_h)
-    if _stats is not None:
-        _stats["rounds"] = rounds
-        _stats["chunk_classes"] = k
-    # hand back the globally-distinct converged edge set (the transient
-    # cross-chunk duplicates must not duplicate label rows)
-    return spark.read.parquet(cur).distinct()
 
 
 def decontaminate(
@@ -1176,6 +654,9 @@ def semantic_dedup(
         F.zip_with(v, v, lambda x, y: x * y),
         F.lit(0.0), lambda acc, x: acc + x,
     ))
+    # the prior-sim id is joined back onto the caller's frame, so it
+    # takes a fresh name; the other staging columns stay inside ``base``
+    (pid,) = _fresh(embeddings, "_id")
     base = embeddings.select(
         F.col(cluster_col).alias("_cl"), F.col(id_col).alias("_id"),
         v.alias("_v"), norm.alias("_nv"),
@@ -1188,16 +669,16 @@ def semantic_dedup(
     prior_sims = (
         a.join(b, (F.col("a._cl") == F.col("b._cl"))
                & (F.col("b._id") < F.col("a._id")))
-        .select(F.col("a._id").alias("_id"),
+        .select(F.col("a._id").alias(pid),
                 (dot / (F.col("a._nv") * F.col("b._nv"))).alias("_sim"))
-        .groupBy("_id")
+        .groupBy(pid)
         .agg(F.max("_sim").alias("max_prior_sim"))
     )
     return (
         embeddings.join(
-            prior_sims, F.col(id_col) == F.col("_id"), "left"
+            prior_sims, F.col(id_col) == F.col(pid), "left"
         )
-        .drop("_id")
+        .drop(pid)
         .withColumn(
             "pruned",
             F.coalesce(F.col("max_prior_sim") >= threshold, F.lit(False)),
@@ -1317,11 +798,12 @@ def resolve_duplicates(
         F.col(quality_col).desc(), F.col(id_col)
     )
     wc = Window.partitionBy(cluster_col)
+    (rn,) = _fresh(j, "_rn")
     return (
-        j.withColumn("_rn", F.row_number().over(w))
+        j.withColumn(rn, F.row_number().over(w))
         .withColumn("n_members", F.count(F.lit(1)).over(wc))
         .withColumn(
-            "is_canonical", (F.col("_rn") == 1).cast("int")
+            "is_canonical", (F.col(rn) == 1).cast("int")
         )
-        .drop("_rn")
+        .drop(rn)
     )

@@ -1332,23 +1332,9 @@ def _md5_band_table(d):
     )
 
 
-def _same_source_filter(pairs, d):
-    """Keep candidate pairs whose docs share a source; attach it."""
-    src = d.select("doc_id", "source")
-    return (
-        pairs
-        .join(src.select(F.col("doc_id").alias("doc_a"),
-                         F.col("source").alias("_sa")), "doc_a")
-        .join(src.select(F.col("doc_id").alias("doc_b"),
-                         F.col("source").alias("_sb")), "doc_b")
-        .filter(F.col("_sa") == F.col("_sb"))
-        .select("doc_a", "doc_b", F.col("_sa").alias("source"))
-    )
-
-
 def _banded_same_source_cand(d):
     """Bounded candidate generation for the near-dup verify/cluster
-    pipelines (q80/q135/q139/q146): a pair is a candidate iff the docs
+    pipelines (q80/q135/q139): a pair is a candidate iff the docs
     share >= 1 md5 minhash band (the q29 LSH path) AND a source. The
     r4-era per-source all-pairs join was quadratic within a source group
     — the 10x rehearsal hung on it (10k docs/source -> 50M pairs per
@@ -1366,94 +1352,27 @@ def _banded_same_source_cand(d):
                 F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    return _same_source_filter(pairs, d)
+    src = d.select("doc_id", "source")
+    return (
+        pairs
+        .join(src.select(F.col("doc_id").alias("doc_a"),
+                         F.col("source").alias("_sa")), "doc_a")
+        .join(src.select(F.col("doc_id").alias("doc_b"),
+                         F.col("source").alias("_sb")), "doc_b")
+        .filter(F.col("_sa") == F.col("_sb"))
+        .select("doc_a", "doc_b", F.col("_sa").alias("source"))
+    )
 
 
-#: above this many documents the monolithic candidate pair-join +
-#: gram-verify is known disk-dead on the build box (r9: sf100's 5M docs
-#: died at 20 GB free; sf10's 500k passed) — the shared near-dup edge
-#: pipeline switches to sequential band-range / pair-class passes.
-_DUP_EDGES_MONO_MAX_DOCS = 1_000_000
-#: initial live-scratch constants for the chunk auto-sizer (measured at
-#: sf100 r10; see SCALING.md): bytes of live shuffle per pre-combine
-#: candidate pair in the band join, and per candidate-pair gram row in
-#: the verify join.
-_PAIR_JOIN_LIVE_B = 96
-_VERIFY_LIVE_B_PER_GRAM = 160
-
-
-def _dup_edges(d, chunk_ranges=None, verify_classes=None):
+def _dup_edges(d):
     """Same-source 3-gram-Jaccard >= 0.05 near-dup EDGE SET shared by
-    q80/q135/q139/q146 — candidates (md5 LSH bands) -> exact-Jaccard
-    verify -> (doc_a, doc_b).
-
-    Monolithic (the exact historical plan) below
-    ``_DUP_EDGES_MONO_MAX_DOCS``; above it — or when ``chunk_ranges`` /
-    ``$SPARK_GRAFT_CAND_CHUNKS`` forces it — the r10 chunked-execution
-    path: the band pair join runs as sequential band-hash-range passes
-    (operators/dedup.py lsh_pairs_from_bands) and the gram verify as
-    sequential pair-hash-class passes (chunked_jaccard_edges), each
-    bounded to ~the box scratch budget, with pass counts auto-sized from
-    the EXACT pre-join pair multiplicity (sum of C(d,2) over band
-    buckets — knowable before the join) and the spilled pair count.
-    Chunked == monolithic is pinned by tests/test_chunked_pairs.py at
-    sf0.001 (13 parity tests: pair join at 3 chunk counts, cap parity,
-    verify parity, estimator exactness, env-forced, 3 cluster queries
-    end-to-end)."""
-    import os as _os
-
-    if chunk_ranges is None:
-        env = _os.environ.get("SPARK_GRAFT_CAND_CHUNKS")
-        if env:
-            chunk_ranges = int(env)
-    # bounded cardinality probe (r10 VERDICT minor): the mono-vs-chunked
-    # decision needs only "more than threshold docs or not", so count a
-    # LIMIT threshold+1 instead of the full table — the probe job's scan
-    # stops after ~1M rows whatever the corpus size (at 100 TB the old
-    # full count was itself a full-table job)
-    if chunk_ranges is None and (
-            d.limit(_DUP_EDGES_MONO_MAX_DOCS + 1).count()
-            <= _DUP_EDGES_MONO_MAX_DOCS):
-        chunk_ranges = 1
-    if chunk_ranges == 1:
-        cand = _banded_same_source_cand(d)
-        jac = dedup_ops.ngram_jaccard_pairs(
-            d, cand.select("source", "doc_a", "doc_b"), n=3)
-        return (jac.filter(F.col("jaccard") >= 0.05)
-                .select("doc_a", "doc_b"))
-
-    spark = d.sparkSession
-    budget = dedup_ops.box_scratch_budget(spark)
-    bands = _md5_band_table(d).withColumnRenamed("doc_id", "doc")
-    if chunk_ranges is None:
-        mult = dedup_ops.estimate_band_pair_multiplicity(bands)
-        chunk_ranges = min(64, max(2, -(-(mult * _PAIR_JOIN_LIVE_B)
-                                        // budget)))
-    # hot-bucket peel (r11): one bucket's pairs may alone exceed a
-    # pass's scratch share (sf100: d=45,864 -> 1.05e9 pairs ~100 GB);
-    # any bucket over the per-pass pair budget is subdivided by doc
-    # hash inside _lsh_pairs_chunked instead of riding its bucket class
-    pairs = dedup_ops.lsh_pairs_from_bands(
-        bands, chunk_ranges=int(chunk_ranges),
-        hot_pair_budget=budget // _PAIR_JOIN_LIVE_B)
-    # spill the source-filtered candidates once: the verify classes
-    # re-filter this frame chunk_classes times. No-auto-broadcast guard:
-    # `pairs` scans a zstd pair spill whose stats undersell it — the
-    # planner must not promote it to a build side (r10: measured 2 GiB
-    # broadcast-exchange death at sf10); the source join shuffles, which
-    # is also the only shape that survives billion-doc corpora.
-    with dedup_ops._no_auto_broadcast(spark):
-        cand = dedup_ops.spill_frame(
-            _same_source_filter(pairs.select("doc_a", "doc_b"), d),
-            "cand")
-    if verify_classes is None:
-        n_pairs = cand.count()  # cheap: scans the candidate spill
-        g_avg = (d.agg(F.avg("n_chars")).first()[0] or 0.0) / 6.0
-        verify_classes = min(64, max(1, -(-int(
-            n_pairs * 2 * g_avg * _VERIFY_LIVE_B_PER_GRAM) // budget)))
-    return dedup_ops.chunked_jaccard_edges(
-        d, cand, n=3, threshold=0.05,
-        chunk_classes=int(verify_classes))
+    q80/q135/q139 — candidates (md5 LSH bands) -> exact-Jaccard verify
+    -> (doc_a, doc_b), as one lazy plan."""
+    cand = _banded_same_source_cand(d)
+    jac = dedup_ops.ngram_jaccard_pairs(
+        d, cand.select("source", "doc_a", "doc_b"), n=3)
+    return (jac.filter(F.col("jaccard") >= 0.05)
+            .select("doc_a", "doc_b"))
 
 
 @_register(
@@ -4008,7 +3927,7 @@ def q79(spark, sf_dir):
 )
 def q80(spark, sf_dir):
     """Transitive duplicate clusters (operators/dedup.py
-    connected_components, monolithic large-star/small-star rounds) over
+    connected_components, large-star/small-star rounds) over
     same-source 3-gram Jaccard >= 0.05 near-dup edges; every document
     labeled with the smallest doc_id in its component. Oracle = DuckDB
     recursive CTE reachability — a genuinely independent formulation of
@@ -7032,61 +6951,6 @@ def q145(spark, sf_dir):
         F.round("std_gray", 6).alias("std_gray"),
         F.col("decode_ok").cast("int").alias("decode_ok"),
     )
-
-
-@_register(
-    "q146_dup_clusters_star",
-    """
-    WITH RECURSIVE
-    toks AS (SELECT doc_id, source, string_split(text, ' ') AS t
-             FROM documents),
-    g AS (SELECT doc_id, source,
-                 list_distinct(list_transform(
-                   generate_series(1, greatest(len(t) - 2, 1)),
-                   i -> array_to_string(t[i:i+2], ' '))) AS grams
-          FROM toks),
-    sh AS (
-      SELECT doc_id, substr(text, CAST(i AS INTEGER), 5) AS sh
-      FROM (SELECT doc_id, text,
-                   unnest(generate_series(1, length(text) - 4)) AS i
-            FROM documents)),
-    m AS (SELECT doc_id, min(md5(sh || '|0')) AS m0, min(md5(sh || '|1')) AS m1, min(md5(sh || '|2')) AS m2, min(md5(sh || '|3')) AS m3, min(md5(sh || '|4')) AS m4, min(md5(sh || '|5')) AS m5, min(md5(sh || '|6')) AS m6, min(md5(sh || '|7')) AS m7 FROM sh GROUP BY doc_id),
-    bands AS (
-      SELECT doc_id, 0 AS band, md5(m0 || '|' || m1 || '|' || m2 || '|' || m3) AS bh FROM m
-      UNION ALL
-      SELECT doc_id, 1 AS band, md5(m4 || '|' || m5 || '|' || m6 || '|' || m7) AS bh FROM m),
-    cand AS (SELECT DISTINCT ba.doc_id AS doc_a, bb.doc_id AS doc_b
-             FROM bands ba JOIN bands bb
-               ON ba.band = bb.band AND ba.bh = bb.bh
-              AND ba.doc_id < bb.doc_id),
-    e0 AS (SELECT c.doc_a AS src, c.doc_b AS dst
-           FROM cand c
-           JOIN g a ON a.doc_id = c.doc_a
-           JOIN g b ON b.doc_id = c.doc_b
-           WHERE a.source = b.source
-             AND len(list_intersect(a.grams, b.grams))
-                 / (len(a.grams) + len(b.grams)
-                    - len(list_intersect(a.grams, b.grams))) >= 5.0e-2),
-    edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-    reach AS (
-      SELECT doc_id AS id, doc_id AS root FROM documents
-      UNION
-      SELECT e.dst AS id, r.root FROM reach r JOIN edges e ON e.src = r.id
-    )
-    SELECT id AS doc_id, min(root) AS cluster FROM reach GROUP BY id
-    """,
-)
-def q146(spark, sf_dir):
-    """q80's transitive duplicate clusters with the star rounds run as
-    two hash-class passes over a parquet-spilled edge set
-    (operators/dedup.py connected_components, ``chunk_classes=2`` — the
-    path that bounds one round's scratch on large graphs). Same
-    recursive-CTE reachability oracle as q80, so the chunked and the
-    monolithic rounds must land on the identical fixpoint."""
-    d = load_tables(spark, sf_dir, ["documents"])["documents"]
-    edges = _dup_edges(d)
-    return dedup_ops.connected_components(
-        edges, d.select("doc_id"), chunk_classes=2)
 
 
 @_register(

@@ -1186,10 +1186,10 @@ def test_audio_features_pcm_decode(spark):
 
 
 def test_embedding_near_dups_empty_input(spark):
-    # an empty corpus slice (legitimate in chunked/sampled runs —
-    # found live by tools/qpair_chunk_sample.py on an sf1 chunk with
-    # no vectors) must yield an empty pair frame, not a NoneType crash
-    # on the dimension probe
+    # an empty corpus slice (legitimate in chunked/sampled runs — found
+    # live on a per-chunk digest sample of an sf1 corpus with no
+    # vectors) must yield an empty pair frame, not a NoneType crash on
+    # the dimension probe
     emb = spark.createDataFrame(
         [], "vec_id long, embedding array<float>, label int")
     near = dedup.embedding_near_dups(emb, threshold=0.5, n_planes=4)

@@ -135,6 +135,14 @@ def test_semantic_dedup_prunes_later_near_dup(spark):
     )
     assert not out[3].pruned
     assert not out[4].pruned  # same direction but different cluster
+    # a caller column named like the prior-sim id staging column
+    # passes through untouched
+    tagged = df.withColumn("_id", F.col("vec_id") * 10)
+    out = {r.vec_id: r for r in dedup.semantic_dedup(
+        tagged, cluster_col="label", threshold=0.9).collect()}
+    assert {k: r._id for k, r in out.items()} == {
+        1: 10, 2: 20, 3: 30, 4: 40}
+    assert [k for k, r in sorted(out.items()) if r.pruned] == [2]
 
 
 # ---------------------------------------------------------- source overlap

@@ -39,6 +39,17 @@ def test_resolve_duplicates_singletons_survive_missing_clusters(spark):
     assert out[9]["n_members"] == 1
     assert out[9]["cluster"] == 9  # own id as singleton label
     assert out[2]["is_canonical"] == 1 and out[2]["n_members"] == 2
+    # a caller column named like the row-number staging column passes
+    # through untouched
+    docs_rn = spark.createDataFrame(
+        [(1, 50, "x"), (2, 80, "y"), (9, 33, "z")],
+        "doc_id long, n_chars long, _rn string")
+    out = {r["doc_id"]: r for r in
+           dedup.resolve_duplicates(docs_rn, clusters).collect()}
+    assert {k: r["_rn"] for k, r in out.items()} == {
+        1: "x", 2: "y", 9: "z"}
+    assert {k: r["is_canonical"] for k, r in out.items()} == {
+        1: 0, 2: 1, 9: 1}
 
 
 def test_mmr_select_string_ids(spark):
@@ -265,31 +276,44 @@ def test_jdbc_round_trip(spark, tmp_path):
 
 
 def test_cc_star_matches_minlabel_on_random_graph(spark):
-    """Differential oracle: on a random graph the star rounds must give
-    exactly the labels of an in-test union-find (cluster = smallest
-    member id) — a reference independent of Spark."""
+    """Differential oracle: on a random graph and three shaped ones the
+    star rounds must give exactly the labels of an in-test union-find
+    (cluster = smallest member id) — a reference independent of Spark."""
     import random
 
     rng = random.Random(42)
-    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
-    edf = spark.createDataFrame(
-        [(a, b) for a, b in edges if a != b], "doc_a long, doc_b long")
-    nodes = spark.createDataFrame([(i,) for i in range(60)], "doc_id long")
-    parent = list(range(60))
+    graphs = [
+        ([(rng.randrange(60), rng.randrange(60)) for _ in range(80)], 60),
+        # long chain 0-1-2-...-59 (adversarial diameter)
+        ([(i, i + 1) for i in range(59)], 60),
+        # star around 7 + separate triangle + isolated nodes
+        ([(7, i) for i in range(8, 30)] + [(40, 41), (41, 42), (40, 42)],
+         50),
+        # two 6-cliques bridged by one edge
+        ([(a, b) for a in range(6) for b in range(a + 1, 6)]
+         + [(a, b) for a in range(10, 16) for b in range(a + 1, 16)]
+         + [(5, 10)], 20),
+    ]
 
-    def find(x):
+    def find(parent, x):
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
         return x
 
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        parent[max(ra, rb)] = min(ra, rb)  # root = smallest member
-    ref = {i: find(i) for i in range(60)}
-    got = {r["doc_id"]: r["cluster"] for r in
-           dedup.connected_components(edf, nodes=nodes).collect()}
-    assert got == ref
+    for edges, n_nodes in graphs:
+        edf = spark.createDataFrame(
+            [(a, b) for a, b in edges if a != b], "doc_a long, doc_b long")
+        nodes = spark.createDataFrame(
+            [(i,) for i in range(n_nodes)], "doc_id long")
+        parent = list(range(n_nodes))
+        for a, b in edges:
+            ra, rb = find(parent, a), find(parent, b)
+            parent[max(ra, rb)] = min(ra, rb)  # root = smallest member
+        ref = {i: find(parent, i) for i in range(n_nodes)}
+        got = {r["doc_id"]: r["cluster"] for r in
+               dedup.connected_components(edf, nodes=nodes).collect()}
+        assert got == ref, f"graph with {n_nodes} nodes"
 
 
 def test_cc_star_long_chain_logarithmic_rounds(spark):

@@ -322,54 +322,6 @@ def test_bench_contamination_flag(monkeypatch):
     assert bench._contaminated(bench.LOAD1_CONTAMINATION_THRESHOLD) is False
 
 
-# --------------- chunked large-star/small-star CC (r8 VERDICT #7)
-
-
-def _cc_label_map(df):
-    return {r.doc_id: r.cluster for r in df.collect()}
-
-
-@pytest.mark.parametrize("edges,n_nodes", [
-    # long chain 0-1-2-...-59 (adversarial diameter)
-    ([(i, i + 1) for i in range(59)], 60),
-    # star around 7 + separate triangle + isolated nodes
-    ([(7, i) for i in range(8, 30)] + [(40, 41), (41, 42), (40, 42)], 50),
-    # two cliques bridged by one edge
-    ([(a, b) for a in range(6) for b in range(a + 1, 6)]
-     + [(a, b) for a in range(10, 16) for b in range(a + 1, 16)]
-     + [(5, 10)], 20),
-])
-def test_star_cc_chunked_equals_monolithic(spark, edges, n_nodes):
-    """The chunked star rounds must land on the identical fixpoint as the
-    monolithic loop — hash-partitioning by u keeps each neighborhood
-    whole, so every per-u attachment is computed identically."""
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import dedup
-
-    e = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    nodes = spark.range(n_nodes).select(F.col("id").alias("doc_id"))
-    mono_stats, chunk_stats = {}, {}
-    mono = dedup.connected_components(
-        e, nodes, _stats=mono_stats, chunk_classes=1)
-    chunked = dedup.connected_components(
-        e, nodes, _stats=chunk_stats, chunk_classes=3)
-    assert _cc_label_map(mono) == _cc_label_map(chunked)
-    assert chunk_stats["chunk_classes"] == 3
-    # both count the rounds they ran
-    assert chunk_stats["rounds"] >= 1 and mono_stats["rounds"] >= 1
-
-
-def test_star_cc_auto_dispatch_stays_monolithic_on_small_graphs(spark):
-    """Auto-sizing must keep small graphs on the in-memory loop (no
-    parquet spill) — chunking is the 100TB escape hatch, not a tax."""
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import dedup
-
-    e = spark.createDataFrame([(1, 2), (2, 3)], ["doc_a", "doc_b"])
-    stats = {}
-    out = dedup.connected_components(e, _stats=stats)
-    assert "chunk_classes" not in stats  # monolithic path ran
-    assert {r.cluster for r in out.collect()} == {1}
-
-
 def test_q120_source_chunked_digest_matches(sf_dir):
     """q120's sf100 oracle config: part-source chunking must partition
     the recursive pricing exactly (output id == source p_partkey)."""

@@ -1137,8 +1137,8 @@ def t_binom_chunked_sql(p):
         opts_sql, n_steps=p["steps"], call=p["call"], dialect="duckdb")
 
 
-def t_cc_chunked_spark(spark, sf_dir, p):
-    """Chunked connected components vs a CLOSED-FORM oracle: edges chain consecutive
+def t_cc_star_spark(spark, sf_dir, p):
+    """Connected components vs a CLOSED-FORM oracle: edges chain consecutive
     dense ranks except at every gap-th boundary, so components are the
     rank runs [m*gap, (m+1)*gap) and the cluster label is analytically
     the run head's doc_id — an oracle independent of any CC algorithm,
@@ -1164,12 +1164,11 @@ def t_cc_chunked_spark(spark, sf_dir, p):
     edges = (rid.filter(F.pmod("rid", F.lit(gap)) != gap - 1)
              .join(nxt, "rid")
              .select(F.col("doc_id").alias("doc_a"), "doc_b"))
-    labels = dedup.connected_components(
-        edges, d.select("doc_id"), chunk_classes=p["k"])
+    labels = dedup.connected_components(edges, d.select("doc_id"))
     return labels.select("doc_id", "cluster")
 
 
-def t_cc_chunked_sql(p):
+def t_cc_star_sql(p):
     gap = p["gap"]
     return f"""
     WITH r AS (SELECT doc_id,
@@ -1277,10 +1276,9 @@ TARGETS.update({
                              "call": r.random() < 0.5},
         "spark": t_binom_chunked_spark, "sql": t_binom_chunked_sql,
     },
-    "cc_star_chunked": {
-        "sample": lambda r: {"gap": r.choice([1, 2, 3, 7, 25, 80]),
-                             "k": r.randint(2, 6)},
-        "spark": t_cc_chunked_spark, "sql": t_cc_chunked_sql,
+    "cc_star": {
+        "sample": lambda r: {"gap": r.choice([1, 2, 3, 7, 25, 80])},
+        "spark": t_cc_star_spark, "sql": t_cc_star_sql,
     },
     "lsh_banding": {
         "sample": lambda r: (lambda b: {
