@@ -21,7 +21,7 @@ full crypto digest — ~5x cheaper in the shingle hot loop).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (
@@ -513,22 +513,34 @@ def connected_components(
 
     At the fixed point the edge set IS the component mapping (every node
     points at its component minimum). Convergence is detected by a
-    2-scalar (count, hash-sum) signature per round — the standard bounded
-    driver boundary. Output: ``(node_col, cluster)``, cluster = the
+    2-scalar (count, hash-sum) signature per round, observed in the
+    round's checkpoint job and compared with the previous round's (round
+    1 with the input's). Output: ``(node_col, cluster)``, cluster = the
     smallest member id — deterministic, partition-invariant. Singletons
     (when ``nodes`` is given) keep their own id; with ``nodes=None`` the
     node set is the edges' endpoints. ``_stats['rounds']`` reports the
     round count for tests."""
     u, v = F.col("u"), F.col("v")
-    e = (
+
+    def checkpoint(df):
+        """Eager local checkpoint plus the edge set's (count, hash-sum)
+        signature, observed in the checkpoint's own job."""
+        obs = Observation()
+        df = df.observe(
+            obs, F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+        ).localCheckpoint(eager=True)
+        return df, (obs.get["n"], obs.get["h"])
+
+    # round 1 compares against the input itself, so an input that is
+    # already a star forest stops after one round
+    e, prev_sig = checkpoint(
         edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.greatest("a", "b").alias("u"),
                 F.least("a", "b").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    prev_sig = None
     rounds = 0
     for _ in range(max_iter):
         # ---- large-star: neighbors > u attach to min(N(u) ∪ {u})
@@ -545,19 +557,14 @@ def connected_components(
         # ---- small-star: canonical edges all have v < u; every neighbor
         # and u itself attach to the neighborhood min
         mins2 = ls.groupBy("u").agg(F.min("v").alias("mn"))
-        ss = (
+        ss, sig = checkpoint(
             ls.join(mins2, "u")
             .select(v.alias("u"), F.col("mn").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .union(mins2.select(F.col("u"), F.col("mn").alias("v")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         rounds += 1
-        sig = ss.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
         # scratch hygiene (r8, found at sf100): the superseded round's
         # checkpoint blocks are never needed again — drop them NOW, and
         # nudge the JVM so ContextCleaner releases the round's shuffle
@@ -566,9 +573,9 @@ def connected_components(
         # of scratch at sf100 and the job dies on disk, not on compute).
         _release_iteration_scratch(e)
         e = ss
-        if prev_sig == (sig["n"], sig["h"]):
+        if prev_sig == sig:
             break
-        prev_sig = (sig["n"], sig["h"])
+        prev_sig = sig
     if _stats is not None:
         _stats["rounds"] = rounds
     # fixed point -> labels: e = (member, component-min) star edges
@@ -644,6 +651,8 @@ def semantic_dedup(
 
     Returns the input plus ``max_prior_sim`` (highest cosine to any earlier
     cluster member, NULL for the cluster's first vector) and ``pruned``.
+    Like ``withColumns``, an output replaces an input column of the same
+    name in place.
     """
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     # per-vector norm hoisted before the within-cluster self-join (one
@@ -654,9 +663,10 @@ def semantic_dedup(
         F.zip_with(v, v, lambda x, y: x * y),
         F.lit(0.0), lambda acc, x: acc + x,
     ))
-    # the prior-sim id is joined back onto the caller's frame, so it
-    # takes a fresh name; the other staging columns stay inside ``base``
-    (pid,) = _fresh(embeddings, "_id")
+    # the prior-sim id and value are joined back onto the caller's frame,
+    # so they take fresh names; the other staging columns stay inside
+    # ``base``
+    pid, msim = _fresh(embeddings, "_id", "_max_prior_sim")
     base = embeddings.select(
         F.col(cluster_col).alias("_cl"), F.col(id_col).alias("_id"),
         v.alias("_v"), norm.alias("_nv"),
@@ -672,17 +682,17 @@ def semantic_dedup(
         .select(F.col("a._id").alias(pid),
                 (dot / (F.col("a._nv") * F.col("b._nv"))).alias("_sim"))
         .groupBy(pid)
-        .agg(F.max("_sim").alias("max_prior_sim"))
+        .agg(F.max("_sim").alias(msim))
     )
     return (
         embeddings.join(
             prior_sims, F.col(id_col) == F.col(pid), "left"
         )
-        .drop(pid)
-        .withColumn(
-            "pruned",
-            F.coalesce(F.col("max_prior_sim") >= threshold, F.lit(False)),
-        )
+        .withColumns({
+            "max_prior_sim": F.col(msim),
+            "pruned": F.coalesce(F.col(msim) >= threshold, F.lit(False)),
+        })
+        .drop(pid, msim)
     )
 
 

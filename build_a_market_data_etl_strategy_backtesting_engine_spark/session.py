@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import os
 import platform
+import re
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -34,9 +36,10 @@ def _default_jvm_opts() -> str:
 # - Broadcast threshold left at default 10MB; dimension tables (region/nation/
 #   symbol metadata) broadcast automatically; big fact-fact joins shuffle.
 _BASE_CONF = {
-    # local[32] with the 1g default heap OOMs on long sessions (hit
-    # generating q51+ goldens at sf0.1); only applies at JVM launch —
-    # a pre-existing session ignores it harmlessly.
+    # the 1g default heap OOMs on long sessions (hit generating the q51+
+    # goldens at sf0.1 on 32 threads); the heap is not fitted to the box
+    # yet. Only applies at JVM launch — a pre-existing session ignores it
+    # harmlessly.
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"),
     # r10 box: two JVMs SIGSEGV'd ~130 s into streaming state-store work,
     # both inside AVX-512 arraycopy stubs (~StubRoutines::
@@ -83,12 +86,82 @@ _BASE_CONF = {
     # our sinks default to zstd like the reference's parquet writer
     # (tick_to_ohlcv.py:161).
     "spark.sql.parquet.compression.codec": "zstd",
-    "spark.sql.shuffle.partitions": "32",
+    # one backtest research cycle (signals, backtest, metrics) generates
+    # about 120-150 whole-stage classes, past Spark's 100-entry default, so
+    # every repeated request compiled its classes again. A static SQL conf:
+    # like spark.driver.memory it takes effect only when the JVM starts; a
+    # pre-existing session keeps its cache size.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # Keep partition sizes bounded when scanning large inputs; at 100TB the
     # scheduler gets ~128MB splits which is the sweet spot for parquet.
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
 }
+
+
+#: Shuffle partitions under a cluster master, whose executor cores the
+#: driver cannot see.
+_CLUSTER_SHUFFLE_PARTITIONS = 32
+
+_LOCAL_MASTER = re.compile(r"local(?:\[\s*(\d+|\*)\s*(?:,\s*\d+\s*)?\])?")
+
+
+def _box_cores(environ: Mapping[str, str], affinity: int) -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    cpus = environ.get("SPARK_GRAFT_CPUS")
+    if not cpus:
+        return affinity
+    if not cpus.isdigit() or int(cpus) < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {cpus!r}")
+    return int(cpus)
+
+
+def _session_conf(
+    master: str | None,
+    shuffle_partitions: int | None,
+    extra_conf: Mapping[str, str] | None,
+    environ: Mapping[str, str],
+    affinity: int,
+) -> tuple[str | None, dict[str, str]]:
+    """The master and conf :func:`get_spark` hands the builder. A pure
+    function of its arguments, the environment and the CPU affinity count,
+    so the derivation is testable without a JVM.
+
+    The core count is N for an explicit ``local[N]`` (1 for ``local``);
+    otherwise ``$SPARK_GRAFT_CPUS``, otherwise ``affinity`` (``local[*]``
+    resolves the same way). With no master given and no ``$SPARK_MASTER``
+    the master is ``local[<cores>]``. Shuffle partitions are 2 x cores
+    (on a 4-core box ``etl_bars`` ran faster at 8 than at 32, see
+    SCALING.md); a cluster master (yarn, k8s, spark://) keeps 32.
+    Structured Streaming fixes a query's state partition count from this
+    conf when its checkpoint is created, so a new default applies only to
+    new checkpoints. ``shuffle_partitions`` and then ``extra_conf`` win
+    over every derived value.
+    """
+    if master is None and "SPARK_MASTER" not in environ:
+        master = f"local[{_box_cores(environ, affinity)}]"
+    m = _LOCAL_MASTER.fullmatch(
+        (master if master is not None else environ["SPARK_MASTER"]).strip())
+    if m is None:
+        cores = None
+    elif m.group(1) is None:
+        cores = 1
+    elif m.group(1) == "*":
+        cores = _box_cores(environ, affinity)
+    else:
+        cores = int(m.group(1))
+    # platform-gated opts resolve empty off-x86: omit them from the BASE
+    # conf only (r11 ADVICE — a user-supplied empty string in extra_conf
+    # is an intentional value and must reach the builder)
+    conf = {k: v for k, v in _BASE_CONF.items() if v != ""}
+    if shuffle_partitions is None:
+        shuffle_partitions = (
+            2 * cores if cores else _CLUSTER_SHUFFLE_PARTITIONS)
+    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if extra_conf:
+        conf.update(extra_conf)
+    return master, conf
 
 
 def get_spark(
@@ -99,23 +172,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster leave it unset and submit with ``spark-submit --master yarn/k8s``.
+    ``master`` defaults to ``local[<cores>]`` with twice as many shuffle
+    partitions, sized from the CPUs this process may use (see
+    :func:`_session_conf`); on a real cluster set ``$SPARK_MASTER`` or
+    pass ``master``.
     """
+    affinity = (len(os.sched_getaffinity(0))
+                if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1)
+    master, conf = _session_conf(
+        master, shuffle_partitions, extra_conf, os.environ, affinity)
     builder = SparkSession.builder.appName(app_name)
-    if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    # platform-gated opts resolve empty off-x86: omit them from the BASE
-    # conf only (r11 ADVICE — a user-supplied empty string in extra_conf
-    # is an intentional value and must reach the builder)
-    conf = {k: v for k, v in _BASE_CONF.items() if v != ""}
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if extra_conf:
-        conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -21,8 +21,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from build_a_market_data_etl_strategy_backtesting_engine_spark import get_spark
 
 N_VECS = 500_000
 DIM = 64
@@ -54,15 +55,10 @@ def make_vectors(spark):
 def main():
     from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import similarity
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("ann-bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("ann-bench", shuffle_partitions=32, extra_conf={
+        "spark.ui.showConsoleProgress": "false",
+        "spark.driver.memory": "8g",
+    })
     spark.sparkContext.setLogLevel("ERROR")
     vecs = make_vectors(spark)
     query = [float(x) / DIM for x in range(DIM)]

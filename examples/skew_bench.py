@@ -12,7 +12,7 @@ is what handles the hot partition best:
   salted       fact gets a k-way salt, dim is exploded k ways, join on
                (symbol, salt)                     (static split, k=16)
 
-Run: python3 examples/skew_bench.py   (local[32], ~5M fact rows)
+Run: python3 examples/skew_bench.py   (~5M fact rows)
 Numbers from this box are recorded in SCALING.md.
 """
 
@@ -24,8 +24,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from build_a_market_data_etl_strategy_backtesting_engine_spark import get_spark
 
 N_FACT = 5_000_000
 N_SYMBOLS = 100
@@ -95,17 +96,12 @@ def timed(tag, spark, fn, fact, dim, aqe: bool, tuned: bool = False):
 
 
 def main():
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("skew-bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("skew-bench", shuffle_partitions=32, extra_conf={
+        "spark.ui.showConsoleProgress": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        "spark.driver.memory": "8g",
+    })
     spark.sparkContext.setLogLevel("ERROR")
     fact, dim = make_frames(spark)
     fact.write.format("noop").mode("overwrite").save()  # warm codegen

@@ -143,6 +143,18 @@ def test_semantic_dedup_prunes_later_near_dup(spark):
     assert {k: r._id for k, r in out.items()} == {
         1: 10, 2: 20, 3: 30, 4: 40}
     assert [k for k, r in sorted(out.items()) if r.pruned] == [2]
+    # caller columns named like the outputs are replaced in place, the
+    # way withColumns replaces them
+    stale = df.withColumns({"max_prior_sim": F.lit(-1.0),
+                            "pruned": F.lit(True), "tail": F.lit(7)})
+    res = dedup.semantic_dedup(stale, cluster_col="label", threshold=0.9)
+    assert res.columns == ["vec_id", "label", "embedding",
+                           "max_prior_sim", "pruned", "tail"]
+    out = {r.vec_id: r for r in res.collect()}
+    assert [k for k, r in sorted(out.items()) if r.pruned] == [2]
+    assert out[1].max_prior_sim is None and out[1].tail == 7
+    assert out[2].max_prior_sim == pytest.approx(
+        0.99 / (0.99**2 + 0.01**2) ** 0.5, rel=1e-9)
 
 
 # ---------------------------------------------------------- source overlap

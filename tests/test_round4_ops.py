@@ -340,6 +340,22 @@ def test_cc_star_singletons_and_two_components(spark):
     assert got == {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 99: 99}
 
 
+def test_cc_star_forest_input_stops_after_one_round(spark):
+    """An input that is already a star forest (one edge; a star around
+    its smallest node) is its own fixed point: one round, no second
+    round to confirm it."""
+    for edges, want in [
+        ([(5, 3)], {3: 3, 5: 3}),
+        ([(2, i) for i in range(3, 9)], {i: 2 for i in range(2, 9)}),
+    ]:
+        edf = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        stats = {}
+        got = {r["doc_id"]: r["cluster"] for r in
+               dedup.connected_components(edf, _stats=stats).collect()}
+        assert got == want
+        assert stats["rounds"] == 1
+
+
 # -------------------------------------- JVM-native as-of directions (r4)
 
 

@@ -257,8 +257,7 @@ def main():
         ensure_package_on_executors,
     )
 
-    spark = get_spark("streaming-bench",
-                      master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    spark = get_spark("streaming-bench")
     ensure_package_on_executors(spark)
     work = tempfile.mkdtemp(prefix="sgraft_stream_bench_")
     out = {}
