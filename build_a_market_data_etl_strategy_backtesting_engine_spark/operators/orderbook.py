@@ -393,9 +393,6 @@ def event_driven_backtest(
     """
     import pyarrow as pa
 
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions.ewm import (  # noqa: E501
-        _key_ts_schema,
-    )
     from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals import (  # noqa: E501
         _fresh,
     )
@@ -404,10 +401,13 @@ def event_driven_backtest(
         sql_ident,
     )
 
-    out_schema = _key_ts_schema(
-        bars, symbol_col, ts_col,
-        "price double, signal int, position double, cash double, "
-        "equity double")
+    # the key and ts types come from the input: int symbol ids and
+    # numeric ts columns keep their types
+    sym_t, ts_t = (bars.schema[c].dataType.simpleString()
+                   for c in (symbol_col, ts_col))
+    out_schema = (f"{sql_ident(symbol_col)} {sym_t}, {sql_ident(ts_col)}"
+                  f" {ts_t}, price double, signal int, position double,"
+                  " cash double, equity double")
     comm, slip = float(commission), float(slippage)
     # the four used columns only: caller columns never meet the staging
     # names, and the Arrow batches carry nothing the loop does not read

@@ -2895,8 +2895,8 @@ def _scratch(sf_dir: str, name: str) -> str:
 def q56(spark, sf_dir):
     """Annualized expected returns, historical and EWM(60)
     (portfolio_optimization.py:36-42): per-symbol mean*252 and last
-    EWM mean*252. The EWM path runs the pandas-exact applyInPandas kernel;
-    the oracle is the closed-form adjust=True ratio."""
+    EWM mean*252. The EWM path runs the blocked JVM EWM kernel; the
+    oracle is the closed-form adjust=True ratio."""
     ticks = _ticks(spark, sf_dir)
     b = bars.ticks_to_ohlcv(ticks, "1H")
     px = b.withColumn("close", F.lit(100.0) + F.col("close") / F.lit(10.0))
@@ -6760,8 +6760,8 @@ def q142(spark, sf_dir):
     garch_volatility, alpha=0.08 beta=0.90, variance-targeted omega):
     the mean-reverting vol filter one rung above q113's RiskMetrics EWMA
     (its alpha+beta=1 boundary), unrolled to the same closed-form window
-    expression — fully JVM-side, one window sort + one per-symbol
-    variance agg. The 10x rehearsal caught libm pow() skew (JVM vs
+    expression — fully JVM-side, on the blocked EWM kernel (one block at
+    daily bars). The 10x rehearsal caught libm pow() skew (JVM vs
     DuckDB differ by an ulp; one large-variance row crossed the round-10
     grid at sf1), so beta^i / beta^-i now come from an exact
     repeated-multiplication powers table on BOTH sides (Spark: driver

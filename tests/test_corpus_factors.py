@@ -715,15 +715,16 @@ def test_ewma_variance_matches_pandas_recursion(spark):
     for row, ev in zip(out, expected):
         assert row.ewma_var == pytest.approx(ev, rel=1e-9)
         assert row.ewma_vol == pytest.approx(ev ** 0.5, rel=1e-9)
-    # lam = 0: no decay memory, v_t = r_t^2 (the recursion runs; the
-    # unroll has no valid form there)
+    # lam = 0: no decay memory, v_t = r_t^2 (no 1/lam to multiply by)
     out0 = ewm_fns.ewma_volatility(
         spark.createDataFrame(rows), lam=0.0
     ).orderBy("ts").collect()
     assert [row.ewma_var for row in out0] == pytest.approx(
         list(r * r), rel=1e-12)
-    with pytest.raises(ValueError, match="lam"):
-        ewm_fns.ewma_volatility(spark.createDataFrame(rows), lam=-0.5)
+    # lam > 1 would weight old returns negatively: negative variances
+    for bad in (-0.5, 1.5):
+        with pytest.raises(ValueError, match="lam"):
+            ewm_fns.ewma_volatility(spark.createDataFrame(rows), lam=bad)
 
 
 # ----------------------------------------------------- lead-lag corr

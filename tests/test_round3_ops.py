@@ -360,8 +360,9 @@ def test_kalman_hedge_pairs_run_independently(spark):
 
 
 def test_garch_unroll_equals_recursion(spark):
-    """The closed-form window unroll must reproduce the plain GARCH(1,1)
-    recursion h_1 = vbar, h_t = omega + alpha*r_{t-1}^2 + beta*h_{t-1}."""
+    """garch_volatility's closed-form window unroll must reproduce the
+    plain GARCH(1,1) recursion h_1 = vbar, h_t = omega + alpha*r_{t-1}^2
+    + beta*h_{t-1}."""
     import numpy as np
 
     from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (
@@ -374,10 +375,11 @@ def test_garch_unroll_equals_recursion(spark):
     # caller columns named like the operator's staging columns must not
     # collide with them (AMBIGUOUS_REFERENCE)
     clash = df.selectExpr("*", "1 AS i", "2.0 AS vbar", "3.0 AS bpow",
-                          "4.0 AS ipow")
+                          "4.0 AS ipow", "5 AS _i", "6.0 AS _vbar",
+                          "7.0 AS _bpow")
     r = np.diff(closes) / closes[:-1]
     vbar = float(np.var(r, ddof=1))
-    # beta = 0 is ARCH(1): no unroll exists, the recursion must run
+    # beta = 0 is ARCH(1): there is no 1/beta to multiply by
     for bars, alpha, beta in ((df, 0.08, 0.90), (clash, 0.08, 0.90),
                               (df, 0.10, 0.0)):
         out = ewm.garch_volatility(bars, alpha=alpha, beta=beta) \
@@ -391,9 +393,24 @@ def test_garch_unroll_equals_recursion(spark):
             assert row["garch_var"] == pytest.approx(h, rel=1e-9), k
             assert row["garch_vol_ann"] == pytest.approx(
                 (h * 252) ** 0.5, rel=1e-9)
-    for bad in ({"alpha": -0.1}, {"beta": -0.5}):
+    for bad in ({"alpha": -0.1}, {"beta": -0.5}, {"beta": 1.5},
+                {"alpha": 0.5, "beta": 0.6}):
         with pytest.raises(ValueError, match=next(iter(bad))):
             ewm.garch_volatility(df, **bad)
+
+    # a symbol with 2 bars has one return and no sample variance (n - 1
+    # = 0): its rows get NULL h instead of failing the query with
+    # DIVIDE_BY_ZERO under ANSI mode, and the other symbols are unchanged
+    four = _bars_df(spark, [100.0, 101.0, 99.5, 102.0], symbol="F")
+    both = four.unionByName(_bars_df(spark, [50.0, 51.0], symbol="T"))
+    cols = ["symbol", "ts", "r", "garch_var", "garch_vol_ann"]
+    got = ewm.garch_volatility(both).orderBy("symbol", "ts").collect()
+    alone = ewm.garch_volatility(four).orderBy("ts").collect()
+    assert [tuple(x[c] for c in cols) for x in got[:3]] == \
+        [tuple(x[c] for c in cols) for x in alone]
+    (two,) = got[3:]
+    assert two["symbol"] == "T" and two["r"] == pytest.approx(0.02)
+    assert two["garch_var"] is None and two["garch_vol_ann"] is None
 
 
 # -------------------------------------------------------- triple barrier

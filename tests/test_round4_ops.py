@@ -469,7 +469,7 @@ class TestAsofDirections:
             assert "FlatMapGroupsInPandas" not in txt
 
 
-# ----------------------------------------- EWM/GARCH overflow guard (r4)
+# ------------------------------- EWMA/GARCH on the blocked EWM kernel
 
 
 def _long_bars(spark, n=10_000, seed=3):
@@ -485,85 +485,109 @@ def _long_bars(spark, n=10_000, seed=3):
     return spark.createDataFrame(pdf), pdf
 
 
-def _garch_path(path, df, alpha=0.08, beta=0.90):
-    """Run one GARCH path (unroll or recursion) directly, bypassing the
-    row-count choice ``garch_volatility`` makes."""
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import ewm
-
-    j = ewm._with_vbar(ewm._returns(df, "close", "symbol", "ts"),
-                       "symbol", "ts")
-    return path(j, alpha, beta, "symbol", "ts", 252)
+def _returns(pdf):
+    c = pdf["close"].to_numpy()
+    return c[1:] / c[:-1] - 1.0
 
 
-def test_garch_auto_switches_and_matches_recursion(spark):
-    """r3 VERDICT #7: at 10k rows/symbol (beta=0.9 bound ~6,000)
-    garch_volatility must take the recursion path and match a local
-    float64 recursion bit-for-bit; the unroll would overflow there."""
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import ewm
+def _ewma_recursion(r, lam):
+    v, out = None, []
+    for x in r:
+        v = x * x if v is None else lam * v + (1.0 - lam) * x * x
+        out.append(v)
+    return out
 
-    assert 5000 < ewm.unroll_row_bound(0.90) < 6500
-    df, pdf = _long_bars(spark)
-    got = (ewm.garch_volatility(df, alpha=0.08, beta=0.90)
-           .toPandas().sort_values("ts").reset_index(drop=True))
-    assert len(got) == 9999 and got["garch_var"].notna().all()
+
+def _garch_recursion(r, alpha, beta):
+    """Variance-targeted GARCH(1,1): h_0 = vbar, h_i = omega +
+    alpha r_{i-1}^2 + beta h_{i-1}."""
     import numpy as np
 
-    assert np.isfinite(got["garch_var"].to_numpy()).all()
-    # local float64 recursion replica (variance-targeted omega)
-    r = (pdf["close"].to_numpy()[1:] / pdf["close"].to_numpy()[:-1]
-         - 1.0)
-    vb = float(pd.Series(r).var(ddof=1))
-    omega = vb * (1.0 - 0.08 - 0.90)
-    h, prev, exp = vb, None, []
-    for x in r:
-        if prev is not None:
-            h = omega + 0.08 * prev * prev + 0.90 * h
-        exp.append(h)
-        prev = float(x)
-    # vbar comes from Spark's distributed var_samp (merge-order float
-    # aggregate, ~1e-16 off pandas' ddof=1) and seeds the recursion, so
-    # GARCH is near-exact vs the local replica; the recursion itself is
-    # bit-exact given the same seed (EWMA test below proves that).
-    np.testing.assert_allclose(got["garch_var"].to_numpy(),
-                               np.array(exp), rtol=1e-12)
-    # and the guard is load-bearing: the raw unroll overflows at this n
-    forced = _garch_path(ewm._garch_unroll, df).toPandas()
-    assert not np.isfinite(forced["garch_var"].to_numpy()).all()
+    vbar = float(np.var(r, ddof=1))
+    omega = vbar * (1.0 - alpha - beta)
+    h, out = vbar, []
+    for i, x in enumerate(r):
+        if i:
+            h = omega + alpha * r[i - 1] ** 2 + beta * h
+        out.append(h)
+    return out
 
 
-def test_ewma_auto_matches_recursion_at_10k(spark):
+def _build_and_run(spark, build):
+    """Build a frame inside its own job group, assert that building
+    started no Spark job, then collect it and assert that the executed
+    plan has no pandas UDF."""
+    from build_a_market_data_etl_strategy_backtesting_engine_spark import plans
+
+    sc = spark.sparkContext
+    group = f"ewm-build-{id(build)}"
+    sc.setJobGroup(group, "building must not run jobs")
+    try:
+        df = build()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("other", "")
+    assert jobs == []
+    got = df.toPandas().sort_values("ts").reset_index(drop=True)
+    assert "FlatMapGroupsInPandas" not in plans.explain_str(df, "simple")
+    return got
+
+
+def test_ewma_matches_numpy_recursion_at_12k(spark):
+    """12,000 rows at lam=0.94 (one block is 10,324 rows) against the
+    float64 recursion. The blocked sum is a closed form, not the
+    recursion, so the two agree within its rounding, not bit-for-bit."""
     from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import ewm
 
     import numpy as np
 
     df, pdf = _long_bars(spark, n=12_000, seed=4)
-    assert ewm.unroll_row_bound(0.94) < 12_000  # auto must switch
-    got = (ewm.ewma_volatility(df, lam=0.94)
-           .toPandas().sort_values("ts").reset_index(drop=True))
-    r = (pdf["close"].to_numpy()[1:] / pdf["close"].to_numpy()[:-1]
-         - 1.0)
-    v, exp = None, []
-    for x in r:
-        x = float(x)
-        v = x * x if v is None else 0.94 * v + (1.0 - 0.94) * x * x
-        exp.append(v)
-    np.testing.assert_array_equal(got["ewma_var"].to_numpy(),
-                                  np.array(exp))
+    assert ewm.unroll_row_bound(0.94) < 12_000  # crosses a block boundary
+    got = _build_and_run(spark, lambda: ewm.ewma_volatility(df, lam=0.94))
+    np.testing.assert_allclose(got["ewma_var"].to_numpy(),
+                               _ewma_recursion(_returns(pdf), 0.94),
+                               rtol=2e-12)
+    np.testing.assert_allclose(got["ewma_vol"] ** 2, got["ewma_var"],
+                               rtol=1e-15)
 
 
-def test_engines_agree_inside_envelope(spark):
-    """Below the bound the unroll and the recursion agree to float
-    round-off — the row-count switch changes nothing observable."""
+def test_garch_matches_numpy_recursion_at_10k(spark):
+    """10,000 rows at beta=0.90 (one block is about 6,000 rows) against
+    the float64 recursion."""
     from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import ewm
 
     import numpy as np
 
-    df, _ = _long_bars(spark, n=400, seed=5)
-    a = (_garch_path(ewm._garch_unroll, df).toPandas()
-         .sort_values("ts")["garch_var"].to_numpy())
-    b = (_garch_path(ewm._garch_recursion, df).toPandas()
-         .sort_values("ts")["garch_var"].to_numpy())
-    np.testing.assert_allclose(a, b, rtol=1e-9)
+    assert 5000 < ewm.unroll_row_bound(0.90) < 6500
+    df, pdf = _long_bars(spark)
+    got = _build_and_run(
+        spark, lambda: ewm.garch_volatility(df, alpha=0.08, beta=0.90))
+    assert len(got) == 9999
+    np.testing.assert_allclose(got["garch_var"].to_numpy(),
+                               _garch_recursion(_returns(pdf), 0.08, 0.90),
+                               rtol=2e-12)
+
+
+@pytest.mark.parametrize("decay", [0.0, 1.0])
+def test_ewm_volatility_at_decay_bounds(spark, decay):
+    """Decay 0 (lam=0, ARCH(1) beta=0) has one-row blocks and must not
+    multiply by 1/decay; decay 1 (lam=1, beta=1 with alpha=0) is one
+    unblocked running sum. Both against the recursions."""
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import ewm
+
+    import numpy as np
+
+    df, pdf = _long_bars(spark, n=400, seed=5)
+    r = _returns(pdf)
+    alpha = 0.1 if decay == 0.0 else 0.0
+    got = _build_and_run(spark, lambda: ewm.ewma_volatility(df, lam=decay))
+    np.testing.assert_allclose(got["ewma_var"].to_numpy(),
+                               _ewma_recursion(r, decay), rtol=1e-15)
+    got = _build_and_run(
+        spark, lambda: ewm.garch_volatility(df, alpha=alpha, beta=decay))
+    np.testing.assert_allclose(got["garch_var"].to_numpy(),
+                               _garch_recursion(r, alpha, decay),
+                               rtol=1e-12)
 
 
 # ------------------------------------ tz-proof microstructure keys (r4)

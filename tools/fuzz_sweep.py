@@ -528,6 +528,154 @@ def t_ewm_sql(p):
     SELECT symbol, epoch_us(bts) AS bar_us, round(ewm, 4) AS ewm FROM e"""
 
 
+def _decay(r):
+    """A decay in [0, 1]: a bound, a value whose blocks are shorter than
+    the bars of one symbol, or any value."""
+    return r.choice([0.0, 1.0, r.uniform(0.0, 0.05), r.uniform(0.0, 1.0)])
+
+
+def _blocks(decay):
+    """Block length of the EWM kernel and its DuckDB stand-in: decay 1
+    is one block, so a length no series reaches."""
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (  # noqa: E501
+        ewm,
+    )
+
+    return ewm._block_len(decay) or 2 ** 31 - 1
+
+
+def _returns_cte(p):
+    return f"""WITH RECURSIVE {_ticks_cte()}, {_bars_cte(p['m'])},
+    r0 AS (SELECT symbol, bts,
+                  close / lag(close) OVER (PARTITION BY symbol
+                    ORDER BY bts) - 1 AS r
+           FROM bars),
+    rr AS (SELECT symbol, bts, r,
+                  row_number() OVER (PARTITION BY symbol ORDER BY bts) - 1
+                    AS i
+           FROM r0 WHERE r IS NOT NULL)"""
+
+
+def t_ewma_spark(spark, sf_dir, p):
+    from pyspark.sql import functions as F
+
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (  # noqa: E501
+        ewm,
+    )
+
+    out = ewm.ewma_volatility(_bars(spark, sf_dir, p["m"]), lam=p["lam"])
+    return out.select(
+        "symbol", F.unix_micros("ts").alias("bar_us"),
+        F.round("r", 8).alias("r"), F.round("ewma_var", 4).alias("ewma_var"),
+        F.round("ewma_vol", 6).alias("ewma_vol"))
+
+
+def t_ewma_sql(p):
+    """q113's closed form per block of the kernel, plus the carry from
+    the previous block's last row."""
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.queries import (  # noqa: E501
+        _dlit,
+    )
+
+    lam, b = p["lam"], _blocks(p["lam"])
+    inv = _dlit(1.0 / lam if lam else 0.0)
+    return f"""{_returns_cte(p)},
+    s AS (SELECT symbol, bts, r, i, i // {b} AS k, i % {b} AS l,
+                 sum(power({inv}, i % {b}) * (r * r) *
+                     CASE WHEN i = 0 THEN 1.0e0 ELSE {_dlit(1.0 - lam)} END)
+                   OVER (PARTITION BY symbol, i // {b} ORDER BY i
+                         ROWS UNBOUNDED PRECEDING) AS acc
+          FROM rr),
+    v AS (SELECT s.symbol, s.bts, s.r,
+                 power({_dlit(lam)}, s.l)
+                   * (s.acc + coalesce({_dlit(lam ** b)} * p.acc,
+                                       -0.0e0)) AS v
+          FROM s LEFT JOIN s p ON p.symbol = s.symbol AND p.k = s.k - 1
+                               AND p.l = {b - 1})
+    SELECT symbol, epoch_us(bts) AS bar_us, round(r, 8) AS r,
+           round(v, 4) AS ewma_var, round(sqrt(v), 6) AS ewma_vol
+    FROM v"""
+
+
+def t_garch_spark(spark, sf_dir, p):
+    from pyspark.sql import functions as F
+
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (  # noqa: E501
+        ewm,
+    )
+
+    out = ewm.garch_volatility(_bars(spark, sf_dir, p["m"]),
+                               alpha=p["alpha"], beta=p["beta"])
+    # q113's rounding, not q142's: DuckDB's windowed sums do not add in
+    # row order, so its vbar can differ from Spark's in the last ulp, and
+    # intraday variances reach 1e4-1e5, where round(h, 10) asks for 15
+    # significant digits
+    return out.select(
+        "symbol", F.unix_micros("ts").alias("bar_us"),
+        F.round("r", 8).alias("r"),
+        F.round("garch_var", 4).alias("garch_var"),
+        F.round("garch_vol_ann", 6).alias("garch_vol_ann"))
+
+
+def t_garch_sql(p):
+    """q142's powers table, sample variance and closed form per block of
+    the kernel, plus the carry from the previous block's last row."""
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.queries import (  # noqa: E501
+        _dlit,
+    )
+
+    a, beta = p["alpha"], p["beta"]
+    b = _blocks(beta)
+    period = b if beta < 1.0 else 1
+    inv = 1.0 / beta if beta else 0.0
+    c = 1.0 - a - beta
+    bg = "CASE WHEN s.k = 0 THEN s.bpow ELSE 0.0e0 END"
+    omega = ("" if c == 0.0 else
+             f"s.vbar * {_dlit(c)} * (1.0e0 - {bg}) / {_dlit(1.0 - beta)} + ")
+    return f"""{_returns_cte(p)},
+    pw AS (SELECT 0 AS l, 1.0e0 AS bpow, 1.0e0 AS ipow
+           UNION ALL
+           SELECT l + 1, bpow * {_dlit(beta)}, ipow * {_dlit(inv)}
+           FROM pw WHERE l < {period - 1}),
+    cs AS (SELECT symbol, i,
+                  sum(r) OVER (PARTITION BY symbol ORDER BY i
+                               ROWS UNBOUNDED PRECEDING) AS cs1,
+                  sum(r * r) OVER (PARTITION BY symbol ORDER BY i
+                                   ROWS UNBOUNDED PRECEDING) AS cs2
+           FROM rr),
+    v AS (SELECT symbol,
+                 (arg_max(cs2, i) - arg_max(cs1, i) * arg_max(cs1, i)
+                    / count(*))
+                 / nullif(count(*) - 1, 0) AS vbar
+          FROM cs GROUP BY symbol),
+    s AS (SELECT rr.symbol, rr.bts, rr.r, rr.i // {b} AS k, rr.i % {b} AS l,
+                 v.vbar, pw.bpow, pw.ipow,
+                 coalesce(sum(pw.ipow * (rr.r * rr.r))
+                   OVER (PARTITION BY rr.symbol, rr.i // {b} ORDER BY rr.i
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                   0.0e0) AS acc
+          FROM rr JOIN v ON rr.symbol = v.symbol
+                  JOIN pw ON rr.i % {period} = pw.l),
+    h AS (SELECT s.symbol, s.bts, s.r,
+                 {omega}{bg} * s.vbar
+                 + {_dlit(a)} * (s.bpow * {_dlit(inv)}) * s.acc
+                 + s.bpow * coalesce(
+                     {_dlit(a * beta ** (period - 1))}
+                       * (p.acc + p.ipow * (p.r * p.r)), -0.0e0) AS h
+          FROM s LEFT JOIN s p ON p.symbol = s.symbol AND p.k = s.k - 1
+                               AND p.l = {b - 1})
+    SELECT symbol, epoch_us(bts) AS bar_us, round(r, 8) AS r,
+           round(h, 4) AS garch_var,
+           round(sqrt(h * 252e0), 6) AS garch_vol_ann
+    FROM h"""
+
+
+def _garch_params(r):
+    beta = _decay(r)
+    return {"m": r.choice(_BAR_MINUTES), "beta": beta,
+            "alpha": r.uniform(0.0, 1.0 - beta)}
+
+
 _BAR_MINUTES = [1, 2, 3, 5, 10, 15, 30, 60, 120]
 
 TARGETS = {
@@ -610,6 +758,14 @@ TARGETS = {
         "sample": lambda r: {"m": r.choice(_BAR_MINUTES),
                              "span": r.randint(2, 200)},
         "spark": t_ewm_spark, "sql": t_ewm_sql,
+    },
+    "ewma": {
+        "sample": lambda r: {"m": r.choice(_BAR_MINUTES), "lam": _decay(r)},
+        "spark": t_ewma_spark, "sql": t_ewma_sql,
+    },
+    "garch": {
+        "sample": _garch_params,
+        "spark": t_garch_spark, "sql": t_garch_sql,
     },
 }
 
