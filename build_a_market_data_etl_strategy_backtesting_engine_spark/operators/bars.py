@@ -7,21 +7,38 @@ volume=sum; empty buckets dropped.
 
 Spark design notes
 ------------------
-- ``F.window(ts, freq)`` gives the identical epoch-aligned tumbling bucketing
+- ``window(ts, freq)`` gives the identical epoch-aligned tumbling bucketing
   as pandas ``resample`` / polars ``group_by_dynamic`` defaults. Empty buckets
   simply never materialize (matches the reference's ``dropna``).
-- first/last-in-bucket MUST NOT use ``F.first/F.last`` (order-nondeterministic
-  under shuffle); we use ``min_by/max_by`` over a ``(ts, tiebreaker)`` struct,
-  which is deterministic, shuffle-safe and stays in whole-stage codegen.
-- One hash-aggregate, one shuffle on ``(symbol, window)`` — at 100TB this is a
-  map-side-combinable aggregation, the cheapest shape Spark has. No windows,
-  no sort.
+- first/last-in-bucket MUST NOT use ``first/last`` (order-nondeterministic
+  under shuffle); we use ``min_by/max_by`` over an ordering key, which is
+  deterministic and shuffle-safe. Without a tiebreaker the key is ``ts``.
+  With one, the key is the single exact ``DECIMAL(38,0)`` of
+  :func:`_key_sql`, ordered exactly like ``(ts, tiebreaker NULLS
+  FIRST)``. A struct key would order the same, but a struct buffer is not
+  mutable in place, so Spark plans it as a sort-based aggregate; a decimal
+  buffer keeps the hash aggregate.
+- One hash aggregate, one shuffle on ``(symbol, window)``: a map-side
+  combinable aggregation, the cheapest shape Spark has. No windows, no sort.
+- ``ticks_to_ohlcv`` is one ``spark.sql`` statement built from SQL text;
+  ``resample_ohlcv`` takes caller Column aggregates, so it stays one
+  ``groupBy().agg()`` over the same key.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, TimestampNTZType
+
+from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals import (  # noqa: E501
+    _staged,
+)
+from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
+    sql_ident,
+    sql_str,
+    sql_tmpl_ident,
+)
 
 # freq strings of the reference (tick_to_ohlcv.py:128-132) -> Spark intervals
 FREQ_MAP = {
@@ -37,16 +54,47 @@ FREQ_MAP = {
     "1W": "1 week",
 }
 
+# The packed key is ``micros(ts) * _TS_SCALE + code`` with ``code`` in
+# [0, 2^64]: 0 for a NULL tiebreaker, ``tiebreaker + _TIE_SHIFT`` otherwise.
+# Years 1-9999 keep |micros| < 2^58, so |key| < 2^123 < 10^38.
+_TS_SCALE = 2**64 + 1
+_TIE_SHIFT = 2**63 + 1
+
 
 def to_interval(freq: str) -> str:
     """Map a pandas-style freq string (or pass through a Spark interval)."""
     return FREQ_MAP.get(freq, freq)
 
 
-def _order_key(ts_col: str, tiebreaker: str | None) -> Column:
-    if tiebreaker:
-        return F.struct(F.col(ts_col), F.col(tiebreaker))
-    return F.col(ts_col)
+def _micros_sql(ts: str, dtype) -> str:
+    """Epoch microseconds of ``ts`` without the session time zone:
+    ``unix_micros`` for TIMESTAMP; for TIMESTAMP_NTZ the difference of two
+    NTZ values, which Spark takes in UTC (a cast to TIMESTAMP would move
+    wall times inside a DST gap)."""
+    if isinstance(dtype, TimestampNTZType):
+        return (f"CAST(CAST(CAST({ts} - TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+                " AS INTERVAL SECOND) AS DECIMAL(18, 6)) * 1000000 AS BIGINT)")
+    return f"unix_micros({ts})"
+
+
+def _key_sql(df: DataFrame, ts_col: str, tiebreaker: str | None,
+             ident) -> str:
+    """Open/close ordering key of ``df`` as SQL text, identifiers quoted by
+    ``ident``: ``ts`` alone, or one exact ``DECIMAL(38,0)`` ordered like
+    ``(ts, tiebreaker NULLS FIRST)``."""
+    if not tiebreaker:
+        return ident(ts_col)
+    # a missing column is left to Spark's own resolution error
+    types = {f.name.lower(): f.dataType for f in df.schema.fields}
+    tb_type = types.get(tiebreaker.lower())
+    if tb_type is not None and not isinstance(tb_type, IntegralType):
+        raise ValueError(
+            f"tiebreaker {tiebreaker!r} must be an integral column, got "
+            f"{tb_type.simpleString()}")
+    micros = _micros_sql(ident(ts_col), types.get(ts_col.lower()))
+    return (f"CAST({micros} AS DECIMAL(38, 0)) * {_TS_SCALE}"
+            f" + coalesce(CAST({ident(tiebreaker)} AS DECIMAL(20, 0))"
+            f" + {_TIE_SHIFT}, 0)")
 
 
 def ticks_to_ohlcv(
@@ -61,33 +109,28 @@ def ticks_to_ohlcv(
     """Aggregate raw ticks into OHLCV bars.
 
     Output: ``(symbol, ts=bar start, open, high, low, close, volume, n_ticks)``.
-    ``tiebreaker`` (e.g. a monotonic ingest id) makes first/last deterministic
-    when two ticks share a timestamp — pandas keeps file order there
-    (SURVEY §7.7.3); we require an explicit column instead.
+    ``tiebreaker`` (an integral column, e.g. a monotonic ingest id) makes
+    first/last deterministic when two ticks share a timestamp — pandas
+    keeps file order there (SURVEY §7.7.3); we require an explicit column
+    instead. A NULL tiebreaker sorts before every value.
     """
-    key = _order_key(ts_col, tiebreaker)
-    aggs = [
-        F.min_by(price_col, key).alias("open"),
-        F.max(price_col).alias("high"),
-        F.min(price_col).alias("low"),
-        F.max_by(price_col, key).alias("close"),
-    ]
-    if volume_col and volume_col in ticks.columns:
-        aggs.append(F.sum(volume_col).alias("volume"))
-    else:
-        aggs.append(F.lit(0.0).alias("volume"))
-    aggs.append(F.count(F.lit(1)).alias("n_ticks"))
-    out = (
-        ticks.groupBy(F.col(symbol_col).alias("symbol"),
-                      F.window(ts_col, to_interval(freq)).alias("w"))
-        .agg(*aggs)
-        .select(
-            "symbol",
-            F.col("w.start").alias("ts"),
-            "open", "high", "low", "close", "volume", "n_ticks",
-        )
-    )
-    return out
+    key = _key_sql(ticks, ts_col, tiebreaker, sql_tmpl_ident)
+    rel = "{df}"
+    if tiebreaker:
+        # stage the packed key once per row for both min_by and max_by
+        (k,) = _staged(ticks, "_ok")
+        rel, key = f"(SELECT *, {key} AS {k} FROM {{df}}) AS _k", k
+    p, sym = sql_tmpl_ident(price_col), sql_tmpl_ident(symbol_col)
+    win = f"window({sql_tmpl_ident(ts_col)}, {sql_str(to_interval(freq))})"
+    vol = ("0.0D" if not (volume_col and volume_col in ticks.columns)
+           else f"sum({sql_tmpl_ident(volume_col)})")
+    return ticks.sparkSession.sql(
+        "SELECT symbol, w.start AS ts, `open`, `high`, `low`, `close`,"
+        f" `volume`, `n_ticks` FROM (SELECT {sym} AS symbol, {win} AS w,"
+        f" min_by({p}, {key}) AS `open`, max({p}) AS `high`,"
+        f" min({p}) AS `low`, max_by({p}, {key}) AS `close`,"
+        f" {vol} AS `volume`, count(1) AS `n_ticks`"
+        f" FROM {rel} GROUP BY {sym}, {win}) AS _b", df=ticks)
 
 
 # Default agg semantics for resampling already-barred data
@@ -106,7 +149,7 @@ def resample_ohlcv(
     ``agg_exprs`` lets callers inject custom aggregates exactly like the
     reference's ``agg_dict`` / ``agg_exprs`` hooks (resampler.py:29,68).
     """
-    key = _order_key(ts_col, tiebreaker)
+    key = F.expr(_key_sql(bars, ts_col, tiebreaker, sql_ident))
     if agg_exprs is None:
         agg_exprs = []
         cols = set(bars.columns)

@@ -15,20 +15,40 @@ Reference semantics in ``/root/reference/data_processing/cleaner.py``:
 
 Scale notes
 -----------
-Global statistics (quartiles / mean / std) are single-row aggregates; we attach
-them with a broadcast cross-join so the whole clean stays one lazy plan — no
-``collect`` in the data path, and the scan under both branches is shared.
+Dedup, the outlier filters and ``clean_pipeline`` are each one ``spark.sql``
+statement built from SQL text; ``clean_pipeline`` composes the fragments the
+others use. Global statistics (quartiles / mean / std) are single-row
+aggregates attached with a broadcast cross-join, so the whole clean stays
+one lazy plan with no ``collect`` in the data path. The stats branch and
+the main branch plan the same dedup exchange, and Spark reuses it: a pass
+scans the input once. That needs the null-``ts`` filter of the validation
+step below the fork; a filter that only the main branch gets (``window``
+adds one in ``bars``) makes the two branches differ.
 Keyed dedup is one shuffle on the subset columns; ``keep=first`` uses a
 ``row_number`` window which AQE handles fine even with skewed keys (the
-partition count tracks data volume).
+partition count tracks data volume). Staging columns get ``_fresh`` names,
+so a caller column named ``_rn`` or ``_q`` survives.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.signals import (  # noqa: E501
+    _fresh,
+    _staged,
+)
+from build_a_market_data_etl_strategy_backtesting_engine_spark.sqlapi import (
+    sql_double,
+    sql_tmpl_ident,
+)
+
+
+def _idents(cols: Sequence[str]) -> str:
+    return ", ".join(sql_tmpl_ident(c) for c in cols)
 
 
 def validate_prices(
@@ -44,9 +64,35 @@ def validate_prices(
     return df.filter(cond), df.filter(~cond | F.col(price_col).isNull())
 
 
-def _with_global_stats(df: DataFrame, stats: DataFrame) -> DataFrame:
-    """Attach a 1-row stats frame to every row via broadcast cross-join."""
-    return df.crossJoin(F.broadcast(stats))
+def _with_stats_sql(df: DataFrame, rel: str, stats: dict[str, str],
+                    keep: str, group_cols: Sequence[str] | None) -> str:
+    """Rows of ``rel`` (a relation over ``df``'s columns) that satisfy
+    ``keep``, a condition over ``stats`` (staging name -> aggregate) taken
+    over all of ``rel``, or per ``group_cols`` with an inner join on them
+    (the keys lead the output, as in ``DataFrame.join(on=...)``)."""
+    aggs = ", ".join(f"{e} AS {n}" for n, e in stats.items())
+    if not group_cols:
+        return (f"SELECT /*+ BROADCAST(_s) */ {_idents(df.columns)}"
+                f" FROM {rel} AS _r CROSS JOIN (SELECT {aggs} FROM {rel}"
+                f" AS _r) AS _s WHERE {keep}")
+    keys = _idents(group_cols)
+    rest = [c for c in df.columns if c not in group_cols]
+    return (f"SELECT /*+ BROADCAST(_s) */ {_idents([*group_cols, *rest])}"
+            f" FROM {rel} AS _r JOIN (SELECT {keys}, {aggs} FROM {rel}"
+            f" AS _r GROUP BY {keys}) AS _s USING ({keys}) WHERE {keep}")
+
+
+def _iqr_sql(df: DataFrame, rel: str, col: str, k: float,
+             group_cols: Sequence[str] | None, approx: bool,
+             approx_accuracy: int = 10_000) -> str:
+    c = sql_tmpl_ident(col)
+    (q,) = _staged(df, "_q")
+    fn = (f"approx_percentile({c}, array(0.25, 0.75), {int(approx_accuracy)})"
+          if approx else f"percentile({c}, array(0.25, 0.75))")
+    kk, q1, q3 = sql_double(k), f"{q}[0]", f"{q}[1]"
+    keep = (f"{c} >= {q1} - {kk} * ({q3} - {q1})"
+            f" AND {c} <= {q3} + {kk} * ({q3} - {q1})")
+    return _with_stats_sql(df, rel, {q: fn}, keep, group_cols)
 
 
 def remove_outliers_iqr(
@@ -69,20 +115,18 @@ def remove_outliers_iqr(
     error — acceptable for a k-IQR fence, never used where an oracle
     compares values (FIXTURES.md tolerance table).
     """
-    if approx:
-        q = F.expr(f"approx_percentile({col}, array(0.25, 0.75),"
-                   f" {int(approx_accuracy)})")
-    else:
-        q = F.expr(f"percentile({col}, array(0.25, 0.75))")
-    if group_cols:
-        stats = df.groupBy(*group_cols).agg(q.alias("_q"))
-        joined = df.join(F.broadcast(stats), on=list(group_cols))
-    else:
-        stats = df.agg(q.alias("_q"))
-        joined = _with_global_stats(df, stats)
-    lo = F.col("_q")[0] - k * (F.col("_q")[1] - F.col("_q")[0])
-    hi = F.col("_q")[1] + k * (F.col("_q")[1] - F.col("_q")[0])
-    return joined.filter(F.col(col).between(lo, hi)).drop("_q")
+    return df.sparkSession.sql(
+        _iqr_sql(df, "{df}", col, k, group_cols, approx, approx_accuracy),
+        df=df)
+
+
+def _zscore_sql(df: DataFrame, rel: str, col: str, k: float,
+                group_cols: Sequence[str] | None) -> str:
+    c = sql_tmpl_ident(col)
+    mu, sd = _staged(df, "_mu", "_sd")
+    return _with_stats_sql(
+        df, rel, {mu: f"avg({c})", sd: f"stddev_samp({c})"},
+        f"abs({c} - {mu}) / {sd} < {sql_double(k)}", group_cols)
 
 
 def remove_outliers_zscore(
@@ -92,15 +136,33 @@ def remove_outliers_zscore(
     group_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Keep rows with ``abs(x - mean)/std_samp < k`` (cleaner.py:49-52)."""
-    aggs = [F.avg(col).alias("_mu"), F.stddev_samp(col).alias("_sd")]
-    if group_cols:
-        stats = df.groupBy(*group_cols).agg(*aggs)
-        joined = df.join(F.broadcast(stats), on=list(group_cols))
+    return df.sparkSession.sql(
+        _zscore_sql(df, "{df}", col, k, group_cols), df=df)
+
+
+def _dedup_sql(df: DataFrame, rel: str, subset: Sequence[str] | None,
+               keep: str | bool, order_col: str,
+               tiebreaker: str | None) -> str:
+    if subset is None:
+        if keep in ("first", "last"):
+            # identical rows -> any representative is fine; one shuffle.
+            return f"SELECT DISTINCT * FROM {rel} AS _r"
+        subset = df.columns
+    part = f"PARTITION BY {_idents(subset)}"
+    if keep is False:
+        (flag,) = _staged(df, "_cnt")
+        over, cond = f"count(1) OVER ({part})", f"{flag} = 1"
+    elif keep in ("first", "last"):
+        (flag,) = _staged(df, "_rn")
+        desc = " DESC" if keep == "last" else ""
+        order = ", ".join(sql_tmpl_ident(c) + desc
+                          for c in [order_col, tiebreaker] if c)
+        over = f"row_number() OVER ({part} ORDER BY {order})"
+        cond = f"{flag} = 1"
     else:
-        stats = df.agg(*aggs)
-        joined = _with_global_stats(df, stats)
-    keep = (F.abs(F.col(col) - F.col("_mu")) / F.col("_sd")) < F.lit(float(k))
-    return joined.filter(keep).drop("_mu", "_sd")
+        raise ValueError(f"keep must be 'first', 'last' or False, got {keep!r}")
+    return (f"SELECT {_idents(df.columns)} FROM (SELECT *, {over} AS {flag}"
+            f" FROM {rel} AS _r) AS _d WHERE {cond}")
 
 
 def deduplicate(
@@ -116,31 +178,8 @@ def deduplicate(
     ordering here (SURVEY §7.7.5): ``order_col`` (+ optional ``tiebreaker``).
     ``keep=False`` drops every member of a duplicate group.
     """
-    if subset is None:
-        if keep in ("first", "last"):
-            # identical rows -> any representative is fine; one shuffle.
-            return df.dropDuplicates()
-        subset = df.columns
-    subset = list(subset)
-    order = [F.col(order_col)] + ([F.col(tiebreaker)] if tiebreaker else [])
-    if keep == "first":
-        w = Window.partitionBy(*subset).orderBy(*order)
-    elif keep == "last":
-        w = Window.partitionBy(*subset).orderBy(*[c.desc() for c in order])
-    elif keep is False:
-        w = Window.partitionBy(*subset)
-        return (
-            df.withColumn("_cnt", F.count(F.lit(1)).over(w))
-            .filter(F.col("_cnt") == 1)
-            .drop("_cnt")
-        )
-    else:
-        raise ValueError(f"keep must be 'first', 'last' or False, got {keep!r}")
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return df.sparkSession.sql(
+        _dedup_sql(df, "{df}", subset, keep, order_col, tiebreaker), df=df)
 
 
 def fill_missing_timestamps(
@@ -165,11 +204,12 @@ def fill_missing_timestamps(
     value_cols = list(value_cols or [c for c in df.columns
                                      if c not in (ts_col, symbol_col)])
     interval = F.expr(f"INTERVAL {int(freq_seconds)} SECONDS")
+    lo, hi = _fresh(df, "_lo", "_hi")
     spine = (
         df.groupBy(symbol_col)
-        .agg(F.min(ts_col).alias("_lo"), F.max(ts_col).alias("_hi"))
+        .agg(F.min(ts_col).alias(lo), F.max(ts_col).alias(hi))
         .select(symbol_col,
-                F.explode(F.sequence("_lo", "_hi", interval)).alias(ts_col))
+                F.explode(F.sequence(lo, hi, interval)).alias(ts_col))
     )
     joined = spine.join(df, on=[symbol_col, ts_col], how="left")
     w = Window.partitionBy(symbol_col).orderBy(ts_col)
@@ -245,18 +285,31 @@ def clean_pipeline(
     approx_percentile sketch (the 100 TB path), False = exact interpolated
     percentile (oracle parity), None (default) = auto — exact below
     ``AUTO_APPROX_BYTES`` of Catalyst-estimated input, sketch above, so the
-    default composition is scale-safe without a config flag."""
-    out = deduplicate(df, subset=dedup_subset, keep="first", order_col=order_col)
-    if price_col in out.columns:
-        out, _ = validate_prices(out, price_col, min_price, max_price)
-        if outlier_method == "iqr":
-            if approx is None:
-                est = _estimated_plan_bytes(df)
-                approx = est is not None and est > AUTO_APPROX_BYTES
-            out = remove_outliers_iqr(out, price_col, k=outlier_k,
-                                      approx=approx)
-        elif outlier_method == "zscore":
-            out = remove_outliers_zscore(out, price_col, k=outlier_k)
-        elif outlier_method is not None:
-            raise ValueError(f"unknown outlier method {outlier_method!r}")
-    return out
+    default composition is scale-safe without a config flag.
+
+    Validation also drops rows whose ``order_col`` is NULL (when the frame
+    has that column): such a tick has no bar to land in, and the filter
+    below the stats fork lets both branches share one scan."""
+    rel = f"({_dedup_sql(df, '{df}', dedup_subset, 'first', order_col, None)})"
+    valid = ([f"{sql_tmpl_ident(order_col)} IS NOT NULL"]
+             if order_col in df.columns else [])
+    if price_col in df.columns:
+        p = sql_tmpl_ident(price_col)
+        valid.append(f"{p} >= {sql_double(min_price)}")
+        if max_price is not None:
+            valid.append(f"{p} <= {sql_double(max_price)}")
+    text = f"SELECT * FROM {rel} AS _r"
+    if valid:
+        text += f" WHERE {' AND '.join(valid)}"
+    if price_col not in df.columns or outlier_method is None:
+        return df.sparkSession.sql(text, df=df)
+    if outlier_method == "iqr":
+        if approx is None:
+            est = _estimated_plan_bytes(df)
+            approx = est is not None and est > AUTO_APPROX_BYTES
+        text = _iqr_sql(df, f"({text})", price_col, outlier_k, None, approx)
+    elif outlier_method == "zscore":
+        text = _zscore_sql(df, f"({text})", price_col, outlier_k, None)
+    else:
+        raise ValueError(f"unknown outlier method {outlier_method!r}")
+    return df.sparkSession.sql(text, df=df)

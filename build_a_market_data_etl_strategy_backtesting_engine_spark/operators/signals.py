@@ -114,15 +114,16 @@ def pct_change(col: str, periods: int = 1, symbol_col: str = "symbol",
 def _fresh(df: DataFrame, *bases: str) -> list[str]:
     """Collision-free staging-column names: suffix with a counter while
     the candidate is taken (r8 ADVICE — withColumn+drop on a FIXED temp
-    name silently destroys a same-named caller column)."""
-    taken = set(df.columns)
+    name silently destroys a same-named caller column). Spark resolves
+    names case-insensitively, so ``_RN`` takes ``_rn``."""
+    taken = {c.lower() for c in df.columns}
     out = []
     for b in bases:
         name, i = b, 0
-        while name in taken:
+        while name.lower() in taken:
             i += 1
             name = f"{b}{i}"
-        taken.add(name)
+        taken.add(name.lower())
         out.append(name)
     return out
 

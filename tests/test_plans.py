@@ -59,6 +59,35 @@ def test_ohlcv_is_single_shuffle_hash_agg(spark):
     assert plans.explain_str(b, "simple").count("HashAggregate") >= 2
 
 
+def test_ohlcv_tiebreaker_stays_hash_aggregate(spark):
+    """The (ts, seq) ordering key is one DECIMAL(38,0), a mutable buffer
+    type, so open/close keep the hash aggregate (a struct key made it a
+    SortAggregate with a sort on both sides of the shuffle)."""
+    ticks = events_as_ticks(load_tables(spark, SF, ["events"])["events"])
+    b = bars.ticks_to_ohlcv(ticks, "1min", tiebreaker="seq")
+    txt = plans.explain_str(b, "simple")
+    assert "HashAggregate" in txt and "SortAggregate" not in txt
+    plans.assert_max_shuffles(b, 1)
+
+
+def test_clean_to_bars_scans_once_and_reuses_dedup_exchange(spark):
+    """The IQR-stats branch and the main branch of clean_pipeline plan the
+    same dedup exchange (the null-ts filter sits below the fork), so the
+    AQE-final plan of clean -> bars reads the ticks in one scan stage."""
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (  # noqa: E501
+        cleaner,
+    )
+
+    ticks = events_as_ticks(load_tables(spark, SF, ["events"])["events"])
+    out = bars.ticks_to_ohlcv(cleaner.clean_pipeline(ticks), "1min",
+                              tiebreaker="seq")
+    out.collect()
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    final = executed.split("== Initial Plan ==")[0]
+    assert "ReusedExchange" in final
+    assert final.count("FileScan") == 1
+
+
 def test_backtest_kernel_single_sort_shuffle(spark):
     """The whole 9-step kernel + signal stack must stay ONE window
     sort-shuffle over (symbol): bars agg shuffle + window shuffle only."""

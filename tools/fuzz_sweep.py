@@ -84,6 +84,67 @@ def t_ohlcv_sql(p):
            volume, n_ticks FROM bars"""
 
 
+# ohlcv_tiebreak: ticks with ts truncated to a ``tie``-second grid (forced
+# ties), and every ``mod``-th class of event ids carrying a NULL,
+# 2^63-1 or -(2^63-1) seq. Rows of those classes take a price that is a
+# function of (ts, class) only, so ticks tied on (ts, seq) carry one price
+# and open/close stay deterministic in both engines.
+_MAX_SEQ = 2**63 - 1
+
+
+def _tiebreak_cols(p, us, seq, price, mod):
+    """(ts_us, seq, price) select items over epoch micros ``us``, shared
+    by both engines; ``mod(x, n)`` is the engine's non-negative modulo."""
+    ts_us = f"({us} - {mod(us, p['tie'] * 1_000_000)})"
+    r = mod(seq, p["mod"])
+    return (ts_us,
+            f"CASE {r} WHEN 0 THEN NULL WHEN 1 THEN {_MAX_SEQ}"
+            f" WHEN 2 THEN -{_MAX_SEQ} ELSE {seq} END",
+            f"CASE WHEN {r} < 3 THEN CAST({mod(ts_us, 997_000_000)} + {r}"
+            f" AS DOUBLE) ELSE {price} END")
+
+
+def t_tiebreak_spark(spark, sf_dir, p):
+    from pyspark.sql import functions as F
+
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (  # noqa: E501
+        bars,
+    )
+
+    ts_us, seq, price = _tiebreak_cols(
+        p, "unix_micros(ts)", "seq", "price",
+        lambda x, n: f"pmod({x}, {n})")
+    ticks = _ticks(spark, sf_dir).selectExpr(
+        f"timestamp_micros({ts_us}) AS ts", "symbol", f"{price} AS price",
+        "volume", f"{seq} AS seq")
+    return bars.ticks_to_ohlcv(ticks, f"{p['m']} minutes",
+                               tiebreaker="seq").select(
+        "symbol", F.unix_micros("ts").alias("bar_us"),
+        "open", "high", "low", "close", "volume", "n_ticks")
+
+
+def t_tiebreak_sql(p):
+    ts_us, seq, price = _tiebreak_cols(
+        p, "epoch_us(ts)", "seq", "price",
+        lambda x, n: f"((({x}) % {n}) + {n}) % {n}")
+    return f"""WITH {_ticks_cte()},
+    t AS (SELECT make_timestamp({ts_us}) AS ts, symbol, {price} AS price,
+                 volume, {seq} AS seq FROM ticks),
+    r AS (SELECT *, time_bucket(INTERVAL '{p['m']} minutes', ts) AS bts,
+            row_number() OVER (PARTITION BY symbol, bts
+                               ORDER BY ts, seq NULLS FIRST) AS rn_open,
+            row_number() OVER (PARTITION BY symbol, bts
+                               ORDER BY ts DESC, seq DESC NULLS LAST)
+              AS rn_close
+          FROM t)
+    SELECT symbol, epoch_us(bts) AS bar_us,
+           max(price) FILTER (WHERE rn_open = 1) AS open,
+           max(price) AS high, min(price) AS low,
+           max(price) FILTER (WHERE rn_close = 1) AS close,
+           sum(volume) AS volume, count(*) AS n_ticks
+    FROM r GROUP BY symbol, bts"""
+
+
 def t_macross_spark(spark, sf_dir, p):
     from pyspark.sql import functions as F
 
@@ -682,6 +743,12 @@ TARGETS = {
     "ohlcv": {
         "sample": lambda r: {"m": r.choice(_BAR_MINUTES)},
         "spark": t_ohlcv_spark, "sql": t_ohlcv_sql,
+    },
+    "ohlcv_tiebreak": {
+        "sample": lambda r: {"m": r.choice(_BAR_MINUTES),
+                             "tie": r.choice([1, 60, 600, 3600, 21600]),
+                             "mod": r.choice([3, 4, 5, 7, 11])},
+        "spark": t_tiebreak_spark, "sql": t_tiebreak_sql,
     },
     "ma_cross": {
         "sample": lambda r: (lambda f: {"m": r.choice([30, 60]),
