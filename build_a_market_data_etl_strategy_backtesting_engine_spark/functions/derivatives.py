@@ -8,7 +8,9 @@ option rows is a single projection.
 
 Each builder has a twin ``*_sql`` producing the byte-identical ANSI formula
 (same operation order) so the DuckDB oracle can price the same rows; the
-normal CDF is the shared A&S approximation from ``mathx``.
+normal CDF is the shared A&S approximation from ``mathx``. The iterative
+pricers (implied vol, binomial American) are per-row ``aggregate`` folds in
+Spark; their DuckDB twins run the same step texts as recursive CTEs.
 """
 
 from __future__ import annotations
@@ -22,25 +24,6 @@ from build_a_market_data_etl_strategy_backtesting_engine_spark.functions.mathx i
     norm_pdf,
     norm_pdf_sql,
 )
-
-
-# Chunked-pricer spill dirs created this process, removed at interpreter
-# exit (the returned DataFrame lazily scans the dir, so deletion can only
-# happen once no caller can still be holding the frame — process end).
-_SPILL_DIRS: list[str] = []
-
-
-def _register_spill_dir(path: str) -> None:
-    if not _SPILL_DIRS:
-        import atexit
-        import shutil
-
-        @atexit.register
-        def _sweep_spill_dirs() -> None:  # pragma: no cover - exit hook
-            for d in _SPILL_DIRS:
-                shutil.rmtree(d, ignore_errors=True)
-
-    _SPILL_DIRS.append(path)
 
 
 def d1(s: Column, k: Column, t: Column, sigma: Column, r: Column) -> Column:
@@ -262,6 +245,17 @@ def mark_to_market(
 
 # --------------------------------------------------------- implied vol
 
+def _bisect_step_sql(lo: str, hi: str, call: bool) -> tuple[str, str]:
+    """One bisection step on the bracket [``lo``, ``hi``] over the columns
+    (s, k, t_y, r, price): the texts of its midpoint and of the test that
+    moves the bracket up to [mid, hi] (else down to [lo, mid]). BS price
+    is monotone increasing in sigma, so the test is a model price at the
+    midpoint below the market price."""
+    px = bs_call_sql if call else bs_put_sql
+    mid = f"({lo} + {hi}) / 2e0"
+    return mid, f"{px('s', 'k', 't_y', f'({mid})', 'r')} < price"
+
+
 def implied_vol_bisect_sql(
     opts_sql: str,
     iters: int = 48,
@@ -269,20 +263,18 @@ def implied_vol_bisect_sql(
     hi: float = 4.0,
     call: bool = True,
 ) -> str:
-    """Implied-volatility solve as a recursive-CTE bisection — pure ANSI
-    SQL that BOTH Spark (4.x recursive CTEs, fully JVM-side) and the
-    DuckDB oracle execute verbatim.
+    """DuckDB text of :func:`implied_vol`: the same bisection as a
+    recursive CTE, one row per option per step, with the step text of
+    :func:`_bisect_step_sql`.
 
-    ``opts_sql`` must yield (id, s, k, t_y, r, price). BS price is
-    monotone increasing in sigma, so ``iters`` halvings of [lo, hi]
-    pin sigma to (hi-lo)/2^iters (~1.4e-14 at the defaults) — far below
-    the 6-decimal output rounding, and robust to cross-engine libm ulp
-    differences (bisection re-brackets each engine's own root).
+    ``opts_sql`` must yield (id, s, k, t_y, r, price). ``iters`` halvings
+    of [lo, hi] pin sigma to (hi-lo)/2^iters (~1.4e-14 at the defaults),
+    far below the 6-decimal output rounding and robust to cross-engine
+    libm ulp differences (bisection re-brackets each engine's own root).
     The BS formula is the same A&S-erf portable text as the pricing
     oracles (functions/mathx.py).
     """
-    px = bs_call_sql if call else bs_put_sql
-    f_mid = px("s", "k", "t_y", "((lo + hi) / 2e0)", "r")
+    mid, up = _bisect_step_sql("lo", "hi", call)
     return f"""
     WITH RECURSIVE opts AS ({opts_sql}),
     b(id, s, k, t_y, r, price, lo, hi, it) AS (
@@ -291,10 +283,8 @@ def implied_vol_bisect_sql(
       FROM opts
       UNION ALL
       SELECT id, s, k, t_y, r, price,
-             CASE WHEN {f_mid} < price
-                  THEN (lo + hi) / 2e0 ELSE lo END,
-             CASE WHEN {f_mid} < price
-                  THEN hi ELSE (lo + hi) / 2e0 END,
+             CASE WHEN {up} THEN {mid} ELSE lo END,
+             CASE WHEN {up} THEN hi ELSE {mid} END,
              it + 1
       FROM b WHERE it < {iters}
     )
@@ -303,123 +293,97 @@ def implied_vol_bisect_sql(
     """
 
 
-def _run_recursive_sql(spark, sql: str, need: int) -> "DataFrame":
-    """Execute a recursive-CTE query whose known row budget is ``need``,
-    raising ``cteRecursionRowLimit`` ONLY for the duration of the call
-    (the limit is consulted at execution time, so the raised window must
-    contain the execution — eager ``localCheckpoint`` — and the previous
-    session value is restored in ``finally``)."""
-    key = "spark.sql.cteRecursionRowLimit"
-    cur = int(spark.conf.get(key, "1000000"))
-    if need <= cur:
-        return spark.sql(sql)
-    # the conf is a JVM Int: a 1000x-scale row budget (2.6e9 at sf100,
-    # found by the sf100 sweep) must clamp to Int.MaxValue — the limit
-    # is a guard rail, not an allocation, so the clamp only relaxes it
-    need = min(int(need), 2**31 - 1)
-    spark.conf.set(key, str(need))
-    try:
-        return spark.sql(sql).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(key, str(cur))
-
-
 def implied_vol(
     spark,
     opts: "DataFrame",
     iters: int = 48,
     call: bool = True,
-    view_name: str = "opts_iv_input",
-    n_opts: int | None = None,
 ) -> "DataFrame":
-    """Run the recursive-CTE bisection on a Spark DataFrame of
-    (id, s, k, t_y, r, price). Entirely JVM-side — the recursion executes
-    as iterative union steps in the engine, no Python in the loop.
+    """Implied volatility of each row of ``opts`` (id, s, k, t_y, r,
+    price) by ``iters`` bisection steps on sigma in [1e-4, 4], as (id,
+    iv) rounded to 6 decimals.
 
-    The recursion materializes (iters + 1) rows per option: the row
-    budget is sized from the input (pass ``n_opts`` to skip the count)
-    and the session limit raised only inside this call — the q120-class
-    fix, hit again for this operator at the 10x rehearsal (200k parts x
-    49 steps > the 1M default)."""
-    if n_opts is None:
-        n_opts = opts.count()
-    need = (int(iters) + 1) * max(int(n_opts), 1) * 2
-    opts.createOrReplaceTempView(view_name)
-    return _run_recursive_sql(
-        spark,
-        implied_vol_bisect_sql(
-            f"SELECT id, s, k, t_y, r, price FROM {view_name}",
-            iters=iters, call=call,
-        ),
-        need,
+    One lazy projection: Spark's ``aggregate`` folds the (lo, hi) bracket
+    over ``sequence(1, iters)`` inside each row, so building starts no
+    job and touches no session state. The input is spread round-robin
+    over the default parallelism first, because the fold runs on the
+    partitions it is given (q108 reads ``part`` as one partition)."""
+    if int(iters) < 1:
+        raise ValueError(f"iters must be >= 1, got {iters}")
+    mid, up = _bisect_step_sql("b.lo", "b.hi", call)
+    fold = (
+        f"aggregate(sequence(1, {int(iters)}),"
+        f" named_struct('lo', CAST(1.0e-04 AS DOUBLE),"
+        f" 'hi', CAST(4.0e+00 AS DOUBLE)),"
+        f" (b, it) -> CASE WHEN {up}"
+        f" THEN named_struct('lo', {mid}, 'hi', b.hi)"
+        f" ELSE named_struct('lo', b.lo, 'hi', {mid}) END,"
+        f" b -> round((b.lo + b.hi) / 2e0, 6))"
     )
+    return opts.repartition(spark.sparkContext.defaultParallelism).select(
+        "id", F.expr(fold).alias("iv"))
 
 
 # ---------------------------------------------- binomial American pricer
+
+def _crr_sql(n: int, call: bool, at) -> tuple[dict[str, str], str, str]:
+    """Cox-Ross-Rubinstein texts for an ``n``-step tree: the per-option
+    constants (sig, disc, p) over the columns (t_y, r, sigma), then per
+    node ``i``, over (s, k) and those constants, the payoff at expiry and
+    the value at step ``step - 1`` from the array ``vals`` of step
+    ``step``: ``v = max(payoff, disc * (p*v_up + (1-p)*v_down))``.
+    ``at(j)`` spells the element of ``vals`` at the 0-based node ``j``.
+
+    Node spot at (step, i) is ``s * exp(sig*(2i - step))`` with
+    sig = sigma*sqrt(dt): u = 1/d, so the exponent is just (2i - step),
+    no pow chains."""
+    dt = f"(t_y / {n}.0e0)"
+    sig = f"(sigma * sqrt({dt}))"
+    consts = {
+        "sig": sig,
+        "disc": f"exp(-r * {dt})",
+        # p = (exp(r*dt) - d) / (u - d), u = exp(sig), d = exp(-sig)
+        "p": f"((exp(r * {dt}) - exp(-{sig})) / (exp({sig}) - exp(-{sig})))",
+    }
+
+    def payoff(spot):
+        return (f"greatest({spot} - k, 0.0e0)" if call
+                else f"greatest(k - {spot}, 0.0e0)")
+
+    dbl = "CAST(i AS DOUBLE)"
+    spot_term = f"(s * exp(sig * (2.0e0 * {dbl} - {n}.0e0)))"
+    spot_step = f"(s * exp(sig * (2.0e0 * {dbl} - CAST(step - 1 AS DOUBLE))))"
+    cont = f"(disc * (p * {at('i + 1')} + (1.0e0 - p) * {at('i')}))"
+    return consts, payoff(spot_term), f"greatest({payoff(spot_step)}, {cont})"
+
 
 def binomial_american_sql(
     opts_sql: str,
     n_steps: int = 64,
     call: bool = False,
-    dialect: str = "spark",
 ) -> str:
-    """Cox-Ross-Rubinstein binomial American option pricing as a
-    recursive CTE carrying the value array — backward induction runs as
-    engine-side iterative union steps (same WITH RECURSIVE machinery as
-    :func:`implied_vol_bisect_sql`), with early exercise applied at every
-    node: ``v = max(payoff, disc * (p*v_up + (1-p)*v_down))``.
+    """DuckDB text of :func:`binomial_american`: the same backward
+    induction as a recursive CTE carrying the value array, one row per
+    option per step, with the texts of :func:`_crr_sql` (DuckDB lists are
+    1-based).
 
-    ``opts_sql`` must yield (id, s, k, t_y, r, sigma). Unlike the scalar
-    bisection the state is an ARRAY, and array syntax is the one place
-    Spark SQL and DuckDB genuinely differ (transform/sequence + 0-based
-    vs list_transform/generate_series + 1-based), so this emits per
-    ``dialect`` — the two texts implement the identical recursion and the
-    oracle compares results, not SQL bytes.
-
-    Node spot at (step, i) is ``s * exp(sigma*sqrt(dt)*(2i - step))`` —
-    u = 1/d means the exponent is just (2i - step), no pow chains.
-    """
+    ``opts_sql`` must yield (id, s, k, t_y, r, sigma)."""
     n = int(n_steps)
-    if dialect == "spark":
-        arr = "transform(sequence(0, {hi}), i -> {body})"
-        def at(k):  # 0-based
-            return f"vals[{k}]"
-        dbl = "CAST(i AS DOUBLE)"
-    elif dialect == "duckdb":
-        arr = "list_transform(generate_series(0, {hi}), i -> {body})"
-        def at(k):  # 1-based
-            return f"vals[{k} + 1]"
-        dbl = "CAST(i AS DOUBLE)"
-    else:
-        raise ValueError(f"unknown dialect {dialect!r}")
-
-    # per-row constants (recomputed in each select; pure expressions)
-    dt = f"(t_y / {n}.0e0)"
-    sig = f"(sigma * sqrt({dt}))"
-    disc = f"exp(-r * {dt})"
-    # p = (exp(r*dt) - d) / (u - d), u = exp(sig), d = exp(-sig)
-    p = f"((exp(r * {dt}) - exp(-{sig})) / (exp({sig}) - exp(-{sig})))"
-    def payoff(spot):
-        return (f"greatest({spot} - k, 0.0e0)" if call
-                else f"greatest(k - {spot}, 0.0e0)")
-    spot_term = f"(s * exp({sig} * (2.0e0 * {dbl} - {n}.0e0)))"
-    spot_step = f"(s * exp({sig} * (2.0e0 * {dbl} - CAST(step - 1 AS DOUBLE))))"
-    cont = f"({disc} * ({p} * {at('i + 1')} + (1.0e0 - {p}) * {at('i')}))"
-
-    base_vals = arr.format(hi=str(n), body=payoff(spot_term))
-    step_vals = arr.format(
-        hi="step - 1",
-        body=f"greatest({payoff(spot_step)}, {cont})",
-    )
+    consts, leaf, node = _crr_sql(n, call, lambda j: f"vals[{j} + 1]")
+    arr = "list_transform(generate_series(0, {hi}), i -> {body})"
     return f"""
     WITH RECURSIVE opts AS ({opts_sql}),
-    b(id, s, k, t_y, r, sigma, step, vals) AS (
-      SELECT id, s, k, t_y, r, sigma, {n}, {base_vals} FROM opts
+    b(id, s, k, sig, disc, p, step, vals) AS (
+      SELECT id, s, k, sig, disc, p, {n}, {arr.format(hi=n, body=leaf)}
+      FROM (SELECT id, s, k,
+                   {", ".join(f"{v} AS {c}" for c, v in consts.items())}
+            FROM opts)
       UNION ALL
-      SELECT id, s, k, t_y, r, sigma, step - 1, {step_vals}
+      SELECT id, s, k, sig, disc, p, step - 1,
+             {arr.format(hi="step - 1", body=node)}
       FROM b WHERE step > 0
     )
-    SELECT id, round({at('0')}, 4) AS price
+    SELECT id, round(vals[1], 4) AS price
     FROM b WHERE step = 0
     """
 
@@ -429,149 +393,33 @@ def binomial_american(
     opts: "DataFrame",
     n_steps: int = 64,
     call: bool = False,
-    view_name: str = "opts_binom_input",
-    n_opts: int | None = None,
-    chunk_rows: int | None = None,
-    scratch_budget_bytes: int | None = None,
-) -> DataFrame:
-    """Run the CRR American backward induction on a Spark DataFrame of
-    (id, s, k, t_y, r, sigma). Entirely JVM-side — the value array walks
-    back through ``n_steps`` recursive union steps, no Python in the
-    loop.
+) -> "DataFrame":
+    """CRR American option price of each row of ``opts`` (id, s, k, t_y,
+    r, sigma) on an ``n_steps`` tree with early exercise at every node,
+    as (id, price) rounded to 4 decimals.
 
-    The recursion materializes (n_steps + 1) rows per option, so Spark's
-    default ``cteRecursionRowLimit`` (1M) trips at ~15k options with 64
-    steps (hit at sf0.1, r4). When the budget exceeds the current limit,
-    the limit is raised ONLY for the duration of this call: the
-    recursion is executed eagerly inside the raised window (the result
-    is one small (id, price) row per option, so materializing it is
-    cheap relative to the tree walk) and the previous session value is
-    restored in ``finally``. Pass ``n_opts`` when the caller already
-    knows the row count to skip the extra ``count()`` pass over the
-    input plan.
-
-    Chunking bounds the SCRATCH, not the work (r8, found at sf100): the
-    recursion materializes every step — (n_steps+1) rows per option,
-    EACH carrying the full array(n_steps+1) node-value payload — so live
-    scratch is ~ n_opts x (n_steps+1)^2 x 8 bytes: 20M options at 64
-    steps is ~700 GB, and even a 2M-option chunk (~70 GB) dies on disk,
-    not compute (both measured). ``chunk_rows`` defaults to whatever
-    fits ``scratch_budget_bytes`` (16 GiB) under that model; chunks are
-    deterministic hash classes executed SEQUENTIALLY — each chunk's
-    result (one small (id, price) row per option) is checkpointed
-    eagerly and the chunk's scratch released before the next starts, so
-    peak scratch is one chunk's tree walk regardless of input size.
-    Same values, same rows — the union of disjoint hash classes is the
-    input."""
-    if n_opts is None:
-        n_opts = opts.count()
-    need = (int(n_steps) + 1) * max(int(n_opts), 1) * 2
-    if scratch_budget_bytes is None:
-        # adapt to the box: the default budget must be a scratch volume
-        # the wait loop can actually see freed — half of CURRENT free
-        # space on the scratch volume, capped at 16 GiB (r9: a fixed
-        # 16 GiB budget on a 20 GiB-free box made every inter-chunk
-        # disk-pressure wait time out at its 120 s cap)
-        import shutil as _sh
-
-        _scratch = str(spark.conf.get(
-            "spark.local.dir", "/tmp")).split(",")[0]
-        try:
-            free = _sh.disk_usage(_scratch).free
-        except OSError:
-            free = 32 << 30
-        scratch_budget_bytes = min(16 << 30, max(free // 2, 1 << 30))
-    if chunk_rows is None:
-        # live scratch model: (n_steps+1) materialized rows per option,
-        # each carrying the array(n_steps+1) payload, TIMES ~3 for the
-        # recursion's retained shuffle files + checkpoint blocks before
-        # the async cleaner drains them (r9: sized at 1x, a 317k-option
-        # chunk at 64 steps — model 10.7 GB — still died on a 20 GB-free
-        # box inside the first chunk; the overhead is real)
-        per_opt = (int(n_steps) + 1) ** 2 * 8 * 3
-        chunk_rows = max(10_000, int(scratch_budget_bytes) // per_opt)
-    if chunk_rows and n_opts > chunk_rows:
-        from build_a_market_data_etl_strategy_backtesting_engine_spark.operators.dedup import (  # noqa: E501
-            _release_iteration_scratch,
-        )
-
-        import shutil as _shutil
-        import time as _time
-        import uuid as _uuid
-
-        scratch_dir = str(spark.conf.get(
-            "spark.local.dir", "/tmp")).split(",")[0]
-        # Inter-chunk spill goes to PARQUET, not in-memory checkpoints:
-        # holding 40 checkpointed chunk frames pins block-manager storage
-        # that the ContextCleaner then cannot reclaim, and the walk's own
-        # materialized iterations accumulated ~1.5 GB/chunk two full
-        # sf100 attempts in a row (both died on disk in the LAST chunks).
-        # With the results durable on disk, EVERY persistent RDD that
-        # appeared during the chunk is unpersisted immediately and the
-        # loop paces on free-disk pressure so the async cleaner can drain
-        # shuffle files between chunks. The final frame is a plain scan
-        # of the spill dir (lives for the session; ~16 bytes/option).
-        base = f"{scratch_dir}/sg_binom_{_uuid.uuid4().hex[:12]}"
-        _register_spill_dir(base)
-        # Pace on the NEXT chunk's scratch need, not the budget knob: with
-        # auto-sizing they coincide (chunk_rows ~ budget/per_opt), but a
-        # caller forcing small chunks (tests, tight boxes) must not stall
-        # 120 s/chunk behind a 2x-budget floor the box can never satisfy
-        # (found live: 20 GiB free vs a 32 GiB default floor).
-        per_opt = (int(n_steps) + 1) ** 2 * 8
-        # 1.5x the chunk's own scratch: enough headroom for the walk,
-        # low enough that a box whose free space hovers near the budget
-        # can actually satisfy it once the cleaner drains the previous
-        # chunk (2x the budget was unsatisfiable on a 20 GiB-free box)
-        floor = (3 * min(int(scratch_budget_bytes),
-                         int(chunk_rows) * per_opt)) // 2
-        k = -(-int(n_opts) // int(chunk_rows))
-
-        def _persistent_ids():
-            # getPersistentRDDs() hands back an IMMUTABLE snapshot
-            # (sc.persistentRdds.toMap re-copied at the Java layer), so
-            # it must be re-fetched around every chunk — a single
-            # pre-loop snapshot would make the before/after diff always
-            # empty and the unpersist sweep a no-op (r8 ADVICE).
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            out = {}
-            it = jmap.entrySet().iterator()
-            while it.hasNext():
-                e = it.next()
-                out[e.getKey()] = e.getValue()
-            return out
-
-        for i in range(k):
-            before = set(_persistent_ids())
-            sub = opts.filter(
-                F.pmod(F.xxhash64(F.col("id")), F.lit(k)) == i)
-            part = binomial_american(
-                spark, sub, n_steps=n_steps, call=call,
-                view_name=f"{view_name}_c{i}", n_opts=n_opts,
-                chunk_rows=0,  # 0 = chunking OFF (None would re-derive
-                # the auto chunk size and recurse forever)
-            )
-            part.write.mode("overwrite").parquet(f"{base}/c{i}")
-            after = _persistent_ids()
-            for rid, jrdd in after.items():
-                if rid not in before:
-                    jrdd.unpersist()
-            _release_iteration_scratch(sub)  # GC nudge frees the walk
-            waited = 0.0
-            while (_shutil.disk_usage(scratch_dir).free < floor
-                   and waited < 120.0):
-                _time.sleep(3.0)
-                waited += 3.0
-                _release_iteration_scratch(sub)
-        return spark.read.parquet(*[f"{base}/c{i}" for i in range(k)])
-    opts.createOrReplaceTempView(view_name)
-    return _run_recursive_sql(
-        spark,
-        binomial_american_sql(
-            f"SELECT id, s, k, t_y, r, sigma FROM {view_name}",
-            n_steps=n_steps, call=call, dialect="spark",
-        ),
-        need,
+    One lazy plan: the per-option constants are one projection, and
+    Spark's ``aggregate`` folds the node-value array back over
+    ``sequence(n_steps, 1, -1)`` inside each row, so one array per row is
+    in flight, building starts no job and touches no session state.
+    Between the two, the rows are spread round-robin over the default
+    parallelism, because the fold runs on the partitions it is given
+    (q120 reads ``part`` as one partition)."""
+    n = int(n_steps)
+    if n < 1:
+        raise ValueError(f"n_steps must be >= 1, got {n_steps}")
+    consts, leaf, node = _crr_sql(n, call, lambda j: f"vals[{j}]")
+    fold = (
+        f"round(aggregate(sequence({n}, 1, -1),"
+        f" transform(sequence(0, {n}), i -> {leaf}),"
+        f" (vals, step) -> transform(sequence(0, step - 1), i -> {node}))[0],"
+        f" 4)"
+    )
+    return (
+        opts.select("id", "s", "k",
+                    *[F.expr(v).alias(c) for c, v in consts.items()])
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("id", F.expr(fold).alias("price"))
     )
 
 

@@ -5030,10 +5030,10 @@ _IV_OPTS_SQL = (
 def q108(spark, sf_dir):
     """Implied-vol surface recovery (functions/derivatives.py
     implied_vol): options priced at a known per-row sigma
-    (0.15..0.44), then inverted by a recursive-CTE bisection that runs
-    fully JVM-side in Spark 4 and verbatim in DuckDB. 48 halvings pin
-    sigma to ~1.4e-14 — bisection re-brackets each engine's own root, so
-    libm ulp differences cannot move the 6-decimal output."""
+    (0.15..0.44), then inverted by bisection — a per-row ``aggregate``
+    fold in Spark, a recursive CTE in DuckDB. 48 halvings pin sigma to
+    ~1.4e-14 — bisection re-brackets each engine's own root, so libm ulp
+    differences cannot move the 6-decimal output."""
     t = load_tables(spark, sf_dir, ["part"])["part"]
     sigma = 0.15 + (F.col("p_partkey") % 30).cast("double") / 100.0
     opts = t.select(
@@ -5510,16 +5510,14 @@ _BINOM_OPTS_SQL = (
 
 @_register(
     "q120_binomial_american",
-    deriv.binomial_american_sql(_BINOM_OPTS_SQL, n_steps=64,
-                                call=False, dialect="duckdb"),
+    deriv.binomial_american_sql(_BINOM_OPTS_SQL, n_steps=64, call=False),
 )
 def q120(spark, sf_dir):
     """CRR binomial American put pricing (functions/derivatives.py
-    binomial_american): 64-step backward induction with early exercise,
-    run as a recursive CTE carrying the node-value ARRAY — fully
-    JVM-side iteration (the array-syntax twin of q108's scalar
-    bisection; Spark and DuckDB texts differ only in array dialect).
-    Prices rounded to 4 decimals (tree values are ~1e-13 relative libm
+    binomial_american): 64-step backward induction with early exercise
+    over the node-value ARRAY — a per-row ``aggregate`` fold in Spark, a
+    recursive CTE in DuckDB, both from the same node texts. Prices
+    rounded to 4 decimals (tree values are ~1e-13 relative libm
     noise)."""
     t = load_tables(spark, sf_dir, ["part"])["part"]
     sigma = 0.15 + (F.col("p_partkey") % 30).cast("double") / 100.0

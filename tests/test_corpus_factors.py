@@ -582,6 +582,10 @@ def test_implied_vol_round_trip(spark):
     ).collect()}
     for i in range(5):
         assert out[i] == pytest.approx(0.12 + 0.07 * i, abs=2e-6)
+    # Spark's sequence(1, 0) is [1, 0]: an unchecked fold would run 2 steps
+    for iters in (0, -3):
+        with pytest.raises(ValueError, match="iters"):
+            deriv.implied_vol(spark, priced, iters=iters)
 
 
 def test_implied_vol_put_parity(spark):
@@ -894,6 +898,10 @@ def test_binomial_american_put_bounds(spark):
                       F.col("sigma"), F.col("r")).alias("c")
     ).collect()[0].c
     assert call == pytest.approx(bs_c, rel=0.01)
+    # a zero-step tree would divide by zero only when the plan executes
+    for n_steps in (0, -1):
+        with pytest.raises(ValueError, match="n_steps"):
+            deriv.binomial_american(spark, opts, n_steps=n_steps)
 
 
 # ------------------------------------------------- component risk / VaR

@@ -106,44 +106,35 @@ def test_tickgen_instants_are_session_tz_independent(spark):
     assert utc[0] == 1_700_000_000  # the documented start_ms instant
 
 
-# ----------------------------------------- binomial conf hygiene (r4 ADVICE)
+# ------------------------------------------- option pricers build lazily
 
-def test_binomial_american_restores_cte_limit(spark):
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (
-        derivatives as deriv,
+def test_pricers_build_without_jobs_or_session_state(spark, sf_dir):
+    """Building q108 (implied vol) and q120 (binomial American) starts no
+    Spark job, leaves every session conf as it was and registers no temp
+    view: each pricer is one lazy plan over the caller's frame."""
+    from build_a_market_data_etl_strategy_backtesting_engine_spark import (
+        queries as q,
+    )
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.session import (
+        load_tables,
     )
 
-    key = "spark.sql.cteRecursionRowLimit"
-    before = spark.conf.get(key, "1000000")
-    opts = spark.createDataFrame(
-        [(i, 100.0, 105.0, 0.5, 0.02, 0.2) for i in range(40)],
-        ["id", "s", "k", "t_y", "r", "sigma"])
-    # n_steps=64 with 40 options needs 40*65*2 = 5200 rows < 1M: no raise
-    out = deriv.binomial_american(spark, opts, n_steps=64, n_opts=40)
-    assert out.count() == 40
-    assert spark.conf.get(key, "1000000") == before
-    # force a raise: tiny limit, then verify restore + correct result
-    spark.conf.set(key, "100")
+    load_tables(spark, sf_dir, ["part"])  # schema inference runs a job
+    conf = dict(spark.conf.getAll)
+    views = {t.name for t in spark.catalog.listTables()}
+    sc = spark.sparkContext
+    group = "pricers-build"
+    sc.setJobGroup(group, "building must not run jobs")
     try:
-        out = deriv.binomial_american(spark, opts, n_steps=64, n_opts=40)
-        assert out.count() == 40
-        assert spark.conf.get(key) == "100"
+        built = [q.spark_queries()[name](spark, sf_dir) for name in
+                 ("q108_implied_vol", "q120_binomial_american")]
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
-        spark.conf.set(key, before)
-
-
-def test_binomial_american_n_opts_hint_matches_counted(spark):
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (
-        derivatives as deriv,
-    )
-
-    opts = spark.createDataFrame(
-        [(1, 100.0, 100.0, 1.0, 0.03, 0.25)],
-        ["id", "s", "k", "t_y", "r", "sigma"])
-    hinted = deriv.binomial_american(spark, opts, n_steps=32,
-                                     n_opts=1).collect()
-    counted = deriv.binomial_american(spark, opts, n_steps=32).collect()
-    assert hinted == counted
+        sc.setJobGroup("other", "")
+    assert jobs == []
+    assert dict(spark.conf.getAll) == conf
+    assert {t.name for t in spark.catalog.listTables()} == views
+    assert [df.columns for df in built] == [["id", "iv"], ["id", "price"]]
 
 
 # ------------------------------------ q112 exact-sigmoid derivation (ADVICE)

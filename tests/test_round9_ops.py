@@ -1,111 +1,15 @@
 """Round-9 hardening tests (r8 VERDICT ranked tasks + ADVICE items):
-chunked binomial pricer == monolithic (the zero-coverage spill path),
-per-chunk persistent-RDD sweep actually unpersists, spill-dir cleanup
-registration, skew node-name matching (no substring false positives),
-signals temp-name collision safety, duck_digest_chunked unit pin."""
-
-import os
+skew node-name matching (no substring false positives), signals
+temp-name collision safety, duck_digest_chunked unit pin."""
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (
-    derivatives as deriv,
-)
 from build_a_market_data_etl_strategy_backtesting_engine_spark.operators import (
     signals,
     skew,
 )
-
-
-def _mk_opts(spark, n=40, steps_seed=0):
-    rows = [
-        (
-            i,
-            80.0 + i,
-            100.0,
-            0.25 + (i % 4) * 0.25,
-            0.01 + (i % 3) * 0.02,
-            0.15 + (i % 5) * 0.05,
-        )
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, ["id", "s", "k", "t_y", "r", "sigma"])
-
-
-# ------------------------------- chunked binomial pricer (r8 VERDICT #1)
-
-
-def test_binomial_chunked_equals_monolithic_put(spark):
-    """chunk_rows=7 over 40 options forces 6 hash-class chunks through the
-    parquet-spill path (functions/derivatives.py) — previously ZERO test
-    coverage since auto-chunking only fires above 50k options. Each chunk
-    runs the identical recursive SQL on a disjoint subset, so equality is
-    EXACT, not approximate."""
-    opts = _mk_opts(spark)
-    mono = {r.id: r.price for r in deriv.binomial_american(
-        spark, opts, n_steps=32).collect()}
-    out = deriv.binomial_american(spark, opts, n_steps=32, chunk_rows=7)
-    chunked = {r.id: r.price for r in out.collect()}
-    assert chunked == mono
-    assert len(chunked) == 40
-
-
-def test_binomial_chunked_equals_monolithic_call(spark):
-    opts = _mk_opts(spark, n=23)
-    mono = {r.id: r.price for r in deriv.binomial_american(
-        spark, opts, n_steps=16, call=True).collect()}
-    chunked = {r.id: r.price for r in deriv.binomial_american(
-        spark, opts, n_steps=16, call=True, chunk_rows=5).collect()}
-    assert chunked == mono
-
-
-def test_binomial_chunked_unpersists_checkpoints(spark):
-    """The per-chunk sweep must re-fetch getPersistentRDDs() around every
-    chunk (r8 ADVICE: the Java map is an immutable snapshot — a single
-    pre-loop fetch makes the before/after diff permanently empty). Force
-    the localCheckpoint branch with a tiny cteRecursionRowLimit and
-    assert the persistent-RDD census returns to its pre-call value."""
-    def census():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        ids, it = set(), jmap.entrySet().iterator()
-        while it.hasNext():
-            ids.add(it.next().getKey())
-        return ids
-
-    key = "spark.sql.cteRecursionRowLimit"
-    before_limit = spark.conf.get(key, "1000000")
-    spark.conf.set(key, "100")  # every chunk's need > 100 -> checkpoint
-    try:
-        base = census()
-        out = deriv.binomial_american(
-            spark, _mk_opts(spark, n=30), n_steps=16, chunk_rows=7)
-        assert out.count() == 30
-        leaked = census() - base
-        assert leaked == set(), f"chunk checkpoints leaked: {leaked}"
-    finally:
-        spark.conf.set(key, before_limit)
-
-
-def test_binomial_chunked_spill_dir_registered(spark):
-    """ADVICE low: the spill dir must be registered for interpreter-exit
-    cleanup (it cannot be removed earlier — the returned frame lazily
-    scans it)."""
-    n0 = len(deriv._SPILL_DIRS)
-    out = deriv.binomial_american(
-        spark, _mk_opts(spark, n=11), n_steps=8, chunk_rows=4)
-    assert out.count() == 11
-    assert len(deriv._SPILL_DIRS) == n0 + 1
-    assert os.path.isdir(deriv._SPILL_DIRS[-1])
-
-
-def test_binomial_chunked_handles_empty_hash_class(spark):
-    """k classes over few ids can leave a class empty; the union scan
-    must still return every option exactly once."""
-    opts = _mk_opts(spark, n=3)
-    out = deriv.binomial_american(spark, opts, n_steps=8, chunk_rows=1)
-    assert sorted(r.id for r in out.collect()) == [0, 1, 2]
 
 
 # --------------------------------- skew node matching (r8 ADVICE low)

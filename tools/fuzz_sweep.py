@@ -1317,22 +1317,18 @@ def t_chunk_budget_sql(p):
     FROM r"""
 
 
-def t_binom_chunked_spark(spark, sf_dir, p):
-    """Chunked binomial pricer vs the DuckDB recursive-CTE oracle: the
-    chunk size is a fuzz axis, so the hash-class split, parquet spill
-    and unpersist sweep are all inside the compared computation."""
+def _opts(spark, sf_dir, p):
+    """(id, s, k, t_y, r, sigma) over the first ``n`` parts, the q108/q120
+    option shape with the strike as a fuzz axis."""
     from pyspark.sql import functions as F
 
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (  # noqa: E501
-        derivatives as deriv,
-    )
     from build_a_market_data_etl_strategy_backtesting_engine_spark.session import (  # noqa: E501
         load_tables,
     )
 
     t = load_tables(spark, sf_dir, ["part"])["part"].filter(
         F.col("p_partkey") <= p["n"])
-    opts = t.select(
+    return t.select(
         F.col("p_partkey").alias("id"),
         F.col("p_retailprice").alias("s"),
         (F.col("p_retailprice") * p["strike"]).alias("k"),
@@ -1341,23 +1337,66 @@ def t_binom_chunked_spark(spark, sf_dir, p):
         (0.15 + (F.col("p_partkey") % 30).cast("double") / 100.0)
         .alias("sigma"),
     )
-    return deriv.binomial_american(
-        spark, opts, n_steps=p["steps"], call=p["call"],
-        chunk_rows=p["chunk_rows"])
 
 
-def t_binom_chunked_sql(p):
-    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (  # noqa: E501
-        derivatives as deriv,
-    )
-
-    opts_sql = f"""SELECT p_partkey AS id, p_retailprice AS s,
+def _opts_sql(p):
+    return f"""SELECT p_partkey AS id, p_retailprice AS s,
            p_retailprice * {p["strike"]} AS k, 0.5e0 AS t_y,
            2.0e-2 AS r,
            1.5e-1 + CAST(p_partkey % 30 AS DOUBLE) / 100.0e0 AS sigma
     FROM part WHERE p_partkey <= {p["n"]}"""
+
+
+def t_binom_spark(spark, sf_dir, p):
+    """Binomial American fold vs the DuckDB recursive-CTE oracle; the
+    step count runs from the one-step tree to q120's 64."""
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (  # noqa: E501
+        derivatives as deriv,
+    )
+
+    return deriv.binomial_american(
+        spark, _opts(spark, sf_dir, p), n_steps=p["steps"], call=p["call"])
+
+
+def t_binom_sql(p):
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (  # noqa: E501
+        derivatives as deriv,
+    )
+
     return deriv.binomial_american_sql(
-        opts_sql, n_steps=p["steps"], call=p["call"], dialect="duckdb")
+        _opts_sql(p), n_steps=p["steps"], call=p["call"])
+
+
+def t_implied_vol_spark(spark, sf_dir, p):
+    """Implied-vol fold vs the DuckDB recursive-CTE bisection, on options
+    priced at their known per-row sigma (the q108 shape)."""
+    from pyspark.sql import functions as F
+
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (  # noqa: E501
+        derivatives as deriv,
+    )
+
+    px = deriv.bs_call if p["call"] else deriv.bs_put
+    opts = _opts(spark, sf_dir, p)
+    priced = opts.select(
+        "id", "s", "k", "t_y", "r",
+        px(*[F.col(c) for c in ("s", "k", "t_y", "sigma", "r")])
+        .alias("price"))
+    return deriv.implied_vol(spark, priced, iters=p["iters"],
+                             call=p["call"])
+
+
+def t_implied_vol_sql(p):
+    from build_a_market_data_etl_strategy_backtesting_engine_spark.functions import (  # noqa: E501
+        derivatives as deriv,
+    )
+
+    px = deriv.bs_call_sql if p["call"] else deriv.bs_put_sql
+    opts_sql = (f"SELECT id, s, k, t_y, r, "
+                f"{px('s', 'k', 't_y', 'sigma', 'r')} AS price "
+                f"FROM ({_opts_sql(p)})")
+    return deriv.implied_vol_bisect_sql(
+        opts_sql, iters=p["iters"], call=p["call"])
 
 
 def t_cc_star_spark(spark, sf_dir, p):
@@ -1491,13 +1530,19 @@ TARGETS.update({
                                               1e6])},
         "spark": t_asof_auto_spark, "sql": t_asof_auto_sql,
     },
-    "binom_chunked": {
+    "binom": {
         "sample": lambda r: {"n": r.randint(25, 70),
-                             "steps": r.choice([8, 12, 16, 24]),
-                             "chunk_rows": r.randint(3, 13),
+                             "steps": r.choice([1, 8, 12, 16, 24, 64]),
                              "strike": r.choice([0.9, 1.0, 1.05, 1.2]),
                              "call": r.random() < 0.5},
-        "spark": t_binom_chunked_spark, "sql": t_binom_chunked_sql,
+        "spark": t_binom_spark, "sql": t_binom_sql,
+    },
+    "implied_vol": {
+        "sample": lambda r: {"n": r.randint(25, 70),
+                             "iters": r.choice([1, 8, 24, 48]),
+                             "strike": r.choice([0.9, 1.0, 1.05, 1.2]),
+                             "call": r.random() < 0.5},
+        "spark": t_implied_vol_spark, "sql": t_implied_vol_sql,
     },
     "cc_star": {
         "sample": lambda r: {"gap": r.choice([1, 2, 3, 7, 25, 80])},
